@@ -1,0 +1,38 @@
+package perfbench
+
+/** Minimal JSON writer for the run record: maps, sequences, strings,
+  * numbers, booleans and None/null. Non-finite doubles become null.
+  */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case xs: Array[_] => apply(xs.toSeq)
+    case x => quote(x.toString)
+  }
+
+  private def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case '\n' => sb ++= "\\n"
+      case '\r' => sb ++= "\\r"
+      case '\t' => sb ++= "\\t"
+      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    sb += '"'
+    sb.result()
+  }
+}
