@@ -68,11 +68,15 @@ object Tables {
     // pass narrow scan+project shapes, whose RDD partition count IS
     // the scan's split count, so the file set determines it; the
     // decision is perf-only either way (fanned or not, results are
-    // identical).
-    val key = System.identityHashCode(df.sparkSession) +
-      "|" + df.inputFiles.sorted.mkString(",")
-    val splits = fanSplitCache.computeIfAbsent(key,
-      _ => df.rdd.getNumPartitions)
+    // identical). A frame with no input files (in-memory, checkpointed)
+    // has no file set to key on, so it is probed every time.
+    val files = df.inputFiles
+    val splits =
+      if (files.isEmpty) df.rdd.getNumPartitions
+      else fanSplitCache.computeIfAbsent(
+        s"${System.identityHashCode(df.sparkSession)}|" +
+          files.sorted.mkString(","),
+        _ => df.rdd.getNumPartitions)
     if (splits < p) df.repartition(p) else df
   }
   private val fanSplitCache =

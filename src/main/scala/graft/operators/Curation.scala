@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Par, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -244,8 +244,13 @@ object Curation {
       val pairs1 = Dedup.neardupLookup(spark, nd, added1, minJ)
       // pairs1 is already an eager localCheckpoint (neardupLookup
       // returns one), so this tiny projection needs no snapshot of
-      // its own — both anti-joins below re-read that materialization
-      val rejected1 = funnelReject1(pairs1)
+      // its own — both anti-joins below re-read that materialization.
+      // Round-1 gate rule: of each flagged pair, reject the round-1
+      // member — the delta ids are ≡ 0 mod 30 and appear on either
+      // side of the canonical (a < b) pair
+      val rejected1 = pairs1.select(
+        when(pmod(col("b"), lit(30)) === 0, col("b"))
+          .otherwise(col("a")).as("doc_id")).distinct()
       // survivors enter the near-dup index — round 2's reference set
       Dedup.neardupCheckIn(spark, nd,
         added1.join(rejected1, Seq("doc_id"), "left_anti"), minJ)
@@ -256,7 +261,13 @@ object Curation {
         newD.join(rejected1, Seq("doc_id"), "left_anti"), oldD)
       (nd, bm)
     })
-    val added2 = funnelRound2(v2, copyOff = 1000000L, novelOff = 2000000L)
+    // round-2 delta: exact copies of v2 docs ≡ 0 mod 15 (re-tagged)
+    // and token-reversed "novel" texts of docs ≡ 3 mod 40
+    val added2 = v2.filter(pmod(col("doc_id"), lit(15)) === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .unionByName(v2.filter(pmod(col("doc_id"), lit(40)) === 3)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat_ws(" ", reverse(TextFns.wsTokens(col("text")))).as("text")))
     val pairs2 = Dedup.neardupLookup(spark, ndIdx, added2, minJ)
     // every pair's b is the round-2 member (their ids exceed all
     // corpus ids), covering index-vs-added and added-vs-added
@@ -272,91 +283,6 @@ object Curation {
 
   private val ingest2Cache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Round-1 gate rule of the two-round funnel, shared by
-    * [[ingestPipeline2]] and [[ingestProbe]] (the probe must measure
-    * the registry row's exact logic): of each flagged pair, reject
-    * the round-1 member — the delta ids are ≡ 0 mod 30 and appear on
-    * either side of the canonical (a < b) pair.
-    */
-  private def funnelReject1(pairs1: DataFrame): DataFrame =
-    pairs1.select(
-      when(pmod(col("b"), lit(30)) === 0, col("b"))
-        .otherwise(col("a")).as("doc_id")).distinct()
-
-  /** Round-2 delta of the two-round funnel (shared for the same
-    * reason): exact copies of v2 docs ≡ 0 mod 15 (re-tagged) and
-    * token-reversed "novel" texts of docs ≡ 3 mod 40.
-    */
-  private def funnelRound2(v2: DataFrame, copyOff: Long, novelOff: Long,
-                           cap: Long = Long.MaxValue): DataFrame = {
-    val capped = v2.filter(col("doc_id") < cap)
-    val copies = capped.filter(pmod(col("doc_id"), lit(15)) === 0)
-      .select((col("doc_id") + copyOff).as("doc_id"), col("text"))
-    val novel = capped.filter(pmod(col("doc_id"), lit(40)) === 3)
-      .select((col("doc_id") + novelOff).as("doc_id"),
-        concat_ws(" ",
-          reverse(graft.functions.TextFns.wsTokens(col("text")))).as("text"))
-    copies.unionByName(novel)
-  }
-
-  /** Fixed-delta probe of the two-round ingest funnel (r15 verdict
-    * missing #4, the CheckinProbe pattern applied to
-    * [[ingestPipeline2]]): build the v1 indexes over THIS corpus
-    * (timed separately — that cost is corpus-sized by definition),
-    * then run both funnel rounds with every delta capped to
-    * pre-retag doc_id < `cap`. Passing the 1× corpus's doc_id domain
-    * on a ScaleUp-derived N× dir applies the SAME-sized delta to an
-    * N×-grown estate — flat round wall-clock across N is the funnel's
-    * own scale proof (each stage was already measured flat alone).
-    * Timings to stdout; a measurement harness, not a registry row.
-    */
-  def ingestProbe(spark: SparkSession, dir: String, cap: Long,
-                  terms: Seq[String] = Seq("data", "model", "system"),
-                  k: Int = 20, minJ: Double = 0.2): Unit = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"INGESTPROBE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    val (v1, v2) = TextAnalysis.snapshotFixture(spark, dir)
-    val nd = s"/tmp/graft_ingestprobe_nd_$tag"
-    val bm = s"/tmp/graft_ingestprobe_bm_$tag"
-    timed("build nd(v1)")(Dedup.neardupWriteIndex(spark, v1, nd))
-    timed("build bm25(v1)")(TextAnalysis.bm25WriteIndexDocs(spark, v1, bm))
-    val (newD, oldD) = TextAnalysis.snapshotDelta(v1, v2)
-    val newDc = newD.filter(col("doc_id") < cap).localCheckpoint()
-    val oldDc = oldD.filter(col("doc_id") < cap).localCheckpoint()
-    val added1 = newDc.filter(pmod(col("doc_id"), lit(30)) === 0)
-    println(s"INGESTPROBE delta sizes: new=${newDc.count()} " +
-      s"old=${oldDc.count()} added1=${added1.count()} (cap=$cap)")
-    val tAll = System.nanoTime()
-    val pairs1 = timed("round1 nd lookup")(
-      Dedup.neardupLookup(spark, nd, added1, minJ))
-    val rejected1 = funnelReject1(pairs1)
-    timed("round1 nd checkin")(Dedup.neardupCheckIn(spark, nd,
-      added1.join(rejected1, Seq("doc_id"), "left_anti"), minJ).count())
-    timed("round1 bm refresh")(TextAnalysis.bm25RefreshIndex(spark, bm,
-      newDc.join(rejected1, Seq("doc_id"), "left_anti"), oldDc))
-    // the SAME round-2 deltas the registry row builds (shared
-    // builders, so the probe cannot desynchronize from the funnel it
-    // measures); retag offsets differ only to keep the probe's ids
-    // disjoint from any concurrently-built pipeline fixtures
-    val added2 = funnelRound2(v2, copyOff = 10000000L,
-      novelOff = 20000000L, cap = cap).localCheckpoint()
-    val pairs2 = timed("round2 nd lookup")(
-      Dedup.neardupLookup(spark, nd, added2, minJ))
-    val rejected2 = pairs2.select(col("b").as("doc_id")).distinct()
-    val admitted2 = added2.join(rejected2, Seq("doc_id"), "left_anti")
-    timed("round2 bm refresh")(TextAnalysis.bm25RefreshIndex(spark, bm,
-      admitted2, v2.limit(0)))
-    val rows = timed("serve bm25 topk")(
-      TextAnalysis.bm25QueryIndex(spark, bm, terms, k).collect().length)
-    println(f"INGESTPROBE funnel total: ${(System.nanoTime() - tAll) / 1e9}%.2f s" +
-      s" served=$rows")
-  }
 
   /** Fold-trigger CONTRACT across all three index families (r13
     * stretch item 8): the lifecycles can fold (bm25Compact /
@@ -513,23 +439,11 @@ object Curation {
         (servedRetrained == servedPristine))
       rows.toSeq
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sections =
+    Par.all(
       (if (docsEmpty) Seq.empty
-       else Seq(Future(bm25Section()), Future(ndSection()))) ++
-      (if (vecsEmpty) Seq.empty else Seq(Future(ivfSection())))
-    // await ALL sections before any rethrow — failing fast would
-    // leave sibling sections still mutating their fixture copies;
-    // sibling failures ride along as suppressed exceptions
-    val tried = sections.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    val rows = tried.flatMap(_.get)
-    rows.toDF("metric", "ok").orderBy("metric")
+       else Seq(() => bm25Section(), () => ndSection())) ++
+      (if (vecsEmpty) Seq.empty else Seq(() => ivfSection())))
+      .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
   /** Index-estate health card — the observability twin of
@@ -686,19 +600,11 @@ object Curation {
       rows += ("est_ivf_fold_matches_fresh_build" -> (served == ref))
       rows.toSeq
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sections =
+    Par.all(
       (if (docsEmpty) Seq.empty
-       else Seq(Future(bmSection()), Future(ndSection()))) ++
-      (if (vecsEmpty) Seq.empty else Seq(Future(ivfSection())))
-    val tried = sections.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    tried.flatMap(_.get).toDF("metric", "ok").orderBy("metric")
+       else Seq(() => bmSection(), () => ndSection())) ++
+      (if (vecsEmpty) Seq.empty else Seq(() => ivfSection())))
+      .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
   /** The mutated estate TEMPLATES shared by [[maintainEstate]] and
@@ -949,19 +855,11 @@ object Curation {
       rows += ("rd_ivf_mutable_after_repair" -> (serve() == s1))
       rows.toSeq
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sections =
+    Par.all(
       (if (docsEmpty) Seq.empty
-       else Seq(Future(bmSection()), Future(ndSection()))) ++
-      (if (vecsEmpty) Seq.empty else Seq(Future(ivfSection())))
-    val tried = sections.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    tried.flatMap(_.get).toDF("metric", "ok").orderBy("metric")
+       else Seq(() => bmSection(), () => ndSection())) ++
+      (if (vecsEmpty) Seq.empty else Seq(() => ivfSection())))
+      .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
   /** MID-ESTATE CRASH DRILL (r17 verdict #4): [[maintainEstate]]
@@ -1025,9 +923,6 @@ object Curation {
         .map { case (k, v) => s"$k=$v" }.mkString("\n")).toSet
       onDisk -- refs
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // ---- direction 1 (the original): nd fold crashes, IVF folds ----
     def ndCrashSide(): Seq[(String, Boolean)] = {
       val nd = s"/tmp/graft_ecd_nd_${ingestToken}_$tag"
@@ -1043,11 +938,9 @@ object Curation {
       // PASS 1: the due folds run concurrently; the nd fold is armed
       // to die after its epoch rewrite, before its pointer swing
       IndexPolicy.armCrash(nd, "after-epoch")
-      val fNd = Future(scala.util.Try(Dedup.neardupCompact(spark, nd)))
-      val fIv = Future(scala.util.Try(Similarity.ivfWriteIndexVecs(
-        spark, live, iv)))
-      val (rNd, rIv) = (Await.result(fNd, Duration.Inf),
-        Await.result(fIv, Duration.Inf))
+      val Seq(rNd, rIv) = Par.all(Seq(
+        () => scala.util.Try(Dedup.neardupCompact(spark, nd)),
+        () => scala.util.Try(Similarity.ivfWriteIndexVecs(spark, live, iv))))
       rows += ("ecd_pass1_nd_crashed" -> (rNd match {
         case scala.util.Failure(_: IndexPolicy.InjectedCrash) => true
         case _ => false
@@ -1094,11 +987,9 @@ object Curation {
         (Dedup.neardupHealth(spark, nd).toMap.apply("nd_fold_due") == 1L &&
           Similarity.ivfHealth(spark, iv).toMap.apply("ivf_fold_due") == 1L))
       IndexPolicy.armCrash(iv, "after-epoch")
-      val fNd = Future(scala.util.Try(Dedup.neardupCompact(spark, nd)))
-      val fIv = Future(scala.util.Try(Similarity.ivfWriteIndexVecs(
-        spark, live, iv)))
-      val (rNd, rIv) = (Await.result(fNd, Duration.Inf),
-        Await.result(fIv, Duration.Inf))
+      val Seq(rNd, rIv) = Par.all(Seq(
+        () => scala.util.Try(Dedup.neardupCompact(spark, nd)),
+        () => scala.util.Try(Similarity.ivfWriteIndexVecs(spark, live, iv))))
       rows += ("ecd2_pass1_ivf_crashed" -> (rIv match {
         case scala.util.Failure(_: IndexPolicy.InjectedCrash) => true
         case _ => false
@@ -1127,13 +1018,8 @@ object Curation {
           lookup() == l0))
       rows.toSeq
     }
-    val sides = Seq(Future(ndCrashSide()), Future(ivCrashSide()))
-    val tried = sides.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    tried.flatMap(_.get).toDF("metric", "ok").orderBy("metric")
+    Par.all(Seq(() => ndCrashSide(), () => ivCrashSide()))
+      .flatten.toDF("metric", "ok").orderBy("metric")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
@@ -1260,12 +1146,8 @@ object Curation {
     // independent read-only pipelines over immutable state — run them
     // as concurrent jobs (r21, guide §2.6 "overlap independent jobs");
     // each family serve's tail back-fills the others' idle cores.
-    // Await ALL before any rethrow (the admitSigs discipline).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // bounded collects: ≤ nShards shard rows + 3 gen rows
-    val fShards: Future[Seq[(String, Boolean)]] = Future {
+    def shards(): Seq[(String, Boolean)] = {
       if (docsEmpty) Seq.empty
       else {
         val fromArt = man.filter(col("kind") === "shard")
@@ -1278,13 +1160,13 @@ object Curation {
           s"tr_shard_$k" -> (fromArt.get(k) == rec.get(k)))
       }
     }
-    val fBm: Future[Seq[(String, Boolean)]] = Future {
+    def bm(): Seq[(String, Boolean)] = {
       if (docsEmpty) Seq.empty
       else Seq("tr_bm25_reproduced" ->
         (TextAnalysis.bm25QueryIndexAsOf(spark, est.bm, gens("bm25").toInt,
           manifestTerms, 20).collect().toSeq == est.bmServe))
     }
-    val fNd: Future[Seq[(String, Boolean)]] = Future {
+    def nd(): Seq[(String, Boolean)] = {
       if (docsEmpty) Seq.empty
       else {
         val probe = manifestProbe(docs).localCheckpoint(eager = false)
@@ -1293,20 +1175,14 @@ object Curation {
             .collect().toSeq == est.ndPairs))
       }
     }
-    val fIv: Future[Seq[(String, Boolean)]] = Future {
+    def iv(): Seq[(String, Boolean)] = {
       if (vecsEmpty) Seq.empty
       else Seq("tr_ivf_reproduced" ->
         (Similarity.ivfQueryIndexAsOf(spark, dir, est.iv, gens("ivf"))
           .collect().toSeq == est.ivServe))
     }
-    val tried = Seq(fShards, fBm, fNd, fIv)
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    (tried(0).get ++ tried(1).get ++ tried(2).get ++ tried(3).get)
-      .toDF("metric", "ok").orderBy("metric")
+    Par.all(Seq(() => shards(), () => bm(), () => nd(), () => iv()))
+      .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
   private val trainReadArtifactCache =
@@ -1398,19 +1274,11 @@ object Curation {
       Seq("mr_ivf_live_differs" -> (live != est.ivServe),
         "mr_ivf_asof_matches" -> (asof == est.ivServe))
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sections =
+    Par.all(
       (if (docsEmpty) Seq.empty
-       else Seq(Future(bmSection()), Future(ndSection()))) ++
-      (if (vecsEmpty) Seq.empty else Seq(Future(ivfSection())))
-    val tried = sections.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
-    tried.flatMap(_.get).toDF("metric", "ok").orderBy("metric")
+       else Seq(() => bmSection(), () => ndSection())) ++
+      (if (vecsEmpty) Seq.empty else Seq(() => ivfSection())))
+      .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
   /** The SNAPSHOT-pinned estate (r18 verdict missing #4): the fixture
@@ -1479,13 +1347,10 @@ object Curation {
       val probe = manifestProbe(docs).localCheckpoint()
       val live = vecs.filter(pmod(col("vec_id"), lit(5)) =!= 0)
         .select(col("vec_id"), col("embedding"))
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       // ---- bm25: E(append: stats epoch swaps at next append) →
       //      S(append) → capture → drift append → fold → expire E →
       //      sweep append ----
-      val fBm = Future {
+      def bmSide() = {
         TextAnalysis.copyIndex(spark, bmT, bm)
         TextAnalysis.bm25AppendSegment(spark, bm,
           nvSlice(97, 3, 5000000L, "qqm"), none)
@@ -1508,7 +1373,7 @@ object Curation {
       // ---- nd: E(remove) → fold(compact: data epoch swaps) →
       //      S(check-in) → capture → drift remove → second fold →
       //      expire E → sweep remove ----
-      val fNd = Future {
+      def ndSide() = {
         TextAnalysis.copyIndex(spark, ndT, nd)
         Dedup.neardupRemove(spark, nd,
           docs.filter(pmod(col("doc_id"), lit(7)) === 6)
@@ -1536,7 +1401,7 @@ object Curation {
       // ---- IVF: E(append) → fold(retrain: data epoch swaps) →
       //      S(append) → capture → drift append (exact query dupes) →
       //      second retrain → expire E → sweep append ----
-      val fIv = Future {
+      def ivSide() = {
         TextAnalysis.copyIndex(spark, ivT, iv)
         val app0 = vSlice(9, 7, 3000000L)
         Similarity.ivfAppendVectors(spark, iv, app0)
@@ -1559,12 +1424,10 @@ object Curation {
         Similarity.ivfAppendVectors(spark, iv, vSlice(17, 8, 3200000L))
         (decoy, decoyRefs, pin, serve)
       }
-      val (bmDecoy, bmDecoyRefs, bmPin, bmServe) =
-        Await.result(fBm, Duration.Inf)
-      val (ndDecoy, ndDecoyRefs, ndPin, ndPairs) =
-        Await.result(fNd, Duration.Inf)
-      val (ivDecoy, ivDecoyRefs, ivPin, ivServe) =
-        Await.result(fIv, Duration.Inf)
+      val Seq((bmDecoy, bmDecoyRefs, bmPin, bmServe),
+        (ndDecoy, ndDecoyRefs, ndPin, ndPairs),
+        (ivDecoy, ivDecoyRefs, ivPin, ivServe)) =
+        Par.all(Seq(() => bmSide(), () => ndSide(), () => ivSide()))
       // the artifact a training run ships: per-family SNAPSHOT pins
       import spark.implicits._
       Seq(("bm25", bmPin), ("neardup", ndPin), ("ivf", ivPin))
@@ -1624,34 +1487,19 @@ object Curation {
       // consumers (nd replay + nd live), and the r21 lazy-fusion rule
       // covers only strictly sequential consumers.
       val probe = manifestProbe(docs).localCheckpoint()
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fBmRep = Future(
-        TextAnalysis.bm25QueryIndexSnapshot(spark, est.bm, pins("bm25"),
-          manifestTerms, 20).collect().toSeq == est.bmServe)
-      val fNdRep = Future(
-        Dedup.neardupLookupSnapshot(spark, est.nd, pins("neardup"), probe)
-          .collect().toSeq == est.ndPairs)
-      val fIvRep = Future(
-        Similarity.ivfQueryIndexSnapshot(spark, dir, est.iv, pins("ivf"))
-          .collect().toSeq == est.ivServe)
-      val fBmLive = Future(
-        TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20)
-          .collect().toSeq != est.bmServe)
-      val fNdLive = Future(
-        Dedup.neardupLookup(spark, est.nd, probe)
-          .collect().toSeq != est.ndPairs)
-      val fIvLive = Future(
-        Similarity.ivfQueryIndex(spark, dir, est.iv)
-          .collect().toSeq != est.ivServe)
-      val tried = Seq(fBmRep, fNdRep, fIvRep, fBmLive, fNdLive, fIvLive)
-        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-      tried.collect { case scala.util.Failure(e) => e } match {
-        case Seq() =>
-        case first +: rest => rest.foreach(first.addSuppressed); throw first
-      }
-      val Seq(bmRep, ndRep, ivRep, bmLive, ndLive, ivLive) = tried.map(_.get)
+      val Seq(bmRep, ndRep, ivRep, bmLive, ndLive, ivLive) = Par.all(Seq(
+        () => TextAnalysis.bm25QueryIndexSnapshot(spark, est.bm, pins("bm25"),
+          manifestTerms, 20).collect().toSeq == est.bmServe,
+        () => Dedup.neardupLookupSnapshot(spark, est.nd, pins("neardup"), probe)
+          .collect().toSeq == est.ndPairs,
+        () => Similarity.ivfQueryIndexSnapshot(spark, dir, est.iv, pins("ivf"))
+          .collect().toSeq == est.ivServe,
+        () => TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20)
+          .collect().toSeq != est.bmServe,
+        () => Dedup.neardupLookup(spark, est.nd, probe)
+          .collect().toSeq != est.ndPairs,
+        () => Similarity.ivfQueryIndex(spark, dir, est.iv)
+          .collect().toSeq != est.ivServe))
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
       rows += ("esm_pins_present" ->
         (pins.keySet == Set("bm25", "neardup", "ivf") &&
@@ -2220,7 +2068,7 @@ object Curation {
     *
     * 100 TB shape (r12 rebuild, probe-measured): the r11 cost was
     * NOT the md5 — hashing 5.4M gram occurrences adds ~0.1 s on 32
-    * cores (DsirProbe: 2.87 s with vs 2.78 s without) — it was the
+    * cores (2.87 s with vs 2.78 s without) — it was the
     * corpus being re-TOKENIZED once per consumer of the shared gram
     * subtree (Catalyst does not dedupe common subtrees, so the
     * bucket-distribution broadcast and the scoring stream each

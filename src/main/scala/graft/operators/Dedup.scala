@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Par, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -524,32 +524,19 @@ object Dedup {
     // build emits one file per directory instead of files×tasks.
     // The two side writes are independent (disjoint subdirs, both
     // reading the checkpointed sigs) — concurrent jobs (r21, the
-    // admitSigs pattern); await BOTH before any rethrow.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wb = Future {
-      bandedOf(sigs, k, bands)
+    // admitSigs pattern).
+    Par.all(Seq(
+      () => bandedOf(sigs, k, bands)
         .select(col("band"), pbOf(col("bucket")).as("pb"),
           col("doc_id"), col("bucket"), lit(0L).as("gen"))
         .repartition(col("band"), col("pb"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("band", "pb").parquet(s"$ed/buckets")
-    }
-    val wd = Future {
-      sigs.select(dbOf(col("doc_id")).as("db"),
+        .partitionBy("band", "pb").parquet(s"$ed/buckets"),
+      () => sigs.select(dbOf(col("doc_id")).as("db"),
           col("doc_id"), col("dset"), col("sz"), lit(0L).as("gen"))
         .repartition(col("db"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(s"$ed/docsets")
-    }
-    val rb = scala.util.Try(Await.result(wb, Duration.Inf))
-    val rd = scala.util.Try(Await.result(wd, Duration.Inf))
-    (rb, rd) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rb.get; rd.get
-    }
+        .partitionBy("db").parquet(s"$ed/docsets")))
     // the pointer swing — the build commit (a build that crashed above
     // left no manifest, and every reader fails fast instead of
     // consuming a partial index); generation 0 is the timeline origin
@@ -635,35 +622,18 @@ object Dedup {
     // the two admit appends are independent (disjoint subdirs, both
     // reading the checkpointed sigs) — run them as concurrent jobs so
     // the delta pays one write's wall-clock, not two
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wb = Future {
-      bandedOf(sigs, k, bands)
+    Par.all(Seq(
+      () => bandedOf(sigs, k, bands)
         .select(col("band"), pbOf(col("bucket")).as("pb"),
           col("doc_id"), col("bucket"), lit(g).as("gen"))
         .repartition(col("band"), col("pb"))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("band", "pb").parquet(s"$ed/buckets")
-    }
-    val wd = Future {
-      sigs.select(dbOf(col("doc_id")).as("db"),
+        .partitionBy("band", "pb").parquet(s"$ed/buckets"),
+      () => sigs.select(dbOf(col("doc_id")).as("db"),
           col("doc_id"), col("dset"), col("sz"), lit(g).as("gen"))
         .repartition(col("db"))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("db").parquet(s"$ed/docsets")
-    }
-    // await BOTH before any rethrow — failing fast on wb while wd is
-    // still appending would hand the caller (whose recovery is
-    // delete-then-recopy of the index dir) a race against the
-    // in-flight sibling write
-    val rb = scala.util.Try(Await.result(wb, Duration.Inf))
-    val rd = scala.util.Try(Await.result(wd, Duration.Inf))
-    (rb, rd) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rb.get; rd.get
-    }
+        .partitionBy("db").parquet(s"$ed/docsets")))
     // both appends landed — COMMIT the generation (r15 ADVICE): a
     // crash before this line leaves committed at g-1, so readers
     // treat the partial generation as never having happened instead
@@ -1117,36 +1087,24 @@ object Dedup {
     // the two side rewrites are independent (disjoint subdirs of the
     // not-yet-visible epoch, both reading the immutable old epoch) —
     // run them as concurrent jobs (r21, the admitSigs pattern), so
-    // the fold's wall-clock is the wider rewrite, not the sum. Await
-    // BOTH before any rethrow.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wb = Future {
-      committedRows(spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
+    // the fold's wall-clock is the wider rewrite, not the sum.
+    Par.all(Seq(
+      () => committedRows(
+          spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
         .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         .select(col("band"), col("pb"), col("doc_id"), col("bucket"),
           lit(0L).as("gen"))
         .repartition(col("band"), col("pb"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("band", "pb").parquet(s"$ed2/buckets")
-    }
-    val wd = Future {
-      committedRows(spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
+        .partitionBy("band", "pb").parquet(s"$ed2/buckets"),
+      () => committedRows(
+          spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
         .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         .select(col("db"), col("doc_id"), col("dset"), col("sz"),
           lit(0L).as("gen"))
         .repartition(col("db"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(s"$ed2/docsets")
-    }
-    val rb = scala.util.Try(Await.result(wb, Duration.Inf))
-    val rd = scala.util.Try(Await.result(wd, Duration.Inf))
-    (rb, rd) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rb.get; rd.get
-    }
+        .partitionBy("db").parquet(s"$ed2/docsets")))
     // ONE swing commits the fold: the new epoch replaces the old, the
     // tombstones key vanishes, and the as-of timeline resets (the
     // ivf-retrain analogue) — rewritten rows are generation 0 again

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Par, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -919,34 +919,20 @@ object Similarity {
     // training subtree — without the eager codebook checkpoint the
     // 2-round trainer ran twice per build/retrain. The two epoch
     // writes (disjoint subdirs, invisible until the swing) then run
-    // as concurrent jobs (the admitSigs pattern); await both before
-    // any rethrow.
+    // as concurrent jobs (the admitSigs pattern).
     val (assigned, cents) = lloydOn(vecs
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1024).cast("long")).as("vq")),
       k, iters, adaptiveSqrtCells = false, sampleCap = 0, ckptCents = true)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wl = Future {
-      vecs
+    Par.all(Seq(
+      () => vecs
         .join(assigned.select(col("vec_id"), col("cell")), "vec_id")
         .select(col("cell"), col("vec_id"), col("embedding"),
           lit(0L).as("gen"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(s"$ed/lists")
-    }
-    val wc = Future {
-      cents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$ed/centroids")
-    }
-    val rl = scala.util.Try(Await.result(wl, Duration.Inf))
-    val rc = scala.util.Try(Await.result(wc, Duration.Inf))
-    (rl, rc) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rl.get; rc.get
-    }
+        .partitionBy("cell").parquet(s"$ed/lists"),
+      () => cents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$ed/centroids")))
     // the pointer swing — the build/retrain commit: generation 0 (a
     // retrain resets the as-of timeline by design, the bm25Compact
     // analogue)
@@ -1286,13 +1272,14 @@ object Similarity {
     // over the checkpoint's LogicalRDD — the Dedup.lookupPlan shape)
     // compares equal; with the routing's window/exchange inline the
     // check fails and the pruning silently degrades to `true`
-    // (measured r22). `cell >= 0` is a semantic no-op (cells are
-    // seeded from non-negative vec_ids) that marks the build side
-    // likely-selective for the DPP rule; pruned directories are
-    // identical to the old literal IN-set (LayoutSpec asserts the
-    // runtime PartitionFilters and the scanned-file count).
+    // (measured r22). `cell >= Long.MinValue` keeps every cell (cells
+    // are seeded from vec_ids, which may be negative) but, being a
+    // comparison, marks the build side likely-selective for the DPP
+    // rule; pruned directories are identical to the old literal IN-set
+    // (LayoutSpec asserts the runtime PartitionFilters and the
+    // scanned-file count).
     val routing = probes.localCheckpoint(eager = false)
-      .filter(col("cell") >= 0)
+      .filter(col("cell") >= Long.MinValue)
     // tombstoned (removed) vectors drop before scoring — the dead-id
     // set is removal-sized and broadcasts into an anti-join over the
     // pruned list scan; no list file is ever rewritten

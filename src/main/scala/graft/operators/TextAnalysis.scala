@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Par, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -680,38 +680,25 @@ object TextAnalysis {
     val posted = spark.read.schema(postingsSchema).parquet(s"$ed/postings")
     // the two derived tables are independent reads of the just-written
     // postings into disjoint not-yet-visible dirs — concurrent jobs
-    // (r21, the admitSigs pattern); await both before any rethrow
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wt = Future {
-      posted.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // (r21, the admitSigs pattern)
+    Par.all(Seq(
+      () => posted.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .select(substring(col("term"), 1, 1).as("tb"),
           tkCol(col("term")).as("tk"), col("term"), col("df"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tb", "tk").parquet(s"$ed/terms")
-    }
-    // r12: stats carry the exact integer token total alongside the
-    // derived mean, and avgdl is DEFINED as sum_dl/n_docs (one
-    // double division of exact longs) so a refresh that adjusts the
-    // sums reproduces the rebuild's avgdl bit-for-bit; serve reads a
-    // subset schema, so the extra column is invisible to it
-    val ws = Future {
-      posted.select(col("doc_id"), col("dl")).distinct()
+        .partitionBy("tb", "tk").parquet(s"$ed/terms"),
+      // r12: stats carry the exact integer token total alongside the
+      // derived mean, and avgdl is DEFINED as sum_dl/n_docs (one
+      // double division of exact longs) so a refresh that adjusts the
+      // sums reproduces the rebuild's avgdl bit-for-bit; serve reads a
+      // subset schema, so the extra column is invisible to it
+      () => posted.select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .select(col("n_docs"),
           (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"),
           coalesce(col("sum_dl"), lit(0L)).as("sum_dl"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$ed/stats")
-    }
-    val rt = scala.util.Try(Await.result(wt, Duration.Inf))
-    val rs = scala.util.Try(Await.result(ws, Duration.Inf))
-    (rt, rs) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rt.get; rs.get
-    }
+        .parquet(s"$ed/stats")))
     // the pointer swing — the build commit (a build that crashed
     // above left no manifest / the old one, never a partial index)
     val bmap = listBucketDirs(spark, s"$ed/postings")
@@ -1064,24 +1051,17 @@ object TextAnalysis {
     // the tear is structurally impossible). The bucket rewrite and the
     // 1-row stats adjustment are independent jobs into the same
     // not-yet-visible epoch — run them concurrently (r21, the
-    // admitSigs pattern), awaiting BOTH before any rethrow.
+    // admitSigs pattern).
     val tok = IndexPolicy.newEpoch()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fBuckets = Future(writeBucketEpoch(spark, idx, tok, touched,
-      oldPost.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
-        .unionByName(newTf), bmap))
-    val fStats = Future(writeAdjustedStats(spark, statsPathOf(idx, m),
-      newTf, oldTf, s"${IndexPolicy.epochDir(idx, tok)}/stats"))
-    val rB = scala.util.Try(Await.result(fBuckets, Duration.Inf))
-    val rS = scala.util.Try(Await.result(fStats, Duration.Inf))
-    (rB, rS) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) =>
-        e1.addSuppressed(e2); throw e1
-      case _ => rS.get
-    }
-    val newMap = rB.get
+    val Seq(newMap) = Par.all(Seq(
+      () => Some(writeBucketEpoch(spark, idx, tok, touched,
+        oldPost.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
+          .unionByName(newTf), bmap)),
+      () => {
+        writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
+          s"${IndexPolicy.epochDir(idx, tok)}/stats")
+        None
+      })).flatten
     IndexPolicy.crashPoint(spark, idx, "after-epoch")
     IndexPolicy.publish(spark, idx,
       m + ("map" -> serMap(newMap)) + ("stats" -> tok))
@@ -1259,59 +1239,39 @@ object TextAnalysis {
     // pointer swing) — run them as concurrent jobs (r21, the
     // [[graft.operators.Dedup]] admitSigs pattern): an append's wall
     // clock is the widest write, not the sum of five small parquet
-    // commit protocols. Await ALL before any rethrow — failing fast
-    // would hand the caller (whose recovery deletes the segment dir)
-    // a race against an in-flight sibling write.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // commit protocols.
     val tok = IndexPolicy.newEpoch()
-    val writes = Seq(
-      Future {
-        newTf.select(col("tb"), col("tk"), col("term"), col("doc_id"),
-            col("tf"), col("dl"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("tb", "tk").parquet(s"$seg/postings")
-      },
-      Future {
-        newTf.select(col("term"), lit(1L).as("d"))
-          .unionByName(oldTf.select(col("term"), lit(-1L).as("d")))
-          .groupBy(col("term")).agg(sum(col("d")).as("df"))
-          .filter(col("df") =!= 0)
-          .select(substring(col("term"), 1, 1).as("tb"),
-            tkCol(col("term")).as("tk"), col("term"), col("df"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("tb", "tk").parquet(s"$seg/terms")
-      },
-      Future {
-        oldDocs.select(col("doc_id")).distinct()
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$seg/tombstones")
-      },
-      Future {
-        // PRE-append stats snapshot (1 row): makes the index readable
-        // AS OF any generation — serve-time stats at gen g come from
-        // segment g+1's snapshot (or the live stats for the newest
-        // gen). the append swings the live stats pointer wholesale, so
-        // without this the historical (n_docs, avgdl) would be
-        // unrecoverable.
-        spark.read.schema("n_docs bigint, avgdl double, sum_dl bigint")
-          .parquet(statsPathOf(idx, m))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$seg/stats_before")
-      },
-      Future {
-        // adjusted stats land in a fresh epoch; ONE pointer swing
-        // below makes segment and stats visible together — a
-        // segment/stats tear is structurally impossible
-        writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
-          s"${IndexPolicy.epochDir(idx, tok)}/stats")
-      })
-    val tried = writes.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collect { case scala.util.Failure(e) => e } match {
-      case Seq() =>
-      case first +: rest => rest.foreach(first.addSuppressed); throw first
-    }
+    Par.all(Seq(
+      () => newTf.select(col("tb"), col("tk"), col("term"), col("doc_id"),
+          col("tf"), col("dl"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("tb", "tk").parquet(s"$seg/postings"),
+      () => newTf.select(col("term"), lit(1L).as("d"))
+        .unionByName(oldTf.select(col("term"), lit(-1L).as("d")))
+        .groupBy(col("term")).agg(sum(col("d")).as("df"))
+        .filter(col("df") =!= 0)
+        .select(substring(col("term"), 1, 1).as("tb"),
+          tkCol(col("term")).as("tk"), col("term"), col("df"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("tb", "tk").parquet(s"$seg/terms"),
+      () => oldDocs.select(col("doc_id")).distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$seg/tombstones"),
+      // PRE-append stats snapshot (1 row): makes the index readable
+      // AS OF any generation — serve-time stats at gen g come from
+      // segment g+1's snapshot (or the live stats for the newest
+      // gen). the append swings the live stats pointer wholesale, so
+      // without this the historical (n_docs, avgdl) would be
+      // unrecoverable.
+      () => spark.read.schema("n_docs bigint, avgdl double, sum_dl bigint")
+        .parquet(statsPathOf(idx, m))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$seg/stats_before"),
+      // adjusted stats land in a fresh epoch; ONE pointer swing
+      // below makes segment and stats visible together — a
+      // segment/stats tear is structurally impossible
+      () => writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
+        s"${IndexPolicy.epochDir(idx, tok)}/stats")))
     IndexPolicy.crashPoint(spark, idx, "after-epoch")
     IndexPolicy.publish(spark, idx, m ++ extra + ("stats" -> tok) +
       ("segments" -> (segNames :+ segName).mkString(",")))
@@ -1610,11 +1570,11 @@ object TextAnalysis {
     val terms = Seq("data", "model", "system")
     def docsOf(df: DataFrame) = df.select(col("doc_id"), col("text"))
     val none = docsOf(v1).limit(0)
-    // narrow-vocabulary synthetic deltas (the Bm25VocabProbe
-    // discipline): the appended docs' terms all live under one letter
-    // bucket, so the compact under test folds ONLY those buckets
-    // while the n_docs shift still moves every BM25 score — the row
-    // times the snapshot machinery, not a whole-index rewrite
+    // narrow-vocabulary synthetic deltas: the appended docs' terms
+    // all live under one letter bucket, so the compact under test
+    // folds ONLY those buckets while the n_docs shift still moves
+    // every BM25 score — the row times the snapshot machinery, not a
+    // whole-index rewrite
     def slice(m: Int, r: Int, off: Long, word: String) = docsOf(v1)
       .filter(pmod(col("doc_id"), lit(m)) === r)
       .select((col("doc_id") + off).as("doc_id"),

@@ -174,6 +174,30 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(recalls.forall(_ >= 0.8), s"per-query ANN recalls $recalls")
   }
 
+  test("IVF over negative vec_ids serves like the same vectors under shifted ids") {
+    // the build seeds its cells from the vec_ids < k (8): relabel so
+    // the same 8 vectors seed both builds (seeds -8..-1 vs 0..7, the
+    // rest 8.. vs 16..), then every ordering the serve breaks ties on
+    // is preserved by the +8 shift
+    val emb = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val neg = emb.select(
+      when(col("vec_id") < 8, col("vec_id") - 8).otherwise(col("vec_id"))
+        .as("vec_id"), col("embedding"))
+    val shifted = neg.select((col("vec_id") + 8).as("vec_id"), col("embedding"))
+    val queries = emb.filter(pmod(col("vec_id"), lit(50)) === 1)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-neg").toString
+    def serve(vecs: org.apache.spark.sql.DataFrame, idx: String) = {
+      Similarity.ivfWriteIndexVecs(spark, vecs, idx)
+      Similarity.ivfQueryIndexVecs(spark, idx, queries)
+        .as[(Long, Long, Long, Double)].collect().toSeq
+    }
+    val fromNeg = serve(neg, s"$root/neg")
+    val fromShifted = serve(shifted, s"$root/shifted")
+    assert(fromShifted.nonEmpty)
+    assert(fromNeg.map { case (q, r, c, s) => (q, r, c + 8, s) } == fromShifted)
+  }
+
   test("IVF recall: mean >= 0.9, every query >= 0.8; deterministic") {
     val bf = Similarity.bruteForceTopK(spark, sf)
       .as[(Long, Long, Long, Double)].collect()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Registry-wide physical-plan lint: the anti-patterns that sink a
   * 100 TB run must not appear in ANY query's plan, not just the
   * hand-audited flagships. Complements the per-query guards in
@@ -44,6 +46,25 @@ class PlanLintSpec extends SparkSpec {
     "profile_stats", // three 1-row distinct-count broadcasts (r21)
     "ppl_buckets",  // 1-row vocab-total broadcast (the lm_score shape)
     "contamination_semantic") // broadcast eval vectors scored against the corpus (similarity-family shape)
+
+  // driver-side fork-join goes through graft.Par alone; graft/jobs/
+  // keeps its fire-and-forget Future for asynchronous job submission
+  test("no hand-rolled Future/Await/addSuppressed outside Par and jobs") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = ("""scala\.concurrent\.(Future|Await|_|\{[^}]*\b(Future|Await)\b)""" +
+      """|\bAwait\.|addSuppressed""").r
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = files.flatMap { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      if (rel == "graft/Par.scala" || rel.startsWith("graft/jobs/")) Nil
+      else java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if banned.findFirstIn(l).isDefined => s"$rel:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "use graft.Par.all instead:\n" + offenders.mkString("\n"))
+  }
 
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries

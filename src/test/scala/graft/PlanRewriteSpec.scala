@@ -147,4 +147,20 @@ class PlanRewriteSpec extends SparkSpec {
     assert(j.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("alpha", "alphb")))
   }
+
+  test("fanOutScan probes every file-less frame instead of reusing one memo") {
+    // in-memory and checkpointed frames have no input files, so a memo
+    // keyed on the file set would hand the first frame's split count
+    // to every later one
+    def repartitions(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+      }.size
+    val p = spark.sparkContext.defaultParallelism
+    val narrow = spark.range(0, 100, 1, 1).toDF("id").localCheckpoint()
+    val wide = spark.range(0, 100, 1, p).toDF("id").localCheckpoint()
+    assert(narrow.inputFiles.isEmpty && wide.rdd.getNumPartitions >= p)
+    assert(repartitions(Tables.fanOutScan(narrow)) == 1)
+    assert(repartitions(Tables.fanOutScan(wide)) == 0)
+  }
 }
