@@ -115,6 +115,14 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[LshAsymScore].getName, "graft_lsh_asym"),
       (exprs: Seq[Expression]) => PlaneLsh.buildAsym(exprs)))
+    // byte-scan tokenizers (graft.functions.TextFns)
+    Seq(true, false).foreach { alpha =>
+      e.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(Tokenize.nameOf(alpha)),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          classOf[Tokenize].getName, Tokenize.nameOf(alpha)),
+        Tokenize.build(alpha) _))
+    }
     // fuzzy-match predicate optimization (length guard + banded DP)
     e.injectOptimizerRule(_ => graft.plans.LevenshteinPrefilter)
     // whole-operator extension: sequence packing (logical node +
@@ -137,6 +145,9 @@ object GraftFunctions {
       "graft_lsh_proj", PlaneLsh.buildProj, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_lsh_asym", PlaneLsh.buildAsym, "built-in")
+    Seq(true, false).foreach(alpha =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        Tokenize.nameOf(alpha), Tokenize.build(alpha), "built-in"))
   }
 
   /** Column API for the native dot product (requires [[register]]). */

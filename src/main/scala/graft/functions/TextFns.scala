@@ -4,25 +4,25 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level text primitives shared by the word-count and
-  * text-analysis operators. All are built from codegen'd
-  * `org.apache.spark.sql.functions` — no UDFs — so they stay inside
-  * whole-stage codegen and push down where possible.
+  * text-analysis operators. All are Catalyst expressions — no UDFs —
+  * so they plan, optimize and push down like built-ins.
   *
-  * Tokenization semantics mirror the reference engine:
+  * Tokenization semantics mirror the reference engine, both computed
+  * by the byte-scan [[Tokenize]] expression:
   *  - alpha runs: maximal `[a-zA-Z]+` runs, case preserved, empties
   *    dropped (reference internal/worker/worker.go:24-38).
-  *  - whitespace: `StringTokenizer`-style split on whitespace,
-  *    punctuation kept (reference legacy/.../hw01/WordCount.java:44).
+  *  - whitespace: `StringTokenizer`-style split on whitespace
+  *    (`[ \t\n\x0B\f\r]`), punctuation kept (reference
+  *    legacy/.../hw01/WordCount.java:44).
   */
 object TextFns {
+  import org.apache.spark.sql.GraftSqlShims.{column, expression}
 
   /** Array of alphabetic tokens; empties removed. */
-  def alphaTokens(c: Column): Column =
-    filter(split(c, "[^a-zA-Z]+"), t => length(t) > 0)
+  def alphaTokens(c: Column): Column = column(Tokenize(expression(c), alpha = true))
 
   /** Array of whitespace-delimited tokens; empties removed. */
-  def wsTokens(c: Column): Column =
-    filter(split(c, "\\s+"), t => length(t) > 0)
+  def wsTokens(c: Column): Column = column(Tokenize(expression(c), alpha = false))
 
   /** Token count without materializing an explode. */
   def nTokens(c: Column): Column = size(wsTokens(c))

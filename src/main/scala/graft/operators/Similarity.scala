@@ -1204,11 +1204,11 @@ object Similarity {
     * recall contracts draw their queries from slices (e.g. the
     * appended vectors) rather than the id prefix.
     */
-  private def ivfQueryIndexWhere(spark: SparkSession, dir: String,
-                                 idx: String,
-                                 qpred: org.apache.spark.sql.Column,
-                                 kNN: Int, nProbe: Int,
-                                 asOf: Option[Long] = None): DataFrame =
+  private[graft] def ivfQueryIndexWhere(spark: SparkSession, dir: String,
+                                        idx: String,
+                                        qpred: org.apache.spark.sql.Column,
+                                        kNN: Int, nProbe: Int,
+                                        asOf: Option[Long] = None): DataFrame =
     ivfQueryIndexVecs(spark, idx,
       Tables.embeddings(spark, dir).filter(qpred), kNN, nProbe, asOf)
 
@@ -1620,8 +1620,10 @@ object Similarity {
     // checkpointed exact rows via two left joins, and a single head()
     // returns both pooled ratios — where the r21 form paid one
     // head() per serve.
+    // distinct: a (qid, cid) row served twice would join twice and
+    // inflate the shared denominator of BOTH recalls
     def hitsOf(approx: DataFrame, tag: String): DataFrame =
-      approx.select(col("qid"), col("cid"), lit(1).as(tag))
+      approx.select(col("qid"), col("cid"), lit(1).as(tag)).distinct()
     val both = exact
       .join(hitsOf(ivfQueryIndexWhere(
         spark, dir, appendIdx, qpred, kNN, nProbe), "ha"),

@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   *    task granularity, which Spark derives from splits — we expose
   *    provenance via input_file_name() for parity).
   *  - sink: one output file per reduce partition, lines "key value",
-  *    keys sorted ascending within each file — byte-compatible with
-  *    mr-out-{job}-{task} (worker.go:128-141).
+  *    keys sorted ascending (UTF-8 byte order, as Go's sort.Strings)
+  *    within each file — byte-compatible with mr-out-{job}-{task}
+  *    (worker.go:128-141).
   *
   * Scale notes: the sink's partition count maps to the reference's
-  * nReduce; hash partitioning on the key is the same routing as
-  * ihash(key) % nReduce (worker.go:84-88) modulo the hash function,
-  * which the reference itself treats as an implementation detail.
+  * nReduce; Spark's Murmur3 hash partitioning on the key is the same
+  * routing as ihash(key) % nReduce (worker.go:84-88) modulo the hash
+  * function, which the reference itself treats as an implementation
+  * detail.
   */
 object TextIO {
 
@@ -61,13 +63,21 @@ object TextIO {
   /** Write (key, value) rows as the reference's output format:
     * EXACTLY nReduce hash-partitioned files (empty partitions
     * included, like mr-out-{job}-{task}), "key value" lines, keys
-    * sorted ascending within each file (worker.go:128-141).
+    * sorted ascending within each file (worker.go:128-141). A null
+    * key or value is written as `null`; null keys sort first.
     *
-    * Deliberately an RDD sink: the file-count contract is physical
-    * (the DataFrame writer skips empty partitions and AQE may
-    * coalesce), and the per-partition in-memory sort mirrors the
-    * reference's sort.Strings exactly. This is the one place the
-    * engine drops below the DataFrame API on purpose.
+    * Routing and the per-file sort run in Spark SQL: one
+    * `repartition(nReduce, k)` exchange (Murmur3 `pmod`, where the
+    * reference uses `ihash`; it treats the hash function as a
+    * detail), then `sortWithinPartitions(k)`, whose UTF-8 byte order
+    * is Go's `sort.Strings` order. Only the last step drops to an RDD:
+    * `saveAsTextFile` writes one `part-NNNNN` file per partition,
+    * empty ones included, where the DataFrame writer skips them. The
+    * file count holds because AQE never coalesces a
+    * `repartition(n, col)`; when nReduce equals
+    * `spark.sql.shuffle.partitions`, `EnsureRequirements` drops the
+    * repartition into the aggregate's own exchange and AQE keeps that
+    * exchange at nReduce partitions (TextIOJobSpec pins both).
     */
   def writeKV(df: DataFrame, keyCol: String, valCol: String,
               path: String, nReduce: Int): Unit = {
@@ -76,14 +86,19 @@ object TextIO {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(hconf)
     if (fs.exists(p)) fs.delete(p, true)
-    df.select(col(keyCol).cast("string"), col(valCol).cast("string"))
-      .rdd.map(r => (r.getString(0), r.getString(1)))
-      .partitionBy(new org.apache.spark.HashPartitioner(nReduce))
-      .mapPartitions(
-        it => it.toArray.sortBy(_._1).iterator.map { case (k, v) => s"$k $v" },
-        preservesPartitioning = true)
+    kvPartitions(df, keyCol, valCol, nReduce)
+      .queryExecution.toRdd
+      .map(r => s"${r.getUTF8String(0)} ${r.getUTF8String(1)}")
       .saveAsTextFile(path)
   }
+
+  /** The (k, v) string rows [[writeKV]] writes, in nReduce
+    * hash-partitioned, key-sorted partitions. */
+  private[graft] def kvPartitions(df: DataFrame, keyCol: String, valCol: String,
+                                  nReduce: Int): DataFrame =
+    df.select(col(keyCol).cast("string").as("k"), col(valCol).cast("string").as("v"))
+      .repartition(nReduce, col("k"))
+      .sortWithinPartitions("k")
 
   /** Full sink→source round trip through the reference's on-disk
     * format: word-count the documents table, write it as nReduce

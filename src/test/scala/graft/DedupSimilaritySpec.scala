@@ -198,6 +198,20 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(fromNeg.map { case (q, r, c, s) => (q, r, c + 8, s) } == fromShifted)
   }
 
+  test("IVF serve over an appended index returns unique (qid, cid) rows") {
+    // ivf_append_recall joins each serve onto the exact rows: a
+    // repeated (qid, cid) would count twice in both recalls
+    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-uniq").toString + "/idx"
+    val all = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    Similarity.ivfWriteIndexVecs(spark, all.filter(pmod(col("vec_id"), lit(10)) =!= 3), idx)
+    Similarity.ivfAppendVectors(spark, idx, all.filter(pmod(col("vec_id"), lit(10)) === 3))
+    val qpred = pmod(col("vec_id"), lit(10)) === 3 && col("vec_id") < 80L
+    val hits = Similarity.ivfQueryIndexWhere(spark, sf, idx, qpred, kNN = 5, nProbe = 4)
+      .select("qid", "cid").as[(Long, Long)].collect().toSeq
+    assert(hits.nonEmpty)
+    assert(hits.distinct.size == hits.size, hits.diff(hits.distinct))
+  }
+
   test("IVF recall: mean >= 0.9, every query >= 0.8; deterministic") {
     val bf = Similarity.bruteForceTopK(spark, sf)
       .as[(Long, Long, Long, Double)].collect()

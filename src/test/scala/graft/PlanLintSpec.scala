@@ -66,6 +66,27 @@ class PlanLintSpec extends SparkSpec {
     assert(offenders.isEmpty, "use graft.Par.all instead:\n" + offenders.mkString("\n"))
   }
 
+  // tokenizing goes through TextFns' byte-scan Tokenize alone; Scala's
+  // String.split (the typed flatMap demo) is not Spark's split(
+  test("no regex-split tokenizer in src/main/scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = """(?<![\w.])split\s*\(.*(\[\^a-zA-Z\]\+|\\\\s\+)""".r
+    Seq("""filter(split(c, "[^a-zA-Z]+"), t => length(t) > 0)""", """split(col("t"), "\\s+")""",
+        """spark.sql("SELECT split(text, '[^a-zA-Z]+') FROM d")""")
+      .foreach(l => assert(banned.findFirstIn(l).isDefined, l))
+    Seq("""text.split("[^a-zA-Z]+")""", """string_split_regex(text, '[^a-zA-Z]+')""",
+        """regexp_replace(lower(c), "\\s+", " ")""")
+      .foreach(l => assert(banned.findFirstIn(l).isEmpty, l))
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if banned.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty, "use TextFns.alphaTokens/wsTokens:\n" + offenders.mkString("\n"))
+  }
+
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries
       .filterNot { case (name, _) => eagerBuilders(name) }

@@ -31,6 +31,65 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // ASCII letters, digits, punctuation, Java's \s whitespace,
+  // non-ASCII BMP (NEL, NBSP, U+2028 included: not \s) and
+  // supplementary characters
+  private val tokChar: Gen[String] = Gen.frequency(
+    6 -> Gen.alphaChar.map(_.toString),
+    2 -> Gen.numChar.map(_.toString),
+    2 -> Gen.oneOf("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".map(_.toString)),
+    3 -> Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r"),
+    1 -> Gen.oneOf("\u0085", "\u00A0", "\u2028", "\u3000"),
+    2 -> Gen.oneOf(Gen.choose(0x80, 0xD7FF), Gen.choose(0xE000, 0xFFFD))
+      .map(c => c.toChar.toString),
+    1 -> Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp))))
+  private val textGen: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+    12 -> Gen.choose(0, 40).flatMap(Gen.listOfN(_, tokChar)).map(cs => Some(cs.mkString)))
+
+  test("byte-scan tokenizers == the regex split they replace, codegen and interpreted") {
+    // every byte of a multi-byte UTF-8 sequence is >= 0x80, never a
+    // letter or whitespace byte, so on valid UTF-8 a byte run and a
+    // char run cut the string at the same places
+    val texts = samples(Gen.listOfN(400, textGen), 3).flatten
+    val df = spark.sparkContext.parallelize(texts.zipWithIndex.map(_.swap), 3).toDF("id", "s")
+    val oracles = Seq(
+      "alpha" -> ((c: org.apache.spark.sql.Column) =>
+        (TextFns.alphaTokens(c), filter(split(c, "[^a-zA-Z]+"), t => length(t) > 0))),
+      "ws" -> ((c: org.apache.spark.sql.Column) =>
+        (TextFns.wsTokens(c), filter(split(c, "\\s+"), t => length(t) > 0))))
+    def run(tok: org.apache.spark.sql.Column) = {
+      val q = df.select(col("id"), tok.as("t"))
+      (q.queryExecution.executedPlan.toString,
+        q.as[(Int, Option[Seq[String]])].collect().sortBy(_._1).toSeq)
+    }
+    def mode(wholeStage: Boolean): Unit =
+      oracles.foreach { case (name, both) =>
+        val (tok, oracle) = both(col("s"))
+        val (plan, got) = run(tok)
+        if (wholeStage)
+          assert(("""\*\(\d+\) Project .*graft_""" + name).r.findFirstIn(plan).isDefined, plan)
+        val want = run(oracle)._2
+        assert(got.map(_._2.isEmpty) == texts.map(_.isEmpty), name)
+        got.zip(want).foreach { case (g, w) =>
+          assert(g == w, s"$name tokens of ${texts(g._1).map(_.map(_.toInt.toHexString))}")
+        }
+      }
+    mode(wholeStage = true)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => spark.conf.getOption(k))
+    try {
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), "NO_CODEGEN")
+      mode(wholeStage = false)
+    } finally keys.zip(prev).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(!org.apache.spark.sql.GraftSqlShims.expression(TextFns.wsTokens(col("s")))
+      .isInstanceOf[org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])
+  }
+
   test("partial+final sum invariant under any repartitioning") {
     val base = Tables.lineitem(spark, sf).select("l_returnflag", "l_quantity")
     val direct = base.groupBy("l_returnflag").agg(sum("l_quantity"))

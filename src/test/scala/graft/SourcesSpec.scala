@@ -80,6 +80,15 @@ class SourcesSpec extends SparkSpec {
     assert(back.rdd.getNumPartitions == 4)
   }
 
+  test("writeKV writes a null key and a null value as null, null keys first") {
+    val out = Files.createTempDirectory("graft-kv-null").toFile.getAbsolutePath + "/kv"
+    val df = Seq[(String, java.lang.Long)](("b", 2L), (null, 1L), ("a", null))
+      .toDF("k", "v")
+    graft.sources.TextIO.writeKV(df, "k", "v", out, nReduce = 1)
+    val lines = Files.readAllLines(java.nio.file.Paths.get(out, "part-00000"))
+    assert(lines.toArray.toSeq == Seq("null 1", "a null", "b 2"))
+  }
+
   test("KV DataSource V2 prunes columns and pushes key filters") {
     val out = Files.createTempDirectory("graft-kv-v2p").toFile.getAbsolutePath + "/wc"
     val wc = graft.operators.WordCount.alpha(spark, sf)

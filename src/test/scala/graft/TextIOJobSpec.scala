@@ -27,22 +27,60 @@ class TextIOJobSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-out").toFile.getAbsolutePath + "/wc"
     val wc = TextIO.wordCountFromText(spark, Seq(s"$in/*.txt"))
     TextIO.writeKV(wc, "word", "cnt", out, nReduce = 4)
+    sinkContract(out, nReduce = 4)
+  }
 
-    // exactly nReduce files, like mr-out-{job}-{task} (empties included)
+  // exactly nReduce part- files from part-00000 on, keys sorted within
+  // each file, and the demo counts; returns the files' line counts
+  private def sinkContract(out: String, nReduce: Int): Seq[Int] = {
     val parts = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("part-"))
-    assert(parts.length == 4)
-    assert(parts.map(_.getName).sorted.head == "part-00000")
-
-    // each file's lines are "key value", sorted by key within the file
-    parts.foreach { f =>
-      val keys = scala.io.Source.fromFile(f).getLines().map(_.split(" ")(0)).toSeq
-      assert(keys == keys.sorted, s"unsorted keys in ${f.getName}")
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+    assert(parts.length == nReduce)
+    assert(parts.head.getName == "part-00000")
+    val keys = parts.map(f => Files.readAllLines(f.toPath).toArray.toSeq
+      .map(_.toString.split(" ")(0)))
+    keys.zip(parts).foreach { case (ks, f) =>
+      assert(ks == ks.sorted, s"unsorted keys in ${f.getName}")
     }
+    assert(TextIO.readKV(spark, out).as[(String, String)].collect().toMap == expected)
+    keys.map(_.size)
+  }
 
-    val got = TextIO.readKV(spark, out)
-      .as[(String, String)].collect().toMap
-    assert(got == expected)
+  test("KV sink keeps nReduce files when nReduce == shuffle partitions (one exchange)") {
+    // EnsureRequirements folds the repartition into the aggregate's
+    // exchange, which AQE would coalesce on this tiny input were the
+    // partition count not required
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val wc = TextIO.wordCountFromText(spark, Seq(s"${demoDir()}/*.txt"))
+    val out = Files.createTempDirectory("graft-kv-fold").toFile.getAbsolutePath + "/wc"
+    TextIO.writeKV(wc, "word", "cnt", out, n)
+    sinkContract(out, n)
+    val q = TextIO.kvPartitions(wc, "word", "cnt", n)
+    assert(q.queryExecution.toRdd.getNumPartitions == n)
+    val plan = q.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert("Exchange hashpartitioning\\(word".r.findAllIn(plan.toString).size == 1, plan)
+  }
+
+  test("KV sink writes exactly nReduce sorted files for nReduce 3 and 7") {
+    val wc = TextIO.wordCountFromText(spark, Seq(s"${demoDir()}/*.txt"))
+    Seq(3, 7).foreach { n =>
+      val out = Files.createTempDirectory("graft-kv-n").toFile.getAbsolutePath + "/wc"
+      TextIO.writeKV(wc, "word", "cnt", out, n)
+      sinkContract(out, n)
+    }
+  }
+
+  test("KV sink writes the empty files when nReduce exceeds the distinct words") {
+    val wc = TextIO.wordCountFromText(spark, Seq(s"${demoDir()}/*.txt"))
+    val out = Files.createTempDirectory("graft-kv-empty").toFile.getAbsolutePath + "/wc"
+    val n = expected.size + 7
+    TextIO.writeKV(wc, "word", "cnt", out, n)
+    val lines = sinkContract(out, n)
+    assert(lines.count(_ == 0) >= 7)
+    assert(lines.sum == expected.size)
   }
 
   test("line source carries file provenance") {
