@@ -26,13 +26,14 @@ import org.apache.spark.sql.SparkSession
   *    generation keeps serving (no sentinel, no fail-fast window).
   *  - OBJECT-STORE SAFE: the only atomicity requirement is awarding
   *    each manifest version to exactly one writer. The requirement is
-  *    a SEAM ([[PointerStore]]): on S3-style stores one conditional
-  *    PUT of `current` ([[CasPointerStore]]); on HDFS/local a
-  *    create-exclusive version chain (`clog/v-<n>`, the Delta
-  *    `_delta_log` discipline) — create(2)/link(2) with O_EXCL is
-  *    atomic across processes on any real filesystem. The specs prove
-  *    the protocol against both primitives directly. No multi-object
-  *    rename window exists anywhere.
+  *    a SEAM ([[PointerStore]]) with one store per storage class: on
+  *    S3-compatible stores one conditional PUT of `current`
+  *    ([[S3PointerStore]]); on HDFS/local a create-exclusive version
+  *    chain (`clog/v-<n>`, the Delta `_delta_log` discipline,
+  *    [[FsPointerStore]]) — create(2)/link(2) with O_EXCL is atomic
+  *    across processes on any real filesystem. The specs drive both
+  *    stores, the S3 one over a loopback S3-compatible fake. No
+  *    multi-object rename window exists anywhere.
   *  - GC is decoupled from commit: dirs a crashed or superseded
   *    mutation left behind are unreferenced by the current manifest
   *    (and every retained snapshot) and reclaimed by [[sweep]] at the
@@ -59,15 +60,13 @@ private[graft] object IndexPolicy {
 
   // ---------------------------------------------------------------
   // pointer-object store — the ONE mutable surface per index. The
-  // mutable objects (`current`, the `snaps/v-*` log, the writer lease
-  // `wlock`) all go through [[PointerStore]]; the data (epoch/segment
-  // parquet dirs) is immutable and never does. This seam makes the
-  // protocol's object-store claim executable instead of aspirational
-  // (r18): the commit step needs exactly one primitive per store
-  // class, and BOTH classes now have a genuinely atomic one (r19):
-  //  - [[CasPointerStore]] commits with the conditional PUT of an
-  //    object store (S3 If-Match/If-None-Match, GCS
-  //    if-generation-match, a catalog's conditional write) — one
+  // mutable objects (the manifest, the `snaps/v-*` log, the writer
+  // lease `wlock`) all go through [[PointerStore]]; the data
+  // (epoch/segment parquet dirs) is immutable and never does. The
+  // commit step needs exactly one primitive per storage class, and
+  // each class has one store with a genuinely atomic one:
+  //  - [[S3PointerStore]] commits with the conditional PUT of an
+  //    S3-compatible object store (If-Match / If-None-Match) — one
   //    compare-and-swap of the single `current` object.
   //  - [[FsPointerStore]] commits through a create-exclusive VERSION
   //    CHAIN (`clog/v-<n>`, the Delta `_delta_log` discipline):
@@ -99,10 +98,10 @@ private[graft] object IndexPolicy {
 
   /** The store one index's pointer objects live in. `dir` is the
     * directory the object sits in (the index root for `current` and
-    * `wlock`, `<root>/snaps` for the log), `name` the flat object
-    * name. A production object-store deployment implements this trait
-    * over the store's client; tests route an index through
-    * [[CasPointerStore]] with [[CasRootsConf]].
+    * `wlock`, `<root>/snaps` for the log, `<root>/clog` for the
+    * chain), `name` the flat object name. [[storeFor]] picks
+    * [[S3PointerStore]] for roots under [[S3RootsConf]] and
+    * [[FsPointerStore]] for everything else.
     */
   private[graft] sealed trait PointerStore {
     def get(spark: SparkSession, dir: String, name: String): Option[String]
@@ -124,7 +123,7 @@ private[graft] object IndexPolicy {
     /** Conditional delete: remove iff the object currently holds
       * exactly `expected` — the stale-lease-break primitive (a plain
       * read-compare-delete can remove a lock another writer JUST
-      * acquired, r18 review). Atomic on a CAS store; in-JVM-atomic on
+      * acquired, r18 review). Atomic on the S3 store; in-JVM-atomic on
       * the filesystem store.
       */
     def deleteIfMatch(spark: SparkSession, dir: String, name: String,
@@ -141,7 +140,7 @@ private[graft] object IndexPolicy {
       */
     def purge(spark: SparkSession, root: String, except: String): Unit
     /** Whether [[putIfMatch]] is one atomic primitive (an object
-      * store's conditional PUT). Selects the COMMIT strategy: a CAS
+      * store's conditional PUT). Selects the COMMIT strategy: the S3
       * store swings the single `current` object conditionally; a
       * store without the primitive commits through the
       * create-exclusive version chain instead ([[chainCommit]]), so
@@ -152,32 +151,20 @@ private[graft] object IndexPolicy {
   }
 
   /** Comma-separated path PREFIXES; an index root equal to one (or
-    * under it) routes its pointer objects through [[CasPointerStore]].
+    * under it) routes its pointer objects through [[S3PointerStore]].
     * Data dirs stay on the real path — only the mutable pointer
     * surface moves. Prefix match, never substring containment (r18
     * ADVICE: a short or generic entry like `/tmp` would silently move
-    * unrelated indexes' pointers into the in-JVM store, where they
-    * vanish on JVM exit).
-    */
-  private[graft] val CasRootsConf = "spark.graft.index.cas.roots"
-
-  /** Comma-separated path prefixes routed through [[S3PointerStore]]
-    * — the REAL object-store binding (r19 verdict missing #3; same
-    * prefix-match discipline as [[CasRootsConf]]). Requires
-    * `spark.graft.index.s3.endpoint` / `.bucket` (and credentials);
-    * exercised by the lifecycle spec only when an endpoint is
-    * configured, so zero-egress environments skip it cleanly.
+    * unrelated indexes' pointers into the object store). Requires
+    * `spark.graft.index.s3.endpoint` / `.bucket` (and credentials).
     */
   private[graft] val S3RootsConf = "spark.graft.index.s3.roots"
 
-  private def storeFor(spark: SparkSession, dir: String): PointerStore = {
-    def under(conf: String) =
-      spark.conf.get(conf, "").split(",").map(_.trim)
-        .exists(s => s.nonEmpty && (dir == s || dir.startsWith(s + "/")))
-    if (under(CasRootsConf)) CasPointerStore
-    else if (under(S3RootsConf)) S3PointerStore
+  private def storeFor(spark: SparkSession, dir: String): PointerStore =
+    if (spark.conf.get(S3RootsConf, "").split(",").map(_.trim)
+        .exists(s => s.nonEmpty && (dir == s || dir.startsWith(s + "/"))))
+      S3PointerStore
     else FsPointerStore
-  }
 
   private def readAtomicFile(spark: SparkSession, dir: String,
                              name: String): Option[String] =
@@ -198,16 +185,15 @@ private[graft] object IndexPolicy {
     * only — a read must never fail because a concurrent reader won the
     * rename race or the index lives on a read-only snapshot.
     *
-    * WRITE (the atomic-replace primitive behind [[put]] — since r19
-    * the snapshot-log copies and legacy-index compatibility, not the
-    * commit swing, which goes through the version chain's
-    * [[putIfAbsent]]): on a local filesystem, temp-write + one
-    * rename(2) with REPLACE_EXISTING + ATOMIC_MOVE (raw nio, so no
-    * Hadoop checksum sidecar can go stale) — a concurrent reader sees
-    * the complete old or complete new value, NEVER an absence (r17
-    * review: the previous delete-then-rename had a window where a
-    * racing read of `current` threw, and a reader's tmp recovery
-    * could abort a committed mutation). On HDFS-like stores the same
+    * WRITE (the atomic-replace primitive behind [[put]] — the
+    * snapshot-log copies, not the commit swing, which goes through
+    * the version chain's [[putIfAbsent]]): on a local filesystem,
+    * temp-write + one rename(2) with REPLACE_EXISTING + ATOMIC_MOVE
+    * (raw nio, so no Hadoop checksum sidecar can go stale) — a
+    * concurrent reader sees the complete old or complete new value,
+    * NEVER an absence (r17 review: the previous delete-then-rename
+    * had a window where a racing read threw, and a reader's tmp
+    * recovery could abort a committed write). On HDFS-like stores the same
     * contract holds via FileContext.rename(Options.Rename.OVERWRITE)
     * — the atomic rename2 primitive (r17 verdict #2).
     */
@@ -438,84 +424,8 @@ private[graft] object IndexPolicy {
       }
   }
 
-  /** In-JVM conditional-PUT store — the object-store commit primitive,
-    * modeled honestly so specs can prove the protocol against it:
-    * every mutation of a pointer object is ONE atomic compare-and-swap
-    * (`ConcurrentHashMap.replace/putIfAbsent`), exactly the
-    * If-Match / if-generation-match contract of S3-class stores. Data
-    * dirs stay real parquet on the real path; only the pointer objects
-    * move into the store (the spec asserts `current` never exists on
-    * disk for a CAS-routed index while its epoch dirs do). There is no
-    * tmp file, no recovery branch, and no rename anywhere — a
-    * conditional PUT either lands whole or not at all, which is the
-    * protocol's entire atomicity requirement.
-    */
-  private[graft] object CasPointerStore extends PointerStore {
-    private val objects =
-      new java.util.concurrent.ConcurrentHashMap[String, String]()
-    private def key(dir: String, name: String) = s"$dir/$name"
-
-    def atomicCas: Boolean = true
-
-    def get(spark: SparkSession, dir: String,
-            name: String): Option[String] =
-      Option(objects.get(key(dir, name)))
-
-    def put(spark: SparkSession, dir: String, name: String,
-            value: String): Unit = {
-      objects.put(key(dir, name), value)
-      ()
-    }
-
-    def putIfMatch(spark: SparkSession, dir: String, name: String,
-                   expected: Option[String], value: String): Boolean =
-      expected match {
-        case Some(e) => objects.replace(key(dir, name), e, value)
-        case None => objects.putIfAbsent(key(dir, name), value) == null
-      }
-
-    def putIfAbsent(spark: SparkSession, dir: String, name: String,
-                    value: String): Boolean =
-      objects.putIfAbsent(key(dir, name), value) == null
-
-    def delete(spark: SparkSession, dir: String, name: String): Unit = {
-      objects.remove(key(dir, name))
-      ()
-    }
-
-    def deleteIfMatch(spark: SparkSession, dir: String, name: String,
-                      expected: String): Boolean =
-      objects.remove(key(dir, name), expected)
-
-    def list(spark: SparkSession, dir: String,
-             prefix: String): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      val under = s"$dir/"
-      objects.keySet.asScala.toSeq.collect {
-        case k if k.startsWith(under) &&
-          !k.drop(under.length).contains("/") &&
-          k.drop(under.length).startsWith(prefix) => k.drop(under.length)
-      }
-    }
-
-    def purge(spark: SparkSession, root: String, except: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val under = s"$root/"
-      objects.keySet.asScala.toSeq.foreach { k =>
-        if (k.startsWith(under) && k != s"$root/$except") objects.remove(k)
-      }
-    }
-
-    /** Never consulted: CAS stores commit through the single
-      * conditional-PUT object, not the version chain.
-      */
-    def modifiedAt(spark: SparkSession, dir: String,
-                   name: String): Option[Long] = None
-  }
-
-  /** Conf-gated S3-compatible pointer store — the REAL binding of the
-    * conditional-PUT commit the in-JVM [[CasPointerStore]] models
-    * (r19 verdict missing #3): pointer objects live as
+  /** Conf-gated S3-compatible pointer store — the object-store
+    * binding of the conditional-PUT commit: pointer objects live as
     * `<bucket>/<index-path>/<name>` on any endpoint speaking the S3
     * REST dialect WITH conditional writes (AWS S3 since 2024-11,
     * MinIO, GCS interop). The swing primitive is one conditional PUT:
@@ -523,20 +433,20 @@ private[graft] object IndexPolicy {
     * after verifying the read content — for the compare-and-swap, so
     * a concurrent replace between the read and the PUT fails with 412
     * instead of silently losing the commit. Data epochs stay parquet
-    * on the data path; only the mutable pointer surface moves (the
-    * [[CasRootsConf]] discipline). Conf: `spark.graft.index.s3
-    * .{endpoint,bucket,region,access,secret}` (credentials fall back
-    * to the standard AWS env vars). The signing chain is spec-pinned
-    * offline (SigV4Spec); the lifecycle spec drives this store live
-    * only when an endpoint is configured.
+    * on the data path; only the mutable pointer surface moves. Conf:
+    * `spark.graft.index.s3.{endpoint,bucket,region,access,secret}`
+    * (credentials fall back to the standard AWS env vars). The specs
+    * drive it over a loopback S3-compatible fake that checks every
+    * request's signature (SigV4Spec, LayoutSpec), or over a real
+    * endpoint when GRAFT_S3_TEST_ENDPOINT is set.
     */
   private[graft] object S3PointerStore extends PointerStore {
     import java.nio.charset.StandardCharsets.UTF_8
 
     def atomicCas: Boolean = true
 
-    private val clients =
-      new java.util.concurrent.ConcurrentHashMap[String, S3Http]()
+    private val clients = new java.util.concurrent.ConcurrentHashMap[
+      (String, String, String, String, String), S3Http]()
 
     private def cli(spark: SparkSession): S3Http = {
       val ep = spark.conf.get("spark.graft.index.s3.endpoint")
@@ -546,7 +456,7 @@ private[graft] object IndexPolicy {
         sys.env.getOrElse("AWS_ACCESS_KEY_ID", ""))
       val secret = spark.conf.get("spark.graft.index.s3.secret",
         sys.env.getOrElse("AWS_SECRET_ACCESS_KEY", ""))
-      clients.computeIfAbsent(s"$ep|$bucket|$region|$access",
+      clients.computeIfAbsent((ep, bucket, region, access, secret),
         _ => new S3Http(ep, bucket, region, access, secret))
     }
 
@@ -564,14 +474,24 @@ private[graft] object IndexPolicy {
       else throw new java.io.IOException(
         s"S3 $what failed: HTTP $st ${new String(body, UTF_8).take(200)}")
 
-    def get(spark: SparkSession, dir: String,
-            name: String): Option[String] = {
-      val (st, body, _) = cli(spark).request("GET", key(dir, name))
-      if (st == 200) Some(new String(body, UTF_8).trim)
-      else if (st == 404) None
+    /** Content and ETag of object `k`, None when absent. Any other
+      * status is a store error, never "absent" or "mismatch" (the r18
+      * rule again): the conditional ops read through this, so a
+      * rejected signature cannot pass for a lost compare.
+      */
+    private def read(spark: SparkSession,
+                     k: String): Option[(String, String)] = {
+      val (st, body, etag) = cli(spark).request("GET", k)
+      if (st == 404) None
+      else if (st == 200 && etag.isDefined)
+        Some((new String(body, UTF_8).trim, etag.get))
       else throw new java.io.IOException(
-        s"S3 GET ${key(dir, name)} failed: HTTP $st")
+        s"S3 GET $k failed: HTTP $st ${new String(body, UTF_8).take(200)}")
     }
+
+    def get(spark: SparkSession, dir: String,
+            name: String): Option[String] =
+      read(spark, key(dir, name)).map(_._1)
 
     def put(spark: SparkSession, dir: String, name: String,
             value: String): Unit = {
@@ -597,23 +517,22 @@ private[graft] object IndexPolicy {
       * PUT is the atomic step, so a writer that replaces the object
       * between our read and our PUT fails us with 412 (never a lost
       * update). Content-compare first keeps the [[PointerStore]]
-      * contract (expected is a value, not a version tag).
+      * contract (expected is a value, not a version tag). An If-Match
+      * write to a key deleted since the read answers 404 on S3: the
+      * compare failed, so that is false too.
       */
     def putIfMatch(spark: SparkSession, dir: String, name: String,
                    expected: Option[String], value: String): Boolean =
       expected match {
         case None => putIfAbsent(spark, dir, name, value)
-        case Some(e) =>
-          val (st, body, etag) = cli(spark).request("GET", key(dir, name))
-          if (st != 200 || new String(body, UTF_8).trim != e.trim ||
-            etag.isEmpty) false
-          else {
-            val (st2, b2, _) = cli(spark).request("PUT", key(dir, name),
-              body = value.getBytes(UTF_8),
-              extra = Seq("If-Match" -> etag.get))
-            expect(st2, b2, s => s == 412 || s == 409,
+        case Some(e) => read(spark, key(dir, name)) match {
+          case Some((cur, etag)) if cur == e.trim =>
+            val (st, body, _) = cli(spark).request("PUT", key(dir, name),
+              body = value.getBytes(UTF_8), extra = Seq("If-Match" -> etag))
+            expect(st, body, s => s == 412 || s == 409 || s == 404,
               s"conditional PUT ${key(dir, name)}")
-          }
+          case _ => false
+        }
       }
 
     /** Honesty note on store coverage: conditional DELETE (If-Match)
@@ -626,17 +545,15 @@ private[graft] object IndexPolicy {
       * honors. Verify DELETE+If-Match support when onboarding a store.
       */
     def deleteIfMatch(spark: SparkSession, dir: String, name: String,
-                      expected: String): Boolean = {
-      val (st, body, etag) = cli(spark).request("GET", key(dir, name))
-      if (st != 200 || new String(body, UTF_8).trim != expected.trim ||
-        etag.isEmpty) false
-      else {
-        val (st2, b2, _) = cli(spark).request("DELETE", key(dir, name),
-          extra = Seq("If-Match" -> etag.get))
-        expect(st2, b2, s => s == 412 || s == 409,
-          s"conditional DELETE ${key(dir, name)}")
+                      expected: String): Boolean =
+      read(spark, key(dir, name)) match {
+        case Some((cur, etag)) if cur == expected.trim =>
+          val (st, body, _) = cli(spark).request("DELETE", key(dir, name),
+            extra = Seq("If-Match" -> etag))
+          expect(st, body, s => s == 412 || s == 409 || s == 404,
+            s"conditional DELETE ${key(dir, name)}")
+        case _ => false
       }
-    }
 
     def delete(spark: SparkSession, dir: String, name: String): Unit = {
       val (st, body, _) = cli(spark).request("DELETE", key(dir, name))
@@ -663,8 +580,8 @@ private[graft] object IndexPolicy {
       }
     }
 
-    /** Never consulted: CAS stores commit through the conditional
-      * PUT, not the version chain, so nothing ages by mtime here (and
+    /** Unknown: this store commits through the conditional PUT, not
+      * the version chain, so nothing ages by mtime here (and
       * Last-Modified's second granularity would be useless to the
       * chain's age gate anyway).
       */
@@ -741,7 +658,7 @@ private[graft] object IndexPolicy {
 
   // ---------------------------------------------------------------
   // version chain (r18 verdict #1 — cross-process atomic commit on
-  // plain filesystems): a CAS store commits by one conditional PUT of
+  // plain filesystems): the S3 store commits by one conditional PUT of
   // the single `current` object; a FILE store has no native
   // conditional replace, but it HAS a genuinely atomic cross-process
   // primitive — create-exclusive. So the file-store commit is a
@@ -759,9 +676,10 @@ private[graft] object IndexPolicy {
   // by the lease, which such deployments must keep enabled. The chain
   // is pruned at publish (the tip plus a couple of predecessors stay,
   // so a reader that listed just before a commit still finds the
-  // entry it chose); `current` remains only as the LEGACY fallback
-  // read for indexes written before the chain existed — their next
-  // publish starts the chain at version+1.
+  // entry it chose). A file-store index has no `current` object: the
+  // chain tip IS the committed manifest, so an index whose clog/ is
+  // lost (partial restore, a copy tool skipping the dir) has no
+  // committed state and every read and mutation of it fails fast.
   // ---------------------------------------------------------------
 
   private def clogDir(idx: String) = s"$idx/clog"
@@ -991,53 +909,25 @@ private[graft] object IndexPolicy {
     }
   }
 
-  /** The `current` object's key once the chain has started: after the
-    * first chain commit the legacy manifest in `current` is REPLACED
-    * by this tombstone (r19 ADVICE #4), so an index whose clog/ is
-    * ever lost (partial restore, a copy tool skipping the dir, manual
-    * cleanup) FAILS FAST instead of silently falling back to an
-    * arbitrarily stale pre-chain manifest whose epochs may already be
-    * swept.
-    */
-  private val ChainMarkerKey = "chain_started"
-
-  /** The pre-chain `current` fallback, tombstone-aware: a legacy
-    * manifest is served unchanged (its next publish starts the
-    * chain); the tombstone — meaning the chain EXISTED and its
-    * entries are now unreadable — throws rather than serving stale
-    * state.
-    */
-  private def legacyManifest(spark: SparkSession, store: PointerStore,
-                             idx: String): Option[Manifest] =
-    store.get(spark, idx, ManifestName).map(parseManifest).map { m =>
-      if (m.contains(ChainMarkerKey))
-        throw new IllegalStateException(
-          s"$idx: the version chain is empty but its chain-started " +
-            "tombstone is present — clog/ was lost (partial restore, a " +
-            "copy tool skipping the dir, or manual cleanup); refusing " +
-            "to fall back to the stale legacy manifest. Restore clog/ " +
-            "from backup or rebuild the index")
-      m
-    }
-
   private[graft] def readManifest(spark: SparkSession,
                                   idx: String): Option[Manifest] = {
     val store = storeFor(spark, idx)
     if (store.atomicCas)
       store.get(spark, idx, ManifestName).map(parseManifest)
     else chainTip(spark, idx, store).map(_._2)
-      .orElse(legacyManifest(spark, store, idx))
   }
 
   /** The committed state of an index — fails only when the dir has no
-    * manifest at all (a build that crashed before its publish, or a
-    * dir that is not an index): there is no committed state to serve.
+    * manifest at all (a build that crashed before its publish, a dir
+    * that is not an index, or a file-store index whose clog/ was
+    * lost): there is no committed state to serve.
     */
   def manifestOf(spark: SparkSession, idx: String): Manifest =
     readManifest(spark, idx).getOrElse(
       throw new IllegalArgumentException(
-        s"$idx has no manifest — either the build crashed before " +
-          "committing or the dir is not an index: (re)build it"))
+        s"$idx has no manifest — the build crashed before committing, " +
+          "the dir is not an index, or its clog/ version chain was " +
+          "lost: restore clog/ from backup or (re)build it"))
 
   // ---------------------------------------------------------------
   // compare-and-swing + writer lease (r17 verdict #1): two layers
@@ -1048,9 +938,6 @@ private[graft] object IndexPolicy {
   // swing verifies `current` still carries the version this mutation
   // read, so a concurrent commit can no longer be silently erased —
   // the loser's work stays unreferenced garbage for the next sweep.
-  // On an object store the two collapse into one conditional PUT
-  // (if-match on the manifest etag); file stores lack that primitive,
-  // hence the lease + re-read pairing.
   // ---------------------------------------------------------------
 
   private val VersionKey = "version"
@@ -1091,15 +978,13 @@ private[graft] object IndexPolicy {
     crashPoint(spark, idx, "before-swing")
     val store = storeFor(spark, idx)
     val expected = versionOf(m)
-    // the committed version right now: the CAS store's single object,
-    // or the chain tip (falling back to a legacy `current` when the
-    // chain is empty — that index's next swing starts the chain)
+    // the committed version right now: the S3 store's single object,
+    // or the chain tip
     val curSer: Option[String] =
       if (store.atomicCas) store.get(spark, idx, ManifestName) else None
     val cur: Option[Long] =
       if (store.atomicCas) curSer.map(parseManifest).flatMap(versionOf)
       else chainTip(spark, idx, store).map(_._1)
-        .orElse(legacyManifest(spark, store, idx).flatMap(versionOf))
     if (cur != expected)
       throw new java.util.ConcurrentModificationException(
         s"$idx: manifest version moved underneath this mutation (read " +
@@ -1113,7 +998,7 @@ private[graft] object IndexPolicy {
       .map { case (k, x) => s"$k=$x" }.mkString("\n")
     // THE swing — one genuinely atomic primitive on EITHER store
     // class: a conditional PUT of `current` (expected = the exact
-    // serialization this mutation read) on a CAS store, or winning
+    // serialization this mutation read) on the S3 store, or winning
     // the create-exclusive chain slot `clog/v-<v>` on a file store.
     // Both award each version to exactly one writer across processes;
     // the loser fails LOUDLY here and its fully-written output stays
@@ -1127,24 +1012,6 @@ private[graft] object IndexPolicy {
         s"$idx: another writer committed between this mutation's read " +
           s"and its swing (version $v refused) — this mutation is LOST " +
           "and must be retried; check writer scheduling")
-    // chain store: replace a leftover legacy `current` with the
-    // chain-started tombstone so a later clog/ loss fails fast instead
-    // of silently serving the stale pre-chain manifest (r19 ADVICE #4).
-    // Best-effort — the commit above already landed, and a crash here
-    // just leaves the stamp for the next publish to retry (the get is
-    // one Files.exists for chain-born indexes, which never have the
-    // object at all).
-    if (!store.atomicCas)
-      try {
-        if (store.get(spark, idx, ManifestName)
-            .exists(c => !parseManifest(c).contains(ChainMarkerKey)))
-          store.put(spark, idx, ManifestName, s"$ChainMarkerKey=1")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[chain] $idx: legacy-manifest tombstone " +
-            s"stamp failed after the v-$v commit landed " +
-            s"(${e.getClass.getSimpleName}) — retried at the next publish")
-      }
     val keep = spark.conf.get(SnapKeepConf, "0").toInt
     if (keep > 0 && snapshot) {
       // the snapshot copy carries its commit wall-clock (snap_at) so
@@ -1383,7 +1250,7 @@ private[graft] object IndexPolicy {
     }
   }
 
-  /** Clear a manifest-less dir (fresh path / legacy content) for a
+  /** Clear a manifest-less dir (fresh path / foreign content) for a
     * from-scratch build — everything EXCEPT the writer lock the
     * calling mutation holds (a recursive delete of the root would
     * silently release the lease mid-mutation).
@@ -1398,7 +1265,7 @@ private[graft] object IndexPolicy {
           s"clearForRebuild: could not delete ${st.getPath}")
     }
     // store-side half: pointer objects that don't live under the index
-    // dir (the CAS store's manifest/snapshots) go too — except the
+    // dir (the S3 store's manifest/snapshots) go too — except the
     // lease the calling mutation holds
     storeFor(spark, idx).purge(spark, idx, LockName)
   }

@@ -1,19 +1,17 @@
 package graft.operators
 
 /** Minimal AWS Signature V4 signer + path-style S3 REST client — the
-  * real-store binding behind [[IndexPolicy]]'s conf-gated
-  * S3PointerStore (r19 verdict missing #3: the conditional-PUT
-  * semantics were proven only against the in-JVM model; this closes
-  * the gap to "proven against a store" for any S3-compatible endpoint
-  * — AWS S3 with conditional writes, MinIO, GCS in interop mode).
+  * store binding behind [[IndexPolicy]]'s conf-gated S3PointerStore,
+  * for any S3-compatible endpoint with conditional writes (AWS S3,
+  * MinIO, GCS in interop mode).
   *
   * Original implementation of the PUBLIC algorithm ("Signature
   * Version 4 signing process", AWS general reference; reference repo
   * has no object-store layer — this serves the engine's own 100-TB
-  * index estate). Spec-pinned OFFLINE against the published example
-  * vector (SigV4Spec), so the signing chain is verified even in a
-  * zero-egress environment; the live lifecycle spec runs only when an
-  * endpoint is configured. java.net.http only — no SDK (build rule:
+  * index estate). Spec-pinned against the published example vector
+  * (SigV4Spec), and driven on the wire by the specs' loopback
+  * S3-compatible fake, which recomputes every request's signature
+  * from what it received. java.net.http only — no SDK (build rule:
   * no new dependencies).
   */
 private[graft] object SigV4 {

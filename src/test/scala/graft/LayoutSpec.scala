@@ -1335,32 +1335,26 @@ class LayoutSpec extends SparkSpec {
     assert(live() == Set.empty)
   }
 
-  test("pointer crash recovery: a fully-written .current_tmp is recovered when the manifest is missing") {
+  test("pointer crash recovery: a fully-written snapshot tmp is recovered") {
     import graft.operators.{Dedup, IndexPolicy}
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("graft-manifest-tmp").toString
     val idx = s"$root/idx"
-    Dedup.neardupWriteIndex(spark, Seq(
+    spark.conf.set(IndexPolicy.SnapKeepConf, "10")
+    try Dedup.neardupWriteIndex(spark, Seq(
       (1L, "a b c d e")).toDF("doc_id", "text"), idx)
-    // construct the LEGACY (pre-chain, `current`-only) index that
-    // crashed between its swing's delete and rename: the tmp is
-    // complete, the live manifest file is gone, and no chain exists
-    val ser = IndexPolicy.manifestOf(spark, idx).toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
-    Files.write(Paths.get(s"$idx/.current_tmp"), ser.getBytes)
-    def wipe(d: java.io.File): Unit = {
-      if (d.isDirectory) d.listFiles().foreach(wipe)
-      d.delete(); ()
-    }
-    wipe(new java.io.File(s"$idx/clog"))
+    finally spark.conf.unset(IndexPolicy.SnapKeepConf)
+    // the pointer put that crashed between its tmp write and its
+    // rename: the tmp is complete and the snapshot file is gone
+    val v = IndexPolicy.snapshotIds(spark, idx).last
+    Files.move(Paths.get(s"$idx/snaps/v-$v"), Paths.get(s"$idx/snaps/.v-${v}_tmp"))
     val probe = Seq((9L, "a b c d e")).toDF("doc_id", "text")
-    // the read recovers the manifest instead of prescribing a rebuild
-    // of a healthy index
-    assert(Dedup.neardupLookupAsOf(spark, idx, probe, gen = 0L)
+    // the read recovers the snapshot instead of reporting it expired
+    assert(Dedup.neardupLookupSnapshot(spark, idx, v, probe)
       .collect().nonEmpty)
-    assert(Files.exists(Paths.get(s"$idx/current")),
-      "recovery did not reinstate the manifest")
+    assert(Files.exists(Paths.get(s"$idx/snaps/v-$v")),
+      "recovery did not reinstate the snapshot")
   }
 
   test("copyIndex routes URI-schemed paths through the generic FileSystem copy") {
@@ -1458,19 +1452,19 @@ class LayoutSpec extends SparkSpec {
 
   test("the pointer protocol runs end-to-end on a conditional-PUT object store") {
     // r18: the seam that makes the object-store claim executable —
-    // an index root routed through CasPointerStore keeps its mutable
-    // pointer objects (current, snaps/v-*, wlock) in the store, its
-    // immutable parquet epochs on disk, and every lifecycle op +
-    // snapshot time travel behaves exactly as on the filesystem store
+    // an index root routed through S3PointerStore (over the loopback
+    // fake) keeps its mutable pointer objects (current, snaps/v-*,
+    // wlock) in the store, its immutable parquet epochs on disk, and
+    // every lifecycle op + snapshot time travel behaves exactly as on
+    // the filesystem store
     import graft.operators.{Dedup, IndexPolicy}
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-cas-store").toString
     val fsRoot = java.nio.file.Files
       .createTempDirectory("graft-cas-fstwin").toString
-    spark.conf.set(IndexPolicy.CasRootsConf, root)
     spark.conf.set("spark.graft.index.snapshots.keep", "10")
-    try {
+    try S3Fake.withS3Root(spark, root) {
       val cas = s"$root/idx"
       val fsIdx = s"$fsRoot/idx"
       val docs = Seq((1L, "a b c d e"), (2L, "x y z w v"),
@@ -1516,10 +1510,7 @@ class LayoutSpec extends SparkSpec {
       IndexPolicy.expireSnapshots(spark, cas, 1)
       intercept[IllegalArgumentException](
         Dedup.neardupLookupSnapshot(spark, cas, snap, probe))
-    } finally {
-      spark.conf.unset(IndexPolicy.CasRootsConf)
-      spark.conf.unset("spark.graft.index.snapshots.keep")
-    }
+    } finally spark.conf.unset("spark.graft.index.snapshots.keep")
   }
 
   test("conditional-PUT swing with NO lease: concurrent publishes award each version exactly once, zero lost updates") {
@@ -1534,8 +1525,7 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-cas-race").toString
-    spark.conf.set(IndexPolicy.CasRootsConf, root)
-    try {
+    S3Fake.withS3Root(spark, root) {
       val idx = s"$root/idx"
       Dedup.neardupWriteIndex(spark,
         Seq((1L, "a b c d e")).toDF("doc_id", "text"), idx)
@@ -1568,7 +1558,7 @@ class LayoutSpec extends SparkSpec {
         s"version ownership broke (lost or doubled swing): $versions")
       assert(IndexPolicy.versionOf(IndexPolicy.manifestOf(spark, idx))
         .contains(v0 + 4L * perThread), "final version drifted")
-    } finally spark.conf.unset(IndexPolicy.CasRootsConf)
+    }
   }
 
   test("the exactly-once stream watermark is family-generic: a replayed IVF batch appends nothing") {
@@ -1648,29 +1638,31 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("CAS pointer-store primitives: putIfAbsent, putIfMatch, list, purge") {
-    import graft.operators.IndexPolicy.{CasPointerStore => S}
+    import graft.operators.IndexPolicy.{S3PointerStore => S}
     val d = s"/cas-prim-${java.util.UUID.randomUUID()}"
-    assert(S.get(spark, d, "current").isEmpty)
-    assert(S.putIfAbsent(spark, d, "current", "v=0"))
-    assert(!S.putIfAbsent(spark, d, "current", "v=X"), "create-exclusive lost")
-    assert(!S.putIfMatch(spark, d, "current", Some("v=9"), "v=1"),
-      "if-match must refuse a stale expectation")
-    assert(!S.putIfMatch(spark, d, "current", None, "v=1"),
-      "if-none-match must refuse an existing object")
-    assert(S.putIfMatch(spark, d, "current", Some("v=0"), "v=1"))
-    assert(S.get(spark, d, "current").contains("v=1"))
-    S.put(spark, s"$d/snaps", "v-1", "s")
-    S.put(spark, s"$d/snaps", "v-2", "s")
-    assert(S.list(spark, s"$d/snaps", "v-").sorted == Seq("v-1", "v-2"))
-    assert(S.list(spark, d, "").sorted == Seq("current"),
-      "list must not descend into snaps/")
-    S.putIfAbsent(spark, d, "wlock", "me")
-    S.purge(spark, d, "wlock")
-    assert(S.get(spark, d, "current").isEmpty &&
-      S.list(spark, s"$d/snaps", "v-").isEmpty &&
-      S.get(spark, d, "wlock").contains("me"),
-      "purge must drop everything except the held lease")
-    S.delete(spark, d, "wlock")
+    S3Fake.withS3Root(spark, d) {
+      assert(S.get(spark, d, "current").isEmpty)
+      assert(S.putIfAbsent(spark, d, "current", "v=0"))
+      assert(!S.putIfAbsent(spark, d, "current", "v=X"), "create-exclusive lost")
+      assert(!S.putIfMatch(spark, d, "current", Some("v=9"), "v=1"),
+        "if-match must refuse a stale expectation")
+      assert(!S.putIfMatch(spark, d, "current", None, "v=1"),
+        "if-none-match must refuse an existing object")
+      assert(S.putIfMatch(spark, d, "current", Some("v=0"), "v=1"))
+      assert(S.get(spark, d, "current").contains("v=1"))
+      S.put(spark, s"$d/snaps", "v-1", "s")
+      S.put(spark, s"$d/snaps", "v-2", "s")
+      assert(S.list(spark, s"$d/snaps", "v-").sorted == Seq("v-1", "v-2"))
+      assert(S.list(spark, d, "").sorted == Seq("current"),
+        "list must not descend into snaps/")
+      S.putIfAbsent(spark, d, "wlock", "me")
+      S.purge(spark, d, "wlock")
+      assert(S.get(spark, d, "current").isEmpty &&
+        S.list(spark, s"$d/snaps", "v-").isEmpty &&
+        S.get(spark, d, "wlock").contains("me"),
+        "purge must drop everything except the held lease")
+      S.delete(spark, d, "wlock")
+    }
   }
 
   test("version-chain swing on the FILE store with NO lease: concurrent publishes award each version exactly once") {
@@ -1947,50 +1939,6 @@ class LayoutSpec extends SparkSpec {
         .get(IndexPolicy.streamKey("")).contains("3"))
   }
 
-  test("legacy current-only index: reads fall back, the next publish starts the version chain") {
-    // migration pin: an index written before the chain existed has
-    // only `current`. Reads must serve it unchanged; the NEXT publish
-    // must start the chain at version+1, after which the chain is the
-    // committed truth and the stale legacy file is ignored.
-    import graft.operators.{Dedup, IndexPolicy}
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-legacy-cur").toString
-    val idx = s"$root/idx"
-    Dedup.neardupWriteIndex(spark, Seq(
-      (1L, "a b c d e"), (2L, "x y z w v")).toDF("doc_id", "text"), idx)
-    // demote to the legacy layout: serialize the committed manifest
-    // into `current`, drop the chain
-    val m0 = IndexPolicy.manifestOf(spark, idx)
-    val ser = m0.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
-    Files.write(Paths.get(s"$idx/current"), ser.getBytes)
-    def wipe(d: java.io.File): Unit = {
-      if (d.isDirectory) d.listFiles().foreach(wipe)
-      d.delete(); ()
-    }
-    wipe(new java.io.File(s"$idx/clog"))
-    // reads serve the legacy pointer
-    assert(IndexPolicy.manifestOf(spark, idx) == m0)
-    val probe = Seq((9L, "a b c d e")).toDF("doc_id", "text").localCheckpoint()
-    assert(Dedup.neardupLookup(spark, idx, probe)
-      .collect().map(_.getLong(0)).toSet == Set(1L))
-    // the next mutation commits THROUGH the chain, at version+1
-    val v0 = IndexPolicy.versionOf(m0).get
-    Dedup.neardupRemove(spark, idx, Seq(1L).toDF("doc_id"))
-    val m1 = IndexPolicy.manifestOf(spark, idx)
-    assert(IndexPolicy.versionOf(m1).contains(v0 + 2L), // alloc + commit
-      s"chain did not continue the legacy version line: $m1")
-    assert(new java.io.File(s"$idx/clog").list()
-      .exists(_.startsWith("v-")), "no chain entry written")
-    // the stale legacy file is now ignored: reads resolve the chain
-    Files.write(Paths.get(s"$idx/current"), "version=999999\ngarbage=1".getBytes)
-    assert(IndexPolicy.manifestOf(spark, idx) == m1,
-      "a stale legacy current file shadowed the chain tip")
-    assert(Dedup.neardupLookup(spark, idx, probe).collect().isEmpty,
-      "the removal committed through the chain must be served")
-  }
-
   test("torn chain slot: a publish repairs a half-written clog entry and retakes its version") {
     // the no-hardlink-filesystem crash shape: a writer died between
     // creating clog/v-<n> and writing it, leaving content that does
@@ -2157,40 +2105,34 @@ class LayoutSpec extends SparkSpec {
       "a successful repair must release its claim")
   }
 
-  test("chain-started tombstone: losing clog/ fails fast instead of serving the stale legacy manifest") {
-    // r19 ADVICE #4: once the chain has started, the legacy `current`
-    // object is replaced by a tombstone — an empty chain PLUS the
-    // tombstone means clog/ was lost (partial restore, a copy tool
-    // skipping the dir), and readers/writers must refuse loudly
-    // rather than silently serve a pre-chain manifest whose epochs
-    // may already be swept.
+  test("chain-born index that lost clog/: reads, publishes and mutations fail fast") {
+    // the chain tip IS a file-store index's committed manifest; once
+    // clog/ is lost (partial restore, a copy tool skipping the dir)
+    // there is no committed state, and readers and writers must
+    // refuse loudly rather than serve nothing or restart the version
+    // line over epochs that may already be swept.
     import graft.operators.{Dedup, IndexPolicy}
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-chain-tomb").toString
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft-chain-lost").toString
     val idx = s"$root/idx"
     Dedup.neardupWriteIndex(spark, Seq(
       (1L, "a b c d e"), (2L, "x y z w v")).toDF("doc_id", "text"), idx)
-    // demote to the legacy layout (the pre-chain index shape)
-    val m0 = IndexPolicy.manifestOf(spark, idx)
-    Files.write(Paths.get(s"$idx/current"), m0.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes)
-    wipe(new java.io.File(s"$idx/clog"))
-    // the migration commit starts the chain AND stamps the tombstone
     Dedup.neardupRemove(spark, idx, Seq(1L).toDF("doc_id"))
-    val cur = new String(Files.readAllBytes(Paths.get(s"$idx/current")))
-    assert(cur.trim == "chain_started=1",
-      s"the legacy manifest must be replaced by the tombstone: $cur")
     val m1 = IndexPolicy.manifestOf(spark, idx)
-    assert(IndexPolicy.versionOf(m1).get > IndexPolicy.versionOf(m0).get)
+    assert(!new java.io.File(s"$idx/current").exists,
+      "a chain-born index keeps no current object")
     // clog/ is lost: reads and mutations fail fast, naming the cause
     wipe(new java.io.File(s"$idx/clog"))
-    val e = intercept[IllegalStateException] {
+    val e = intercept[IllegalArgumentException] {
       IndexPolicy.manifestOf(spark, idx)
     }
-    assert(e.getMessage.contains("clog/ was lost"))
-    intercept[IllegalStateException] {
+    assert(e.getMessage.contains("clog/"))
+    intercept[java.util.ConcurrentModificationException] {
       IndexPolicy.publish(spark, idx, m1 + ("k" -> "v"))
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.neardupRemove(spark, idx, Seq(2L).toDF("doc_id"))
     }
   }
 

@@ -87,6 +87,25 @@ class PlanLintSpec extends SparkSpec {
     assert(offenders.isEmpty, "use TextFns.alphaTokens/wsTokens:\n" + offenders.mkString("\n"))
   }
 
+  // a canceled test reads as green in an offline run while checking
+  // nothing; a spec that needs a service brings a loopback fake of it
+  test("no canceled tests: no assume/cancel in src/test/scala") {
+    val root = java.nio.file.Paths.get("src/test/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = """(?<![\w.])(assume|cancel)\s*\(""".r
+    Seq("assume" + "(ep.isDefined)", "cancel" + " (\"offline\")")
+      .foreach(l => assert(banned.findFirstIn(l).isDefined, l))
+    Seq("job.cancel" + "(true)", "assumeResult(x)", "cancelJobGroup(g)")
+      .foreach(l => assert(banned.findFirstIn(l).isEmpty, l))
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if banned.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty, "tests must run, not cancel:\n" + offenders.mkString("\n"))
+  }
+
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries
       .filterNot { case (name, _) => eagerBuilders(name) }
