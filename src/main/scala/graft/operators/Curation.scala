@@ -242,9 +242,11 @@ object Curation {
         p
       }), nd)
       val pairs1 = Dedup.neardupLookup(spark, nd, added1, minJ)
-      // pairs1 is already an eager localCheckpoint (neardupLookup
-      // returns one), so this tiny projection needs no snapshot of
-      // its own — both anti-joins below re-read that materialization.
+      // pairs1 is already materialized (neardupLookup returns an eager
+      // localCheckpoint, or a LocalRelation for an in-memory probe), so
+      // this tiny projection needs no snapshot of its own — both
+      // anti-joins below re-read those rows, and the check-in below
+      // cannot change them (ServePathSpec pins the LocalRelation case).
       // Round-1 gate rule: of each flagged pair, reject the round-1
       // member — the delta ids are ≡ 0 mod 30 and appear on either
       // side of the canonical (a < b) pair

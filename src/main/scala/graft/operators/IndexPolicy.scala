@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 
 /** Policy and bookkeeping shared by the index families: the
   * tombstone-fraction fold predicate ([[Dedup.neardupFoldDue]],
@@ -1592,4 +1595,44 @@ private[graft] object IndexPolicy {
       val t = total
       t > 0L && dead.toDouble / t > maxFrac
     }
+
+  // ---------------------------------------------------------------
+  // small-probe serving (near-dup lookups, IVF serves): a probe whose
+  // rows already sit in driver memory is served with literal partition
+  // filters and driver-side joins instead of the broadcast/DPP plan,
+  // whose every broadcast stage and runtime filter is a Spark job.
+  // ---------------------------------------------------------------
+
+  /** The rows of `df` when its optimized plan is a non-streaming
+    * `LocalRelation` and its bigint `id` column is non-null and
+    * unique: the probe is then already in driver memory, the
+    * projections `df` stacks on it fold into the relation
+    * (`ConvertToLocalRelation`), and collecting it runs no Spark job.
+    * None otherwise — the caller takes its distributed path, which
+    * also owns the duplicate-id semantics (per-id grouping) the
+    * row-wise local path cannot give.
+    */
+  def localProbe(df: DataFrame, id: String): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation
+          if !r.isStreaming && df.schema(id).dataType == LongType =>
+        val rows = df.collect()
+        val i = df.schema.fieldIndex(id)
+        val unique = rows.forall(!_.isNullAt(i)) &&
+          rows.iterator.map(_.getLong(i)).toSet.size == rows.length
+        if (unique) Some(rows) else None
+      case _ => None
+    }
+
+  /** The distinct ids of a family's tombstones table visible at read
+    * ceiling `ceil`, collected for a small-probe read's literal
+    * NOT IN filter: one Spark job, none when the manifest names no
+    * tombstones. Tombstones are removal-sized, and the fold policy
+    * ([[tombstoneFoldDue]]) bounds them to a fraction of stored rows.
+    */
+  def deadIds(tombstones: Option[DataFrame], id: String,
+              ceil: Option[Long]): Seq[Long] =
+    tombstones.fold(Seq.empty[Long])(d =>
+      ceil.fold(d)(g => d.filter(col("gen") <= g)).select(col(id))
+        .collect().map(_.getLong(0)).distinct.toSeq)
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.{Par, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Similarity search over the embeddings table (embedding:
   * array<float>, 64-dim, L2-normalized at generation time — verified
@@ -1144,13 +1146,13 @@ object Similarity {
   /** Serve top-k from the at-rest index: route each query to its
     * nProbe nearest centroids (exact integer math — bit-identical to
     * the oracle's routing), then scan ONLY those cells' directories.
-    * The (qid, cell) routing stays a DATAFRAME end-to-end (r14
-    * verdict item 5: a query batch never materializes on the driver)
-    * — it snapshots once and broadcast-joins into the pruned list
-    * scan; the only driver collect is the DISTINCT probed-cell
-    * IN-set, ≤ nCells ints — bounded by index geometry, not by
-    * query count — which becomes the parquet PartitionFilters, so
-    * unprobed cells are never read (LayoutSpec asserts the plan).
+    * Queries read from a table keep the (qid, cell) routing a
+    * DATAFRAME end-to-end (r14 verdict item 5: a query batch never
+    * materializes on the driver) — it snapshots once and
+    * broadcast-joins into the list scan, whose cell IN-set dynamic
+    * partition pruning derives from that broadcast, so unprobed cells
+    * are never read (LayoutSpec asserts the plan). Queries already in
+    * driver memory take the small-probe path of [[ivfQueryIndexVecs]].
     * The broadcasts of the routing and the query vectors assume
     * serving-batch-sized query sets (the standard ANN serving
     * shape); a bulk-scoring job over a corpus-sized query set would
@@ -1216,7 +1218,12 @@ object Similarity {
     * the same routing/pruning/scoring regardless of which table the
     * queries came from; [[graft.operators.Multimodal]] routes decoded
     * image-feature vectors through it, proving the index machinery is
-    * modality-agnostic.
+    * modality-agnostic. Queries already in driver memory (a
+    * LocalRelation with unique ids) take [[serveLocal]], at most four
+    * Spark jobs with the scoring query's; other queries take the
+    * distributed routing below (a traced 8-query serve ran 8 jobs).
+    * Both return the same rows in the same (qid, rnk) order
+    * (ServePathSpec).
     */
   def ivfQueryIndexVecs(spark: SparkSession, idx: String,
                         queries: DataFrame, kNN: Int = 5, nProbe: Int = 2,
@@ -1251,52 +1258,18 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         transform(col("embedding"),
           x => round(x.cast("double") * 1024).cast("long")).as("qq"))
-    // routing: nProbe best cells per query by exact integer cosine
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("s").desc, col("cell").asc)
-    val probes = q.join(broadcast(cents), lit(true))
-      .select(col("qid"), col("cell"),
-        (qdot(col("qq"), col("cv")) /
-          (sqrt(qdot(col("qq"), col("qq"))) * sqrt(qdot(col("cv"), col("cv")))))
-          .as("s"))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cell"))
-    // the routing feeds the scoring join's broadcast AND — via
-    // dynamic partition pruning over that same broadcast (r22) — the
-    // list scan's cell IN-set, so the serve needs NO driver collect:
-    // one driver action end to end where the r21 form paid a
-    // routing-collect job first. The LAZY checkpoint matters for DPP,
-    // not just reuse: AQE's broadcast-reuse check compares the main
-    // join's build child against a freshly compiled plan of the
-    // filtering side, and only an exchange-free build side (a Filter
-    // over the checkpoint's LogicalRDD — the Dedup.lookupPlan shape)
-    // compares equal; with the routing's window/exchange inline the
-    // check fails and the pruning silently degrades to `true`
-    // (measured r22). `cell >= Long.MinValue` keeps every cell (cells
-    // are seeded from vec_ids, which may be negative) but, being a
-    // comparison, marks the build side likely-selective for the DPP
-    // rule; pruned directories are identical to the old literal IN-set
-    // (LayoutSpec asserts the runtime PartitionFilters and the
-    // scanned-file count).
-    val routing = probes.localCheckpoint(eager = false)
-      .filter(col("cell") >= Long.MinValue)
-    // tombstoned (removed) vectors drop before scoring — the dead-id
-    // set is removal-sized and broadcasts into an anti-join over the
-    // pruned list scan; no list file is ever rewritten
-    val prunedLists = spark.read.schema(listsSchema).parquet(s"$ed/lists")
+    // routing score of a (query, cell) pair: exact integer cosine
+    val routeScore = qdot(col("qq"), col("cv")) /
+      (sqrt(qdot(col("qq"), col("qq"))) * sqrt(qdot(col("cv"), col("cv"))))
     // as-of / torn-commit: list rows and tombstones ABOVE the ceiling
     // don't exist from this read's point of view
-    val rawLists = ceil.fold(prunedLists)(g =>
-      prunedLists.filter(col("gen") <= g))
-    val dead = ivfTombstones(spark, idx, m)
-      .map(d => ceil.fold(d)(g => d.filter(col("gen") <= g)))
-    val lists = dead.fold(rawLists)(d =>
-      rawLists.join(broadcast(d.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti"))
+    def atCeil(df: DataFrame): DataFrame =
+      ceil.fold(df)(g => df.filter(col("gen") <= g))
+    val rawLists = atCeil(spark.read.schema(listsSchema).parquet(s"$ed/lists"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    lists.join(broadcast(routing), "cell")
-      .join(broadcast(q.select(col("qid"), col("qv"))), "qid")
+    // scoring + top-k over (qid, qv, vec_id, embedding) candidate rows
+    def topK(scored: DataFrame): DataFrame = scored
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"),
         (ndot(col("qv"), col("embedding")) /
@@ -1305,7 +1278,113 @@ object Similarity {
       .withColumn("rnk", row_number().over(wk).cast("long"))
       .filter(col("rnk") <= kNN)
       .select(col("qid"), col("rnk"), col("cid"), round(col("sim"), 6).as("sim"))
-      .orderBy("qid", "rnk")
+    IndexPolicy.localProbe(q, "qid") match {
+      case Some(qs) =>
+        serveLocal(spark, idx, m, ceil, q.schema, qs, cents, routeScore,
+          rawLists, nProbe, topK)
+      case None =>
+        // routing: nProbe best cells per query
+        val wq = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("qid")).orderBy(col("s").desc, col("cell").asc)
+        val probes = q.join(broadcast(cents), lit(true))
+          .select(col("qid"), col("cell"), routeScore.as("s"))
+          .withColumn("rn", row_number().over(wq)).filter(col("rn") <= nProbe)
+          .select(col("qid"), col("cell"))
+        // the routing feeds the scoring join's broadcast AND — via
+        // dynamic partition pruning over that same broadcast (r22) —
+        // the list scan's cell IN-set, so this path needs NO driver
+        // collect. That is still several Spark jobs (a traced serve ran
+        // 8): AQE runs each broadcast stage and the DPP subquery as
+        // jobs of their own, and the final orderBy samples its range.
+        // The LAZY checkpoint matters for DPP, not just reuse: AQE's
+        // broadcast-reuse check compares the main join's build child
+        // against a freshly compiled plan of the filtering side, and
+        // only an exchange-free build side (a Filter over the
+        // checkpoint's LogicalRDD — the Dedup.lookupPlan shape)
+        // compares equal; with the routing's window/exchange inline the
+        // check fails and the pruning silently degrades to `true`
+        // (measured r22). `cell >= Long.MinValue` keeps every cell
+        // (cells are seeded from vec_ids, which may be negative) but,
+        // being a comparison, marks the build side likely-selective for
+        // the DPP rule; pruned directories are identical to the old
+        // literal IN-set (LayoutSpec asserts the runtime
+        // PartitionFilters and the scanned-file count).
+        val routing = probes.localCheckpoint(eager = false)
+          .filter(col("cell") >= Long.MinValue)
+        // tombstoned (removed) vectors drop before scoring — the
+        // dead-id set is removal-sized and broadcasts into an anti-join
+        // over the pruned list scan; no list file is ever rewritten
+        val lists = ivfTombstones(spark, idx, m).map(atCeil).fold(rawLists)(
+          d => rawLists.join(broadcast(d.select(col("vec_id"))),
+            Seq("vec_id"), "left_anti"))
+        topK(lists.join(broadcast(routing), "cell")
+            .join(broadcast(q.select(col("qid"), col("qv"))), "qid"))
+          .orderBy("qid", "rnk")
+    }
+  }
+
+  /** The small-probe serve: [[ivfQueryIndexVecs]] for queries already
+    * on the driver (a LocalRelation with unique ids), in at most four
+    * Spark jobs. The centroids are collected (one job) and each
+    * query's routing is scored with the same expression over a
+    * LocalRelation of (query, cell) pairs, which folds on the driver;
+    * each query keeps its `nProbe` best cells in the window's order.
+    * Tombstones are collected when the manifest names any. The lists
+    * scan reads only the routed cells, through a literal `cell IN`
+    * partition filter, and meets the routing as a literal array
+    * exploded per list row — a join on `cell` with no broadcast stage.
+    * The top-k window shuffles by qid once; coalescing its output to
+    * one partition lets the (qid, rnk) sort run there, with no
+    * range-sampling job. The result stays a lazy plan, like the
+    * distributed path's.
+    */
+  private def serveLocal(spark: SparkSession, idx: String,
+                         m: IndexPolicy.Manifest, ceil: Option[Long],
+                         qSchema: StructType, qs: Array[Row],
+                         cents: DataFrame, routeScore: Column,
+                         rawLists: DataFrame, nProbe: Int,
+                         topK: DataFrame => DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val cs = cents.collect()
+    val pairs = for (qr <- qs.toSeq; c <- cs.toSeq)
+      yield Row(qr.getAs[Long]("qid"), qr.getAs[Any]("qq"), c.getLong(0),
+        c.get(1))
+    val scored = spark.createDataFrame(pairs.asJava, StructType(Seq(
+        qSchema("qid"), qSchema("qq"),
+        StructField("cell", LongType), cents.schema("cv"))))
+      .select(col("qid"), col("cell"), routeScore.as("s")).collect()
+    // the routing window's order — s DESC NULLS LAST, then cell ASC —
+    // under Spark's double ordering: NaN above every number, and
+    // -0.0 equal to 0.0
+    def sBefore(x: Row, y: Row): Int = (x.isNullAt(2), y.isNullAt(2)) match {
+      case (true, true) => 0
+      case (xNull, yNull) if xNull || yNull => if (xNull) 1 else -1
+      case _ =>
+        val (a, b) = (x.getDouble(2), y.getDouble(2))
+        if (a == b) 0 else java.lang.Double.compare(b, a)
+    }
+    val routed = scored.toSeq.groupBy(_.getLong(0)).values.toSeq.flatMap(
+      _.sortWith { (x, y) =>
+        val c = sBefore(x, y)
+        if (c != 0) c < 0 else x.getLong(1) < y.getLong(1)
+      }.take(nProbe))
+    val qv = qs.map(r => r.getAs[Long]("qid") -> r.getAs[Any]("qv")).toMap
+    val route = GraftSqlShims.column(Literal.create(
+      routed.map(r => Row(r.getLong(0), r.getLong(1), qv(r.getLong(0)))),
+      ArrayType(StructType(Seq(StructField("qid", LongType),
+        StructField("cell", LongType), qSchema("qv"))))))
+    val dead = IndexPolicy.deadIds(ivfTombstones(spark, idx, m), "vec_id",
+      ceil)
+    val lists = rawLists.filter(col("cell").isin(routed.map(_.getLong(1))
+      .distinct: _*))
+    val live =
+      if (dead.isEmpty) lists else lists.filter(!col("vec_id").isin(dead: _*))
+    topK(live
+        .select(col("vec_id"), col("embedding"), explode(
+          filter(route, r => r.getField("cell") === col("cell"))).as("r"))
+        .select(col("r.qid").as("qid"), col("r.qv").as("qv"), col("vec_id"),
+          col("embedding")))
+      .coalesce(1).orderBy("qid", "rnk")
   }
 
   /** Build-then-serve in one registry entry (the kv_roundtrip

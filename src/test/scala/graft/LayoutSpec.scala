@@ -2201,4 +2201,81 @@ class LayoutSpec extends SparkSpec {
     assert(a != b,
       "raw ids colliding after sanitization must get distinct keys")
   }
+
+  test("small-probe lookup and serve prune their index scans through static partition filters") {
+    import graft.operators.{Dedup, Similarity}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-small-probe-prune").toString
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val nd = s"$root/nd"
+    Dedup.neardupWriteIndex(spark,
+      docs.filter(pmod(col("doc_id"), lit(4)) =!= 1), nd)
+    // an indexed document under a fresh id, as an in-memory probe: its
+    // copy in the index makes the docsets scan run too
+    val probe = spark.createDataFrame(docs.filter(col("doc_id") === 4L)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .collect().toSeq.asJava, docs.schema)
+    val iv = s"$root/ivf"
+    val vecs = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    Similarity.ivfWriteIndexVecs(spark, vecs, iv)
+    val query = spark.createDataFrame(vecs.filter(col("vec_id") === 1L)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+      .collect().toSeq.asJava, vecs.schema)
+    // the small-probe lookup runs its scans inside the call: catch
+    // every executed plan from the session's listener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (pairs, served) =
+      try {
+        val p = Dedup.neardupLookup(spark, nd, probe).collect()
+        val s = Similarity.ivfQueryIndexVecs(spark, iv, query)
+        s.collect()
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+        (p, s)
+      } finally spark.listenerManager.unregister(listener)
+    assert(pairs.nonEmpty, "the probe found no near-dup")
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    def files(dir: String): Int = {
+      def walk(d: java.io.File): Seq[java.io.File] =
+        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
+      walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
+    }
+    val all = plans.asScala.toSeq.flatMap(scans) ++
+      scans(served.queryExecution.executedPlan)
+    Seq((nd, "buckets", "pb"), (nd, "docsets", "db"), (iv, "lists", "cell"))
+      .foreach { case (idx, table, partCol) =>
+        val dir = Dedup.resolvedTable(spark, idx, table).get
+        // match by rootPaths: toString truncates long epoch-dir paths
+        val ss = all.filter(_.relation.location.rootPaths
+          .exists(_.toString.contains(table)))
+        assert(ss.nonEmpty, s"no $table scan")
+        ss.foreach { scan =>
+          val scanned = scan.metrics("numFiles").value
+          assert(scanned > 0 && scanned < files(dir),
+            s"$table not file-pruned: scanned $scanned of ${files(dir)}")
+          val filters = scan.partitionFilters.mkString(", ")
+          assert(scan.partitionFilters
+              .exists(_.references.exists(_.name == partCol)),
+            s"$table scan lacks a $partCol partition filter: [$filters]")
+          assert(!filters.contains("dynamicpruning"),
+            s"$table scan filters at runtime, not statically: [$filters]")
+        }
+      }
+  }
 }
