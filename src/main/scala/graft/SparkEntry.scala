@@ -331,6 +331,15 @@ object SparkEntry {
     })
   )
 
+  /** The five rows of [[graft.operators.IndexPolicy.snapshotAsOfDrill]]. */
+  private val snapshotAsOfOracle =
+    """SELECT unnest([
+      |  'snap_expired_fails_fast', 'snap_expiry_reclaims_dirs',
+      |  'snap_live_moved_on', 'snap_retained_replays_after_rewrite',
+      |  'snap_rewrite_kills_inplace_asof']) AS metric,
+      |  TRUE AS ok
+      |ORDER BY metric""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "wordcount_alpha" ->
       """SELECT word, count(*) AS cnt
@@ -3669,34 +3678,13 @@ object SparkEntry {
         |  'rd_nd_torn_serves_committed']) AS metric,
         |  TRUE AS ok
         |ORDER BY metric""".stripMargin,
-    // snapshot time travel: a retained manifest snapshot replays its
-    // ranking bit-identically across a history-destroying rewrite;
-    // expiry lets the next sweep reclaim what only it referenced
-    "bm25_snapshot_asof" ->
-      """SELECT unnest([
-        |  'snap_expired_fails_fast', 'snap_expiry_reclaims_dirs',
-        |  'snap_live_moved_on', 'snap_retained_replays_after_rewrite',
-        |  'snap_rewrite_kills_inplace_asof']) AS metric,
-        |  TRUE AS ok
-        |ORDER BY metric""".stripMargin,
-    // the near-dup and IVF twins of the same snapshot-log contract:
-    // a retained snapshot replays flagged pairs / rankings
-    // bit-identically across the family's history-destroying rewrite
-    // (compact / retrain), and expiry lets the next sweep reclaim it
-    "neardup_snapshot_asof" ->
-      """SELECT unnest([
-        |  'snap_expired_fails_fast', 'snap_expiry_reclaims_dirs',
-        |  'snap_live_moved_on', 'snap_retained_replays_after_rewrite',
-        |  'snap_rewrite_kills_inplace_asof']) AS metric,
-        |  TRUE AS ok
-        |ORDER BY metric""".stripMargin,
-    "ivf_snapshot_asof" ->
-      """SELECT unnest([
-        |  'snap_expired_fails_fast', 'snap_expiry_reclaims_dirs',
-        |  'snap_live_moved_on', 'snap_retained_replays_after_rewrite',
-        |  'snap_rewrite_kills_inplace_asof']) AS metric,
-        |  TRUE AS ok
-        |ORDER BY metric""".stripMargin,
+    // snapshot time travel, one contract per family: a retained
+    // manifest snapshot replays its serve bit-identically across the
+    // family's history-destroying rewrite (compact / retrain); expiry
+    // lets the next sweep reclaim what only it referenced
+    "bm25_snapshot_asof" -> snapshotAsOfOracle,
+    "neardup_snapshot_asof" -> snapshotAsOfOracle,
+    "ivf_snapshot_asof" -> snapshotAsOfOracle,
     // mid-estate crash: a maintenance pass dying with one family's
     // fold mid-flight (injected) leaves an estate the next plain pass
     // converges — the composition of per-family crash safety, drilled

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Par, Tables}
+import graft.{Fixtures, Par, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -175,30 +175,27 @@ object Curation {
     val (v1, v2) = TextAnalysis.snapshotFixture(spark, dir)
     val (newD, oldD) = TextAnalysis.snapshotDelta(v1, v2)
     val added = newD.filter(pmod(col("doc_id"), lit(30)) === 0)
-    val ndIdx = ingestNdCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_ingest_nd_${ingestToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      Dedup.neardupWriteIndex(spark, v1, p)
-      p
-    })
-    val pairs = Dedup.neardupLookup(spark, ndIdx, added, minJ)
+    val pairs = Dedup.neardupLookup(spark, ingestNd(spark, dir, v1), added,
+      minJ)
     // pairs are (a < b): the added member to reject is b when b is
     // added (covers v1<added and added<added first-wins), else a
     val rejected = pairs.select(
       when(pmod(col("b"), lit(30)) === 0, col("b"))
         .otherwise(col("a")).as("doc_id")).distinct()
     val admitted = newD.join(rejected, Seq("doc_id"), "left_anti")
-    val idx = s"/tmp/graft_ingest_bm25_${ingestToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    TextAnalysis.copyIndex(spark, TextAnalysis.v1BaseIndex(spark, dir), idx)
+    val idx = Fixtures.copyOf(spark, TextAnalysis.v1BaseIndex(spark, dir),
+      "ingest_bm25", dir)
     TextAnalysis.bm25RefreshIndex(spark, idx, admitted, oldD)
     TextAnalysis.bm25QueryIndex(spark, idx, terms, k)
   }
 
-  private lazy val ingestToken =
-    java.util.UUID.randomUUID().toString.take(8)
-  private val ingestNdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The v1 near-dup index both ingest funnels gate against. */
+  private def ingestNd(spark: SparkSession, dir: String,
+                       v1: DataFrame): String = ingestNdCache(dir) { p =>
+    Dedup.neardupWriteIndex(spark, v1, p)
+  }
+
+  private val ingestNdCache = new Fixtures.Index("ingest_nd")
 
   /** TWO chained funnel rounds — the day-2 claim [[ingestPipeline]]
     * (one round) leaves open (r13 verdict item 4): after round 1's
@@ -230,17 +227,11 @@ object Curation {
                       terms: Seq[String] = Seq("data", "model", "system"),
                       k: Int = 20, minJ: Double = 0.2): DataFrame = {
     val (v1, v2) = TextAnalysis.snapshotFixture(spark, dir)
-    val (ndIdx, bmBase) = ingest2Cache.computeIfAbsent(dir, _ => {
+    val (ndIdx, bmBase) = ingest2Cache(dir) {
       val (newD, oldD) = TextAnalysis.snapshotDelta(v1, v2)
       val added1 = newD.filter(pmod(col("doc_id"), lit(30)) === 0)
-      val nd = s"/tmp/graft_ingest2_nd_${ingestToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      TextAnalysis.copyIndex(spark, ingestNdCache.computeIfAbsent(dir, _ => {
-        val p = s"/tmp/graft_ingest_nd_${ingestToken}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")
-        Dedup.neardupWriteIndex(spark, v1, p)
-        p
-      }), nd)
+      val nd = Fixtures.copyOf(spark, ingestNd(spark, dir, v1),
+        "ingest2_nd", dir)
       val pairs1 = Dedup.neardupLookup(spark, nd, added1, minJ)
       // pairs1 is already materialized (neardupLookup returns an eager
       // localCheckpoint, or a LocalRelation for an in-memory probe), so
@@ -256,13 +247,12 @@ object Curation {
       // survivors enter the near-dup index — round 2's reference set
       Dedup.neardupCheckIn(spark, nd,
         added1.join(rejected1, Seq("doc_id"), "left_anti"), minJ)
-      val bm = s"/tmp/graft_ingest2_bm_${ingestToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      TextAnalysis.copyIndex(spark, TextAnalysis.v1BaseIndex(spark, dir), bm)
+      val bm = Fixtures.copyOf(spark, TextAnalysis.v1BaseIndex(spark, dir),
+        "ingest2_bm", dir)
       TextAnalysis.bm25RefreshIndex(spark, bm,
         newD.join(rejected1, Seq("doc_id"), "left_anti"), oldD)
       (nd, bm)
-    })
+    }
     // round-2 delta: exact copies of v2 docs ≡ 0 mod 15 (re-tagged)
     // and token-reversed "novel" texts of docs ≡ 3 mod 40
     val added2 = v2.filter(pmod(col("doc_id"), lit(15)) === 0)
@@ -276,15 +266,12 @@ object Curation {
     // first-wins in one rule
     val rejected2 = pairs2.select(col("b").as("doc_id")).distinct()
     val admitted2 = added2.join(rejected2, Seq("doc_id"), "left_anti")
-    val idx = s"/tmp/graft_ingest2_run_${ingestToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    TextAnalysis.copyIndex(spark, bmBase, idx)
+    val idx = Fixtures.copyOf(spark, bmBase, "ingest2_run", dir)
     TextAnalysis.bm25RefreshIndex(spark, idx, admitted2, v2.limit(0))
     TextAnalysis.bm25QueryIndex(spark, idx, terms, k)
   }
 
-  private val ingest2Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val ingest2Cache = new Fixtures.Memo[(String, String)]
 
   /** Fold-trigger CONTRACT across all three index families (r13
     * stretch item 8): the lifecycles can fold (bm25Compact /
@@ -318,35 +305,33 @@ object Curation {
     */
   private def foldFixture(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Boolean, Boolean, String, String, String) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 500 && pmod(col("doc_id"), lit(10)) < 3)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 200 && pmod(col("vec_id"), lit(10)) < 3)
-    val (docsEmpty, vecsEmpty) = foldEmptyCache.computeIfAbsent(dir, _ =>
+    val (docsEmpty, vecsEmpty) = foldEmptyCache(dir)(
       (docs.isEmpty, vecs.isEmpty))
     val (bm, nd, iv) =
       if (docsEmpty && vecsEmpty) ("", "", "")
-      else foldBaseCache.computeIfAbsent(dir, _ => {
-        val bm = s"/tmp/graft_fold_bmbase_${ingestToken}_$tag"
-        val nd = s"/tmp/graft_fold_ndbase_${ingestToken}_$tag"
+      else foldBaseCache(dir) {
+        val bm = Fixtures.path("fold_bmbase", dir)
+        val nd = Fixtures.path("fold_ndbase", dir)
         if (!docsEmpty) {
           TextAnalysis.bm25WriteIndexDocs(spark, docs, bm)
           Dedup.neardupWriteIndex(spark, docs, nd)
         }
-        val iv = s"/tmp/graft_fold_ivfbase_${ingestToken}_$tag"
+        val iv = Fixtures.path("fold_ivfbase", dir)
         if (!vecsEmpty) Similarity.ivfWriteIndexVecs(spark, vecs, iv)
         (bm, nd, iv)
-      })
+      }
     (docs, vecs, docsEmpty, vecsEmpty, bm, nd, iv)
   }
 
   def foldTriggerContract(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, bmBase, ndBase, ivfBase) =
       foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
@@ -365,8 +350,7 @@ object Curation {
     // budget and must not change what the index serves.
     def bm25Section(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val bm = s"/tmp/graft_fold_bm_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, bmBase, bm)
+      val bm = Fixtures.copyOf(spark, bmBase, "fold_bm", dir)
       val terms = Seq("data", "model", "system")
       rows += ("bm25_quiet_on_pristine" ->
         !TextAnalysis.bm25FoldDue(spark, bm, maxSegments = 0))
@@ -391,8 +375,7 @@ object Curation {
     // ---- near-dup: tombstone-fraction budget ----
     def ndSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val nd = s"/tmp/graft_fold_nd_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndBase, nd)
+      val nd = Fixtures.copyOf(spark, ndBase, "fold_nd", dir)
       rows += ("nd_quiet_on_pristine" ->
         !Dedup.neardupFoldDue(spark, nd, maxFrac = 0.1))
       Dedup.neardupRemove(spark, nd,
@@ -415,8 +398,7 @@ object Curation {
     // ---- IVF: tombstone-fraction budget; fold = retrain ----
     def ivfSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val iv = s"/tmp/graft_fold_ivf_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ivfBase, iv)
+      val iv = Fixtures.copyOf(spark, ivfBase, "fold_ivf", dir)
       rows += ("ivf_quiet_on_pristine" ->
         !Similarity.ivfFoldDue(spark, iv, maxFrac = 0.1))
       Similarity.ivfRemove(spark, iv,
@@ -425,7 +407,7 @@ object Curation {
         Similarity.ivfFoldDue(spark, iv, maxFrac = 0.1))
       // pristine serve is invocation-invariant (the base is never
       // mutated) — collected once per JVM per corpus dir
-      val servedPristine = foldPristineServeCache.computeIfAbsent(dir, _ =>
+      val servedPristine = foldPristineServeCache(dir)(
         timedServe("ivf serve pristine")(
           Similarity.ivfQueryIndex(spark, dir, ivfBase).collect().toSeq))
       val servedRemoved = timedServe("ivf serve pre-fold")(
@@ -462,14 +444,13 @@ object Curation {
     */
   def indexHealth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, bmBase, ndBase, ivfBase) =
       foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
       return Seq.empty[(String, Long)].toDF("metric", "value")
-    val (bm, nd, iv) = healthCache.computeIfAbsent(dir, _ => {
-      val bm = s"/tmp/graft_health_bm_${ingestToken}_$tag"
-      val nd = s"/tmp/graft_health_nd_${ingestToken}_$tag"
+    val (bm, nd, iv) = healthCache(dir) {
+      val bm = Fixtures.path("health_bm", dir)
+      val nd = Fixtures.path("health_nd", dir)
       if (!docsEmpty) {
         TextAnalysis.copyIndex(spark, bmBase, bm)
         TextAnalysis.bm25AppendSegment(spark, bm,
@@ -484,7 +465,7 @@ object Curation {
         Dedup.neardupRemove(spark, nd,
           docs.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id")))
       }
-      val iv = s"/tmp/graft_health_ivf_${ingestToken}_$tag"
+      val iv = Fixtures.path("health_ivf", dir)
       if (!vecsEmpty) {
         TextAnalysis.copyIndex(spark, ivfBase, iv)
         Similarity.ivfAppendVectors(spark, iv,
@@ -495,7 +476,7 @@ object Curation {
           vecs.filter(pmod(col("vec_id"), lit(5)) === 0).select(col("vec_id")))
       }
       (bm, nd, iv)
-    })
+    }
     val rows =
       (if (docsEmpty) Seq.empty
        else TextAnalysis.bm25Health(spark, bm, maxSegments = 0) ++
@@ -536,7 +517,6 @@ object Curation {
     */
   def maintainEstate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, _, _, _) =
       foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
@@ -544,8 +524,7 @@ object Curation {
     val (bmT, ndT, ivT) = estateTemplates(spark, dir)
     def bmSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val bm = s"/tmp/graft_estate_bm_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, bmT, bm)
+      val bm = Fixtures.copyOf(spark, bmT, "estate_bm", dir)
       val terms = Seq("data", "model", "system")
       val h0 = TextAnalysis.bm25Health(spark, bm).toMap // default budget
       rows += ("est_bm25_not_due_before" -> (h0("bm25_fold_due") == 0L))
@@ -565,8 +544,7 @@ object Curation {
     }
     def ndSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val nd = s"/tmp/graft_estate_nd_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndT, nd)
+      val nd = Fixtures.copyOf(spark, ndT, "estate_nd", dir)
       val probe = docs.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))
         .localCheckpoint()
@@ -582,8 +560,7 @@ object Curation {
     }
     def ivfSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val iv = s"/tmp/graft_estate_ivf_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ivT, iv)
+      val iv = Fixtures.copyOf(spark, ivT, "estate_ivf", dir)
       val live = vecs.filter(pmod(col("vec_id"), lit(5)) =!= 0)
         .select(col("vec_id"), col("embedding"))
       val h0 = Similarity.ivfHealth(spark, iv).toMap
@@ -620,12 +597,11 @@ object Curation {
     */
   private def estateTemplates(spark: SparkSession,
                               dir: String): (String, String, String) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, bmBase, ndBase, ivfBase) =
       foldFixture(spark, dir)
-    estateBaseCache.computeIfAbsent(dir, _ => {
-      val bmT = s"/tmp/graft_estate_bmt_${ingestToken}_$tag"
-      val ndT = s"/tmp/graft_estate_ndt_${ingestToken}_$tag"
+    estateBaseCache(dir) {
+      val bmT = Fixtures.path("estate_bmt", dir)
+      val ndT = Fixtures.path("estate_ndt", dir)
       // 1000000-stride offsets per re-tag wave (r16 ADVICE): each
       // wave's ids must be disjoint from any corpus doc_id domain
       // (ScaleUp corpora reach ~1e5) and from every other wave, or
@@ -644,20 +620,19 @@ object Curation {
         Dedup.neardupRemove(spark, ndT,
           docs.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id")))
       }
-      val ivT = s"/tmp/graft_estate_ivt_${ingestToken}_$tag"
+      val ivT = Fixtures.path("estate_ivt", dir)
       if (!vecsEmpty) {
         TextAnalysis.copyIndex(spark, ivfBase, ivT)
         Similarity.ivfRemove(spark, ivT,
           vecs.filter(pmod(col("vec_id"), lit(5)) === 0).select(col("vec_id")))
       }
       (bmT, ndT, ivT)
-    })
+    }
   }
 
-  private val estateBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
+  private val estateBaseCache = new Fixtures.Memo[(String, String, String)]
   private val estateIvfRefCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.sql.Row]]()
+    new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
 
   /** Fresh-build IVF reference over the estate's LIVE vector set
     * (stored − removed), built + served once per JVM per corpus dir —
@@ -667,12 +642,11 @@ object Curation {
     */
   private def estateIvfRef(spark: SparkSession, dir: String,
                            live: DataFrame): Seq[org.apache.spark.sql.Row] =
-    estateIvfRefCache.computeIfAbsent(dir, _ => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val p = s"/tmp/graft_estate_ivfref_${ingestToken}_$tag"
+    estateIvfRefCache(dir) {
+      val p = Fixtures.path("estate_ivfref", dir)
       Similarity.ivfWriteIndexVecs(spark, live, p)
       Similarity.ivfQueryIndex(spark, dir, p).collect().toSeq
-    })
+    }
 
   /** RECOVERY DRILL (r16 verdict #3; crash production rewired through
     * the r17-verdict-#5 fault-injection hooks): per family, on copies
@@ -710,7 +684,6 @@ object Curation {
     */
   def recoveryDrill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, _, _, _) = foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
       return Seq.empty[(String, Boolean)].toDF("metric", "ok")
@@ -727,12 +700,11 @@ object Curation {
     // (crash → torn reads → repair → verify), not baseline replays
     def bmSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val bm = s"/tmp/graft_drill_bm_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, bmT, bm)
+      val bm = Fixtures.copyOf(spark, bmT, "drill_bm", dir)
       val terms = Seq("data", "model", "system")
       def serve() =
         TextAnalysis.bm25QueryIndex(spark, bm, terms, 20).collect().toSeq
-      val s0 = drillBmCapCache.computeIfAbsent(dir, _ =>
+      val s0 = drillBmCapCache(dir)(
         TextAnalysis.bm25QueryIndex(spark, bmT, terms, 20).collect().toSeq)
       // the refresh delta: re-tagged ids (the 1000000-stride
       // convention) with a NARROW synthetic vocabulary (the
@@ -782,15 +754,14 @@ object Curation {
       // and provably changes the serve (live-copy capture, warm runs
       // re-prove with the fresh serve)
       TextAnalysis.bm25RefreshIndex(spark, bm, delta, none)
-      val s1 = drillBmS1Cache.computeIfAbsent(dir, _ => serve())
+      val s1 = drillBmS1Cache(dir)(serve())
       rows += ("rd_bm25_replayed_mutation_lands" ->
         (s1 != s0 && serve() == s1))
       rows.toSeq
     }
     def ndSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val nd = s"/tmp/graft_drill_nd_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndT, nd)
+      val nd = Fixtures.copyOf(spark, ndT, "drill_nd", dir)
       // lazy: the first lookup's own collect materializes the probe
       // in the same job (r21 fusion; strictly sequential consumers)
       val probe = manifestProbe(docs).localCheckpoint(eager = false)
@@ -801,7 +772,7 @@ object Curation {
       // the pins in both directions
       val kill = docs.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"))
-      val l0 = drillNdCapCache.computeIfAbsent(dir, _ =>
+      val l0 = drillNdCapCache(dir)(
         Dedup.neardupLookup(spark, ndT, probe).collect().toSeq)
       // REAL mid-flight death: tombstone rows land, the commit swing
       // never runs
@@ -816,7 +787,7 @@ object Curation {
       // mutable again: the replayed removal COMMITS this time (the
       // compact reset the timeline, so its committed generation is 1)
       Dedup.neardupRemove(spark, nd, kill)
-      val l1 = drillNdL1Cache.computeIfAbsent(dir, _ => lookup())
+      val l1 = drillNdL1Cache(dir)(lookup())
       rows += ("rd_nd_mutation_real" -> (l1 != l0 &&
         IndexPolicy.committedOf(IndexPolicy.manifestOf(spark, nd)) == 1L))
       rows += ("rd_nd_mutable_after_repair" -> (lookup() == l1))
@@ -824,15 +795,14 @@ object Curation {
     }
     def ivfSection(): Seq[(String, Boolean)] = {
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val iv = s"/tmp/graft_drill_ivf_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ivT, iv)
+      val iv = Fixtures.copyOf(spark, ivT, "drill_ivf", dir)
       def serve() =
         Similarity.ivfQueryIndex(spark, dir, iv).collect().toSeq
       // the crashing mutation: exact duplicates of the query vectors
       // — guaranteed rank-1 leaks if a torn row ever serves
       val dups = vecs.filter(col("vec_id") < 8)
         .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
-      val s0 = drillIvCapCache.computeIfAbsent(dir, _ =>
+      val s0 = drillIvCapCache(dir)(
         Similarity.ivfQueryIndex(spark, dir, ivT).collect().toSeq)
       // REAL mid-flight death: list rows land, the commit never runs
       IndexPolicy.armCrash(iv, "after-rows")
@@ -851,7 +821,7 @@ object Curation {
       // timeline — committed generation 1) and its rank-1 leaks
       // provably change the serve
       Similarity.ivfAppendVectors(spark, iv, dups)
-      val s1 = drillIvS1Cache.computeIfAbsent(dir, _ => serve())
+      val s1 = drillIvS1Cache(dir)(serve())
       rows += ("rd_ivf_mutation_real" -> (s1 != ref &&
         IndexPolicy.committedOf(IndexPolicy.manifestOf(spark, iv)) == 1L))
       rows += ("rd_ivf_mutable_after_repair" -> (serve() == s1))
@@ -896,7 +866,6 @@ object Curation {
     */
   def estateCrashDrill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, _, _, _) = foldFixture(spark, dir)
     if (docsEmpty || vecsEmpty)
       return Seq.empty[(String, Boolean)].toDF("metric", "ok")
@@ -909,7 +878,7 @@ object Curation {
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
     val probe = manifestProbe(docs).localCheckpoint()
-    val l0 = drillNdCapCache.computeIfAbsent(dir, _ =>
+    val l0 = drillNdCapCache(dir)(
       Dedup.neardupLookup(spark, ndT, probe).collect().toSeq)
     val live = vecs.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       .select(col("vec_id"), col("embedding"))
@@ -920,17 +889,12 @@ object Curation {
       val ep = new Path(s"$idx/ep")
       val onDisk = if (!fs.exists(ep)) Set.empty[String]
         else fs.listStatus(ep).map(_.getPath.getName).toSet
-      val refs = IndexPolicy.EpochPat.findAllIn(IndexPolicy
-        .manifestOf(spark, idx).toSeq
-        .map { case (k, v) => s"$k=$v" }.mkString("\n")).toSet
-      onDisk -- refs
+      onDisk -- IndexPolicy.refTokens(IndexPolicy.manifestOf(spark, idx))
     }
     // ---- direction 1 (the original): nd fold crashes, IVF folds ----
     def ndCrashSide(): Seq[(String, Boolean)] = {
-      val nd = s"/tmp/graft_ecd_nd_${ingestToken}_$tag"
-      val iv = s"/tmp/graft_ecd_iv_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndT, nd)
-      TextAnalysis.copyIndex(spark, ivT, iv)
+      val nd = Fixtures.copyOf(spark, ndT, "ecd_nd", dir)
+      val iv = Fixtures.copyOf(spark, ivT, "ecd_iv", dir)
       def lookup() = Dedup.neardupLookup(spark, nd, probe).collect().toSeq
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
       rows += ("ecd_nd_due_before" ->
@@ -973,17 +937,15 @@ object Curation {
     }
     // ---- direction 2 (mirrored): IVF retrain crashes, nd folds ----
     def ivCrashSide(): Seq[(String, Boolean)] = {
-      val nd = s"/tmp/graft_ecd2_nd_${ingestToken}_$tag"
-      val iv = s"/tmp/graft_ecd2_iv_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndT, nd)
-      TextAnalysis.copyIndex(spark, ivT, iv)
+      val nd = Fixtures.copyOf(spark, ndT, "ecd2_nd", dir)
+      val iv = Fixtures.copyOf(spark, ivT, "ecd2_iv", dir)
       def lookup() = Dedup.neardupLookup(spark, nd, probe).collect().toSeq
       def ivServe() =
         Similarity.ivfQueryIndex(spark, dir, iv).collect().toSeq
       val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
       // the pre-pass serve on the mutated template — the ranking the
       // crashed retrain must leave intact (cached once per JVM)
-      val s0 = drillIvTCapCache.computeIfAbsent(dir, _ =>
+      val s0 = drillIvTCapCache(dir)(
         Similarity.ivfQueryIndex(spark, dir, ivT).collect().toSeq)
       rows += ("ecd2_both_due_before" ->
         (Dedup.neardupHealth(spark, nd).toMap.apply("nd_fold_due") == 1L &&
@@ -1025,8 +987,7 @@ object Curation {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  private val drillIvTCapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
+  private val drillIvTCapCache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
 
   /** The MANIFEST estate: copies of the [[estateTemplates]] whose
     * generations a training-run manifest pins, with the at-manifest
@@ -1055,13 +1016,12 @@ object Curation {
 
   private def manifestEstate(spark: SparkSession,
                              dir: String): ManifestEstate = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, _, _, _) = foldFixture(spark, dir)
     val (bmT, ndT, ivT) = estateTemplates(spark, dir)
-    manifestEstateCache.computeIfAbsent(dir, _ => {
-      val bm = s"/tmp/graft_manifest_bm_${ingestToken}_$tag"
-      val nd = s"/tmp/graft_manifest_nd_${ingestToken}_$tag"
-      val iv = s"/tmp/graft_manifest_ivf_${ingestToken}_$tag"
+    manifestEstateCache(dir) {
+      val bm = Fixtures.path("manifest_bm", dir)
+      val nd = Fixtures.path("manifest_nd", dir)
+      val iv = Fixtures.path("manifest_ivf", dir)
       var (bmGen, ndGen, ivGen) = (-1L, -1L, -1L)
       var bmServe, ndPairs, ivServe = Seq.empty[org.apache.spark.sql.Row]
       if (!docsEmpty) {
@@ -1100,11 +1060,10 @@ object Curation {
       }
       ManifestEstate(bm, nd, iv, bmGen, ndGen, ivGen,
         bmServe, ndPairs, ivServe)
-    })
+    }
   }
 
-  private val manifestEstateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ManifestEstate]()
+  private val manifestEstateCache = new Fixtures.Memo[ManifestEstate]
 
   /** TRAIN-READ composite (r16 verdict stretch #6): the dataloader-
     * shaped CONSUMER of [[manifestPinned]], driven entirely by the
@@ -1128,17 +1087,14 @@ object Curation {
     */
   def trainRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, _, docsEmpty, vecsEmpty, _, _, _) = foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
       return Seq.empty[(String, Boolean)].toDF("metric", "ok")
     val est = manifestEstate(spark, dir)
-    val art = trainReadArtifactCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_trainread_${ingestToken}_$tag"
+    val art = trainReadArtifactCache(dir) { p =>
       manifestPinned(spark, dir).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-      p
-    })
+    }
     val man = spark.read.schema(
       "kind string, key string, n_docs bigint, total_tokens bigint, " +
         "first_doc bigint, last_doc bigint, gen bigint").parquet(art)
@@ -1187,22 +1143,15 @@ object Curation {
       .flatten.toDF("metric", "ok").orderBy("metric")
   }
 
-  private val trainReadArtifactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val trainReadArtifactCache = new Fixtures.Index("trainread")
   // drill reference captures (plain data, never live DataFrames — the
   // bench unpersists all RDDs between queries)
-  private val drillBmCapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-  private val drillBmS1Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-  private val drillNdCapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-  private val drillNdL1Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-  private val drillIvCapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-  private val drillIvS1Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
+  private val drillBmCapCache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
+  private val drillBmS1Cache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
+  private val drillNdCapCache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
+  private val drillNdL1Cache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
+  private val drillIvCapCache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
+  private val drillIvS1Cache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
 
   /** [[trainManifest]] extended with the index estate's generations
     * (r15 verdict missing #2): the shard manifest a dataloader
@@ -1321,18 +1270,16 @@ object Curation {
       ndPairs: Seq[org.apache.spark.sql.Row],
       ivServe: Seq[org.apache.spark.sql.Row])
 
-  private val snapEstateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SnapEstate]()
+  private val snapEstateCache = new Fixtures.Memo[SnapEstate]
 
   private def snapEstate(spark: SparkSession, dir: String): SnapEstate = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, _, _, _, _, _) = foldFixture(spark, dir)
     val (bmT, ndT, ivT) = estateTemplates(spark, dir)
-    snapEstateCache.computeIfAbsent(dir, _ => {
-      val bm = s"/tmp/graft_esm_bm_${ingestToken}_$tag"
-      val nd = s"/tmp/graft_esm_nd_${ingestToken}_$tag"
-      val iv = s"/tmp/graft_esm_iv_${ingestToken}_$tag"
-      val art = s"/tmp/graft_esm_art_${ingestToken}_$tag"
+    snapEstateCache(dir) {
+      val bm = Fixtures.path("esm_bm", dir)
+      val nd = Fixtures.path("esm_nd", dir)
+      val iv = Fixtures.path("esm_iv", dir)
+      val art = Fixtures.path("esm_art", dir)
       val none = docs.limit(0)
       // narrow-vocabulary synthetic deltas (the bm25SnapshotAsOf
       // discipline): appended terms live under one letter bucket, so
@@ -1437,7 +1384,7 @@ object Curation {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(art)
       SnapEstate(bm, nd, iv, art, bmDecoy, ndDecoy, ivDecoy,
         bmDecoyRefs, ndDecoyRefs, ivDecoyRefs, bmServe, ndPairs, ivServe)
-    })
+    }
   }
 
   /** ESTATE-LEVEL SNAPSHOT MANIFEST (r18 verdict missing #4 — the
@@ -1469,13 +1416,11 @@ object Curation {
     // snapshot into bases every other estate row copies, pinning their
     // original epochs against every sweep (the r18 v1-base lesson)
     estateTemplates(spark, dir)
-    val priorKeep = spark.conf.getOption(IndexPolicy.SnapKeepConf)
-    spark.conf.set(IndexPolicy.SnapKeepConf, "10")
     // fixed-size fixture; narrow the shuffle width across the row's
     // many tiny serve/mutation jobs (the indexIngestContract pattern)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    try IndexPolicy.withSnapshotsKept(spark, 10) {
       val est = snapEstate(spark, dir)
       val pins = spark.read.schema("family string, snap bigint")
         .parquet(est.art).collect()
@@ -1518,25 +1463,12 @@ object Curation {
       rows += ("esm_expired_decoy_fails_fast" ->
         (failsFast(est.bm, est.bmDecoy) && failsFast(est.nd, est.ndDecoy) &&
           failsFast(est.iv, est.ivDecoy)))
-      def reclaimed(idx: String, decoyRefs: Set[String]): Boolean = {
-        val dead = decoyRefs -- IndexPolicy.liveRefTokens(spark, idx)
-        val fs = new org.apache.hadoop.fs.Path(idx)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        dead.nonEmpty && dead.forall(t => !fs.exists(
-          new org.apache.hadoop.fs.Path(IndexPolicy.epochDir(idx, t))))
-      }
       rows += ("esm_expiry_reclaimed_dirs" ->
-        (reclaimed(est.bm, est.bmDecoyRefs) &&
-          reclaimed(est.nd, est.ndDecoyRefs) &&
-          reclaimed(est.iv, est.ivDecoyRefs)))
+        (IndexPolicy.refsReclaimed(spark, est.bm, est.bmDecoyRefs) &&
+          IndexPolicy.refsReclaimed(spark, est.nd, est.ndDecoyRefs) &&
+          IndexPolicy.refsReclaimed(spark, est.iv, est.ivDecoyRefs)))
       rows.toSeq.toDF("metric", "ok").orderBy("metric")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      priorKeep match {
-        case Some(v) => spark.conf.set(IndexPolicy.SnapKeepConf, v)
-        case None => spark.conf.unset(IndexPolicy.SnapKeepConf)
-      }
-    }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   /** One micro-batch of the COMPOSED estate stream — the foreachBatch
@@ -1619,7 +1551,6 @@ object Curation {
     */
   def estateStreamIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (docs, vecs, docsEmpty, vecsEmpty, bmBase, ndBase, ivfBase) =
       foldFixture(spark, dir)
     if (docsEmpty || vecsEmpty)
@@ -1648,13 +1579,10 @@ object Curation {
       // per corpus dir; its results prove the happy path and its
       // captured end-state is the reference the drilled estate must
       // converge to
-      val twin = estateStreamTwinCache.computeIfAbsent(dir, _ => {
-        val nd = s"/tmp/graft_esi_twin_nd_${ingestToken}_$tag"
-        val bm = s"/tmp/graft_esi_twin_bm_${ingestToken}_$tag"
-        val iv = s"/tmp/graft_esi_twin_iv_${ingestToken}_$tag"
-        TextAnalysis.copyIndex(spark, ndBase, nd)
-        TextAnalysis.copyIndex(spark, bmBase, bm)
-        TextAnalysis.copyIndex(spark, ivfBase, iv)
+      val twin = estateStreamTwinCache(dir) {
+        val nd = Fixtures.copyOf(spark, ndBase, "esi_twin_nd", dir)
+        val bm = Fixtures.copyOf(spark, bmBase, "esi_twin_bm", dir)
+        val iv = Fixtures.copyOf(spark, ivfBase, "esi_twin_iv", dir)
         val r = estateIngestBatch(spark, nd, bm, iv, dBatch, vBatch, 0L, app)
         EsiTwin(r,
           Dedup.neardupIndexedIds(spark, nd)
@@ -1663,13 +1591,10 @@ object Curation {
           TextAnalysis.bm25QueryIndex(spark, bm, manifestTerms, 20)
             .collect().toSeq,
           Similarity.ivfQueryIndex(spark, dir, iv).collect().toSeq)
-      })
-      val nd = s"/tmp/graft_esi_nd_${ingestToken}_$tag"
-      val bm = s"/tmp/graft_esi_bm_${ingestToken}_$tag"
-      val iv = s"/tmp/graft_esi_iv_${ingestToken}_$tag"
-      TextAnalysis.copyIndex(spark, ndBase, nd)
-      TextAnalysis.copyIndex(spark, bmBase, bm)
-      TextAnalysis.copyIndex(spark, ivfBase, iv)
+      }
+      val nd = Fixtures.copyOf(spark, ndBase, "esi_nd", dir)
+      val bm = Fixtures.copyOf(spark, bmBase, "esi_bm", dir)
+      val iv = Fixtures.copyOf(spark, ivfBase, "esi_iv", dir)
       def ingest() = estateIngestBatch(spark, nd, bm, iv, dBatch, vBatch,
         0L, app)
       def wm(idx: String): Long = IndexPolicy.manifestOf(spark, idx)
@@ -1728,18 +1653,14 @@ object Curation {
                              bmServe: Seq[org.apache.spark.sql.Row],
                              ivServe: Seq[org.apache.spark.sql.Row])
 
-  private val estateStreamTwinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, EsiTwin]()
+  private val estateStreamTwinCache = new Fixtures.Memo[EsiTwin]
 
-  private val healthCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
+  private val healthCache = new Fixtures.Memo[(String, String, String)]
 
-  private val foldEmptyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Boolean)]()
-  private val foldBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
+  private val foldEmptyCache = new Fixtures.Memo[(Boolean, Boolean)]
+  private val foldBaseCache = new Fixtures.Memo[(String, String, String)]
   private val foldPristineServeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.sql.Row]]()
+    new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
 
   def benchmarkContamination(spark: SparkSession, dir: String,
                              benchMax: Long = 20, n: Int = 3): DataFrame = {

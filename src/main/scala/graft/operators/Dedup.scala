@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Par, Tables}
+import graft.{Fixtures, Par, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -493,7 +493,6 @@ object Dedup {
     "doc_id bigint, bucket string, band int, pb int, gen bigint"
   private val docsetsSchema =
     "doc_id bigint, dset array<bigint>, sz int, db int, gen bigint"
-  private val ndTombSchema = "doc_id bigint, gen bigint"
   // 8 hash buckets each at fixture scale (r15: 16 → 8 halved the
   // per-check-in partitioned-write + fixture-copy file counts with
   // identical pruning semantics; a 100 TB deployment raises these —
@@ -513,6 +512,8 @@ object Dedup {
       "n" -> n.toLong, "k" -> k.toLong, "bands" -> bands.toLong)
   private val ndLayoutBase: Seq[(String, Long)] =
     Seq("v" -> 1L, "nPb" -> nPb.toLong, "nDb" -> nDb.toLong)
+  private val ndTombs = IndexPolicy.Tombstoned("doc_id", "docsets",
+    docsetsSchema, ndLayoutBase, "nd")
   private def pbOf(bucket: org.apache.spark.sql.Column) =
     pmod(xxhash64(bucket), lit(nPb)).cast("int")
   private def dbOf(docId: org.apache.spark.sql.Column) =
@@ -685,24 +686,10 @@ object Dedup {
     * survivors ∪ this batch's smaller-id members — the
     * [[Curation.ingestPipeline]] first-wins rule), admit ONLY the
     * survivors, and commit the batch watermark in the SAME pointer
-    * swing as the admit — the [[IndexPolicy.streamKey]] manifest key
-    * makes Structured Streaming's at-least-once foreachBatch replay
-    * exactly-once in effect: a replayed batch (id ≤ the committed
-    * watermark) returns without reading or writing anything, because
-    * watermark and rows can never commit separately. The watermark is
-    * scoped by `app` (the Delta txnAppId discipline, r18 ADVICE): a
-    * second stream into the same index, or one restarted on a REBUILT
-    * checkpoint (batch ids restart at 0), passes a different app id
-    * and gets its own independent watermark instead of having its
-    * batches silently dropped as the old stream's replays.
-    *
-    * Torn-state self-repair (r18 ADVICE): a crash BETWEEN the
-    * watermark-ahead publish and the commit swing leaves the index
-    * torn, and Structured Streaming's automatic retry of that batch
-    * would wedge forever on [[IndexPolicy.allocGen]]'s refusal. The
-    * retry instead detects the torn manifest under its own lease and
-    * runs the family's fold first — the documented repair, in-band —
-    * then admits the batch normally.
+    * swing as the admit, through [[IndexPolicy.streamBatch]]: a
+    * replayed batch returns (0, 0) without reading or writing
+    * anything, and a torn index is first repaired by the family's
+    * fold under the held lease.
     *
     * The rejected side of a flagged pair is the member of THIS batch
     * (pairs are (a < b); when both sides are in the batch the larger
@@ -724,18 +711,8 @@ object Dedup {
                           arriving: DataFrame, batchId: Long,
                           minJ: Double = 0.2, n: Int = 3, k: Int = 16,
                           bands: Int = 4, app: String = ""): (Long, Long) =
-      IndexPolicy.mutate(spark, idx) {
-    val key = IndexPolicy.streamKey(app)
-    val m0 = IndexPolicy.manifestOf(spark, idx)
-    val done = m0.get(key).map(_.toLong).getOrElse(-1L)
-    if (batchId <= done) (0L, 0L) // replayed batch: already committed
-    else {
-      // mid-batch crash left an uncommitted generation: fold to
-      // repair (under the lease we already hold), then re-read — the
-      // retried batch must land, not wedge on allocGen's refusal
-      val m =
-        if (IndexPolicy.tornCeiling(m0).isEmpty) m0
-        else { compactBody(spark, idx); IndexPolicy.manifestOf(spark, idx) }
+    IndexPolicy.streamBatch(spark, idx, batchId, app, (0L, 0L),
+        _ => compactBody(spark, idx)) { (m, mark) =>
       IndexPolicy.sweep(spark, idx, m)
       val (pairs, sigs) =
         lookupWithSigs(spark, idx, arriving, minJ, n, k, bands,
@@ -747,8 +724,7 @@ object Dedup {
         .select(when(col("__inb").isNotNull, col("b")).otherwise(col("a"))
           .as("doc_id")).distinct().localCheckpoint()
       val survivors = sigs.join(rejected, Seq("doc_id"), "left_anti")
-      admitSigs(spark, idx, m, survivors, k, bands,
-        extra = Map(key -> batchId.toString))
+      admitSigs(spark, idx, m, survivors, k, bands, extra = mark)
       // counts without recomputing the anti-join: arriving ids are
       // unique per batch and rejected ⊆ arriving, so admitted =
       // |arriving| − |rejected| (both cheap: a parquet-metadata count
@@ -756,7 +732,6 @@ object Dedup {
       val nRej = rejected.count()
       (arriving.count() - nRej, nRej)
     }
-  }
 
   /** Distinct COMMITTED doc_ids stored in the index (docsets side,
     * torn-ceiling capped; no tombstone filtering — callers comparing
@@ -796,15 +771,9 @@ object Dedup {
                         newDocs: DataFrame, gen: Long,
                         minJ: Double = 0.2, n: Int = 3, k: Int = 16,
                         bands: Int = 4,
-                        capBucket: Int = Int.MaxValue): DataFrame = {
-    // bound by the COMMITTED generation: an uncommitted (crashed)
-    // mutation is not a state anyone can pin
-    val cur = IndexPolicy.committedOf(IndexPolicy.manifestOf(spark, idx))
-    require(gen >= 0L && gen <= cur,
-      s"as-of generation $gen outside [0, $cur] for $idx")
+                        capBucket: Int = Int.MaxValue): DataFrame =
     lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket,
-      asOf = Some(gen))._1
-  }
+      asOf = IndexPolicy.pinnedGen(spark, idx, gen))._1
 
   /** [[neardupLookup]] AS OF a retained manifest SNAPSHOT (the
     * [[graft.operators.TextAnalysis.bm25QueryIndexSnapshot]] twin):
@@ -920,7 +889,7 @@ object Dedup {
     val postings: Seq[(Int, String, Long, Int)] =
       if (keys.isEmpty) Nil
       else {
-        val dead = IndexPolicy.deadIds(liveTombstones(spark, idx, m),
+        val dead = IndexPolicy.deadIds(ndTombs.of(spark, idx, m),
           "doc_id", ceil)
         val inDirs = keys.groupMap(_._1)(_._3).map { case (band, pbs) =>
           col("band") === band && col("pb").isin(pbs.distinct: _*)
@@ -1044,7 +1013,7 @@ object Dedup {
     // tombstoned (removed) docs stop matching immediately: the dead-id
     // set is removal-sized and broadcasts into an anti-join over the
     // postings scan — no index file rewrite until neardupCompact
-    val iBand = liveTombstones(spark, idx, m)
+    val iBand = ndTombs.of(spark, idx, m)
       .map(d => ceil.fold(d)(g => d.filter(col("gen") <= g)))
       .fold(rawBand)(dead =>
         rawBand.join(broadcast(dead.select(col("doc_id"))),
@@ -1146,71 +1115,25 @@ object Dedup {
     */
   def neardupRemove(spark: SparkSession, idx: String,
                     docIds: DataFrame): Unit =
-      IndexPolicy.mutate(spark, idx) {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, ndLayoutBase)
-    IndexPolicy.sweep(spark, idx, m)
-    val (g, m1) = IndexPolicy.allocGen(spark, idx, m)
-    val (tok, extra) = IndexPolicy.tombstoneEpoch(m1)
-    docIds.select(col("doc_id")).distinct()
-      .select(col("doc_id"), lit(g).as("gen"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"${IndexPolicy.epochDir(idx, tok)}/tombstones")
-    IndexPolicy.crashPoint(spark, idx, "after-rows")
-    IndexPolicy.commitGen(spark, idx, m1, g, extra)
-  }
-
-  private def liveTombstones(spark: SparkSession, idx: String,
-                             m: IndexPolicy.Manifest): Option[DataFrame] =
-    m.get("tombstones").map(tok => spark.read.schema(ndTombSchema)
-      .parquet(s"${IndexPolicy.epochDir(idx, tok)}/tombstones"))
+    IndexPolicy.removeIds(spark, idx, ndTombs, docIds)
 
   /** Fold-trigger policy (r13 stretch item 8): the near-dup index is
     * DUE for [[neardupCompact]] once live tombstones exceed
     * `maxFrac` of the stored docsets rows — every tombstone rides
-    * the broadcast anti-join of every lookup, so the fraction bounds
-    * per-check-in overhead. Counts are parquet footer row-counts
-    * (no data pages read); predicate shared via [[IndexPolicy]].
+    * the anti-join of every lookup, so the fraction bounds
+    * per-check-in overhead ([[IndexPolicy.foldDue]]).
     */
   def neardupFoldDue(spark: SparkSession, idx: String,
-                     maxFrac: Double = 0.1): Boolean = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    val ceil = IndexPolicy.tornCeiling(m)
-    def capped(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    IndexPolicy.tombstoneFoldDue(
-      liveTombstones(spark, idx, m).map(d => capped(d).count())
-        .getOrElse(0L),
-      capped(spark.read.schema(docsetsSchema)
-        .parquet(s"${IndexPolicy.epochDir(idx, m("data"))}/docsets"))
-        .count(),
-      maxFrac)
-  }
+                     maxFrac: Double = 0.1): Boolean =
+    IndexPolicy.foldDue(spark, idx, ndTombs, maxFrac)
 
-  /** Footer-count health of a near-dup index — what an operator (or
-    * [[Curation.indexHealth]]) reads before deciding to fold: stored
-    * docsets rows, live tombstones, the mutation generation, and the
-    * fold-due flag the policy derives from them. Footer row-counts +
-    * one meta read; no data pages.
+  /** Footer-count health of a near-dup index ([[IndexPolicy
+    * .healthCard]]): `nd_docsets`, `nd_tombstones`, `nd_gen` and
+    * `nd_fold_due`.
     */
   def neardupHealth(spark: SparkSession, idx: String,
-                    maxFrac: Double = 0.1): Seq[(String, Long)] = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    val ceil = IndexPolicy.tornCeiling(m)
-    def capped(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    val rows = capped(spark.read.schema(docsetsSchema)
-      .parquet(s"${IndexPolicy.epochDir(idx, m("data"))}/docsets")).count()
-    val dead = liveTombstones(spark, idx, m)
-      .map(d => capped(d).count()).getOrElse(0L)
-    Seq(
-      "nd_docsets" -> rows,
-      "nd_tombstones" -> dead,
-      // the COMMITTED generation — what a reader can actually pin
-      "nd_gen" -> IndexPolicy.committedOf(m),
-      "nd_fold_due" ->
-        (if (IndexPolicy.tombstoneFoldDue(dead, rows, maxFrac)) 1L else 0L))
-  }
+                    maxFrac: Double = 0.1): Seq[(String, Long)] =
+    IndexPolicy.healthCard(spark, idx, ndTombs, maxFrac)
 
   /** Physically drop tombstoned docs: rewrite `buckets` and
     * `docsets` without them (corpus-order, the rebuild-shaped
@@ -1239,7 +1162,7 @@ object Dedup {
     val ceil = IndexPolicy.tornCeiling(m)
     def committedRows(df: DataFrame): DataFrame =
       ceil.fold(df)(g => df.filter(col("gen") <= g))
-    val dead = liveTombstones(spark, idx, m).map(committedRows) match {
+    val dead = ndTombs.of(spark, idx, m).map(committedRows) match {
       case Some(d) => d
       case None if ceil.isEmpty => return // nothing to fold, nothing to repair
       case None => // torn but tombstone-free: still rewrite to repair
@@ -1288,19 +1211,13 @@ object Dedup {
     * check-in is correct iff it finds exactly the pairs a full batch
     * re-dedup would, without ever re-signaturing the indexed 3/4.
     */
-  private lazy val scratchToken =
-    java.util.UUID.randomUUID().toString.take(8)
-  private val neardupBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val neardupBaseCache = new Fixtures.Index("neardup_base")
 
   private def pristineBase(spark: SparkSession, dir: String,
                            docs: DataFrame): String =
-    neardupBaseCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_neardup_base_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    neardupBaseCache(dir) { p =>
       neardupWriteIndex(spark, docs.filter(pmod(col("doc_id"), lit(4)) =!= 1), p)
-      p
-    })
+    }
 
   /** The shared pristine base (3/4-corpus index, doc_id ≢ 1 mod 4)
     * for fixtures OUTSIDE this object — the streaming ingest contract
@@ -1314,9 +1231,8 @@ object Dedup {
   def neardupUpsert(spark: SparkSession, dir: String,
                     minJ: Double = 0.2): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idx = s"/tmp/graft_neardup_upsert_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    TextAnalysis.copyIndex(spark, pristineBase(spark, dir, docs), idx)
+    val idx = Fixtures.copyOf(spark, pristineBase(spark, dir, docs),
+      "neardup_upsert", dir)
     neardupCheckIn(spark, idx,
       docs.filter(pmod(col("doc_id"), lit(4)) === 1), minJ)
   }
@@ -1355,23 +1271,19 @@ object Dedup {
   private def asOfFixtureLookup(spark: SparkSession, dir: String,
                                 gen: Long, minJ: Double): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idx = asofIdxCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_neardup_asof_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    val idx = asofIdxCache(dir) { p =>
       TextAnalysis.copyIndex(spark, pristineBase(spark, dir, docs), p)
       neardupCheckIn(spark, p,
         docs.filter(pmod(col("doc_id"), lit(4)) === 1), minJ).count()
       neardupRemove(spark, p,
         docs.filter(pmod(col("doc_id"), lit(8)) === 0).select(col("doc_id")))
-      p
-    })
+    }
     val probe = docs.filter(pmod(col("doc_id"), lit(8)) <= 1)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     neardupLookupAsOf(spark, idx, probe, gen, minJ)
   }
 
-  private val asofIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val asofIdxCache = new Fixtures.Index("neardup_asof")
 
   /** Removal twin of [[neardupUpsert]]: before the check-in, the base
     * docs with doc_id ≡ 0 (mod 8) are REMOVED via [[neardupRemove]]
@@ -1384,9 +1296,8 @@ object Dedup {
   def neardupUpsertRemoved(spark: SparkSession, dir: String,
                            minJ: Double = 0.2): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idx = s"/tmp/graft_neardup_rm_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    TextAnalysis.copyIndex(spark, pristineBase(spark, dir, docs), idx)
+    val idx = Fixtures.copyOf(spark, pristineBase(spark, dir, docs),
+      "neardup_rm", dir)
     neardupRemove(spark, idx,
       docs.filter(pmod(col("doc_id"), lit(8)) === 0).select(col("doc_id")))
     neardupCheckIn(spark, idx,
@@ -1409,104 +1320,46 @@ object Dedup {
   def neardupUpsertCapped(spark: SparkSession, dir: String,
                           minJ: Double = 0.2): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idx = s"/tmp/graft_neardup_cap_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    TextAnalysis.copyIndex(spark, pristineBase(spark, dir, docs), idx)
+    val idx = Fixtures.copyOf(spark, pristineBase(spark, dir, docs),
+      "neardup_cap", dir)
     neardupCheckIn(spark, idx,
       docs.filter(pmod(col("doc_id"), lit(4)) === 1), minJ, capBucket = 1)
   }
 
-  /** SNAPSHOT TIME TRAVEL for the near-dup family (r18 — the
-    * [[graft.operators.TextAnalysis.bm25SnapshotAsOf]] twin,
-    * driver-gated; spec-level since r17's close): on a copy of the
-    * pristine base with snapshot retention on, (1) REMOVE doc_id ≡ 0
-    * (mod 8) and hold the committed snapshot S plus the flagged pairs
-    * of a probe of re-tagged copies (doc_id ≡ 2 mod 16, ids
-    * +2000000 — guaranteed J=1 twins of their originals); (2)
-    * COMPACT — the fold that resets the in-place generation timeline
-    * (pinned: the interior as-of now fails fast); (3) CHECK IN fresh
-    * copies of a probe subset (≡ 2 mod 32, ids +3000000), so the live
-    * lookup provably moves on while lookup-as-of-S replays the
-    * captured pairs BIT-IDENTICALLY; (4) expire S and mutate again —
-    * the sweep reclaims the dirs only S referenced (non-vacuously:
-    * the pre-compact data + tombstones epochs) and the snapshot read
-    * fails fast. Contract rows (metric, ok), oracle-pinned TRUE;
-    * empty corpus emits no rows.
-    *
-    * Fixture economics: the snapshotted state is built once per JVM
-    * per corpus dir and copied per invocation — the row times copy +
-    * fold + one small check-in + three delta lookups, never a
-    * corpus-scale ingest; the shared pristine base builds OUTSIDE the
-    * retention window (a baked-in snapshot would pin every copying
-    * fixture's epochs against every sweep).
+  /** SNAPSHOT TIME TRAVEL for the near-dup family
+    * ([[IndexPolicy.snapshotAsOfDrill]]): the snapshotted base REMOVEs
+    * doc_id ≡ 0 (mod 8) from the pristine base and holds the flagged
+    * pairs of a probe of re-tagged copies (doc_id ≡ 2 mod 16, ids
+    * +2000000 — guaranteed J=1 twins of their originals); the rewrite
+    * is COMPACT; the drift CHECKS IN fresh copies of a probe subset
+    * (≡ 2 mod 32, ids +3000000), so the live lookup provably moves
+    * on; the post-expiry mutation removes doc_id ≡ 4 (mod 32). The
+    * reclaimed dirs are the pre-compact data + tombstones epochs.
     */
-  private val ndSnapBaseCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long, Seq[org.apache.spark.sql.Row])]()
-
   def neardupSnapshotAsOf(spark: SparkSession, dir: String,
                           minJ: Double = 0.2): DataFrame = {
-    import spark.implicits._
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    if (docs.isEmpty)
-      return Seq.empty[(String, Boolean)].toDF("metric", "ok")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val vb = pristineBase(spark, dir, docs)
     // probe = re-tagged copies of doc_id ≡ 2 (mod 16) — a delta-sized
     // slice (31 docs at sf0.001) whose members all have J=1 twins in
     // the base; ⊇ the ≡ 2 (mod 32) check-in slice, so the admitted
     // copies provably intersect the probe's pairs
     def probe = docs.filter(pmod(col("doc_id"), lit(16)) === 2)
       .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val priorKeep = spark.conf.getOption(IndexPolicy.SnapKeepConf)
-    spark.conf.set(IndexPolicy.SnapKeepConf, "10")
-    try {
-      val (base, snap, want) = ndSnapBaseCache.computeIfAbsent(dir, _ => {
-        val p = s"/tmp/graft_nd_snapbase_${scratchToken}_$tag"
-        TextAnalysis.copyIndex(spark, vb, p)
-        neardupRemove(spark, p, docs
-          .filter(pmod(col("doc_id"), lit(8)) === 0).select(col("doc_id")))
-        val s = IndexPolicy.snapshotIds(spark, p).last
-        (p, s, neardupLookup(spark, p, probe, minJ).collect().toSeq)
-      })
-      val idx = s"/tmp/graft_nd_snap_${scratchToken}_$tag"
-      TextAnalysis.copyIndex(spark, base, idx)
-      val snapToks = IndexPolicy.snapshotRefTokens(spark, idx, snap)
-      neardupCompact(spark, idx)
-      // the fold really destroyed the in-place timeline…
-      rows += ("snap_rewrite_kills_inplace_asof" ->
-        (try { neardupLookupAsOf(spark, idx, probe, 1L, minJ); false }
-         catch { case _: IllegalArgumentException => true }))
-      // …and a further mutation moves the live lookup on (the admitted
-      // copies are J=1 twins of probe members) while S must replay
-      neardupCheckIn(spark, idx,
-        docs.filter(pmod(col("doc_id"), lit(32)) === 2)
-          .select((col("doc_id") + 3000000L).as("doc_id"), col("text")),
-        minJ).count()
-      rows += ("snap_retained_replays_after_rewrite" ->
-        (neardupLookupSnapshot(spark, idx, snap, probe, minJ)
-          .collect().toSeq == want))
-      rows += ("snap_live_moved_on" ->
-        (neardupLookup(spark, idx, probe, minJ).collect().toSeq != want))
-      // expiry: the NEXT sweep reclaims what only S referenced, and
-      // the snapshot read fails fast
-      IndexPolicy.expireSnapshots(spark, idx, 1)
-      neardupRemove(spark, idx, docs
-        .filter(pmod(col("doc_id"), lit(32)) === 4).select(col("doc_id")))
-      rows += ("snap_expired_fails_fast" ->
-        (try { neardupLookupSnapshot(spark, idx, snap, probe, minJ); false }
-         catch { case _: IllegalArgumentException => true }))
-      val deadToks = snapToks -- IndexPolicy.liveRefTokens(spark, idx)
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      rows += ("snap_expiry_reclaims_dirs" -> (deadToks.nonEmpty &&
-        deadToks.forall(t => !fs.exists(
-          new org.apache.hadoop.fs.Path(IndexPolicy.epochDir(idx, t))))))
-    } finally priorKeep match {
-      case Some(v) => spark.conf.set(IndexPolicy.SnapKeepConf, v)
-      case None => spark.conf.unset(IndexPolicy.SnapKeepConf)
-    }
-    rows.toSeq.toDF("metric", "ok").orderBy("metric")
+    def removeMod(m: Int, r: Int)(idx: String): Unit = neardupRemove(spark,
+      idx, docs.filter(pmod(col("doc_id"), lit(m)) === r).select(col("doc_id")))
+    IndexPolicy.snapshotAsOfDrill(spark, "nd", dir, docs,
+      pristineBase(spark, dir, docs),
+      IndexPolicy.SnapHooks(
+        build = removeMod(8, 0),
+        serve = neardupLookup(spark, _, probe, minJ),
+        asOf = neardupLookupAsOf(spark, _, probe, 1L, minJ),
+        snapshot = neardupLookupSnapshot(spark, _, _, probe, minJ),
+        rewrite = neardupCompact(spark, _),
+        drift = neardupCheckIn(spark, _,
+          docs.filter(pmod(col("doc_id"), lit(32)) === 2)
+            .select((col("doc_id") + 3000000L).as("doc_id"), col("text")),
+          minJ).count(),
+        expire = removeMod(32, 4)))
   }
 
   /** Duplicate-cluster assignment: connected components over the

@@ -2,15 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 
 /** Policy and bookkeeping shared by the index families: the
-  * tombstone-fraction fold predicate ([[Dedup.neardupFoldDue]],
-  * [[Similarity.ivfFoldDue]] — one predicate so the policy arithmetic
-  * cannot drift; bm25's segment-count budget is a genuinely different
-  * knob and stays in [[TextAnalysis]]) and the POINTER-COMMIT protocol
-  * every index mutation publishes through.
+  * lifecycle steps written once for all of them — near-dup and IVF
+  * tombstone removal, fold-due and health card ([[Tombstoned]]; bm25's
+  * segment-count budget is a genuinely different knob and stays in
+  * [[TextAnalysis]]), the stream-batch gate ([[streamBatch]]), the
+  * snapshot-retention scope and snapshot-as-of drill — and the
+  * POINTER-COMMIT protocol every index mutation publishes through.
   *
   * ==Pointer-commit protocol== (r16 verdict #1 — the port of the old
   * rename-swap design note): each index root holds exactly ONE small
@@ -1089,18 +1090,19 @@ private[graft] object IndexPolicy {
     */
   def snapshotRefTokens(spark: SparkSession, idx: String,
                         v: Long): Set[String] =
-    EpochPat.findAllIn(manifestAtSnapshot(spark, idx, v).toSeq
-      .map { case (k, x) => s"$k=$x" }.mkString("\n")).toSet
+    refTokens(manifestAtSnapshot(spark, idx, v))
+
+  /** Epoch tokens manifest `m` references. */
+  def refTokens(m: Manifest): Set[String] =
+    EpochPat.findAllIn(m.toSeq.map { case (k, x) => s"$k=$x" }.mkString("\n"))
+      .toSet
 
   /** Epoch tokens reachable from the committed manifest plus EVERY
     * retained snapshot — the live reference set GC must preserve.
     */
   def liveRefTokens(spark: SparkSession, idx: String): Set[String] =
-    EpochPat.findAllIn((manifestOf(spark, idx).toSeq
-      .map { case (k, v) => s"$k=$v" } ++
-      snapshotIds(spark, idx).map(v => manifestAtSnapshot(spark, idx, v)
-        .toSeq.map { case (k, x) => s"$k=$x" }.mkString("\n")))
-      .mkString("\n")).toSet
+    refTokens(manifestOf(spark, idx)) ++
+      snapshotIds(spark, idx).flatMap(snapshotRefTokens(spark, idx, _))
 
   /** Expire snapshots beyond the newest `keep` — and, when
     * [[SnapKeepMsConf]] is set, only those also OLDER than the age
@@ -1119,6 +1121,99 @@ private[graft] object IndexPolicy {
         .forall(at => now - at >= keepMs)
     }
     drop.foreach(v => store.delete(spark, snapDir(idx), s"v-$v"))
+  }
+
+  /** Run `body` with every publish keeping the newest `n` snapshots,
+    * then restore [[SnapKeepConf]] to its prior value, or to unset,
+    * even when `body` throws.
+    */
+  def withSnapshotsKept[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val priorKeep = spark.conf.getOption(SnapKeepConf)
+    spark.conf.set(SnapKeepConf, n.toString)
+    try body finally priorKeep match {
+      case Some(v) => spark.conf.set(SnapKeepConf, v)
+      case None => spark.conf.unset(SnapKeepConf)
+    }
+  }
+
+  /** Some of `refs` are unreferenced now, and all of those are gone
+    * from disk — false when nothing was reclaimed. */
+  def refsReclaimed(spark: SparkSession, idx: String,
+                    refs: Set[String]): Boolean = {
+    val dead = refs -- liveRefTokens(spark, idx)
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dead.nonEmpty && dead.forall(t =>
+      !fs.exists(new org.apache.hadoop.fs.Path(epochDir(idx, t))))
+  }
+
+  /** A family's [[snapshotAsOfDrill]] steps, each given the index
+    * path: `build` mutates the pristine copy into the snapshotted
+    * base; `asOf` reads interior generation 1; `rewrite` is the
+    * history-destroying fold; `drift` moves the live serve on (a no-op
+    * when the rewrite already does); `expire` runs the sweep after S
+    * expired.
+    */
+  final case class SnapHooks(build: String => Unit,
+                             serve: String => DataFrame,
+                             asOf: String => DataFrame,
+                             snapshot: (String, Long) => DataFrame,
+                             rewrite: String => Unit,
+                             drift: String => Unit,
+                             expire: String => Unit)
+
+  private val snapBases = new graft.Fixtures.Memo[(Long, Seq[Row])]
+
+  /** The SNAPSHOT TIME TRAVEL contract of one family (the
+    * `*_snapshot_asof` rows), on a copy of the snapshotted base with
+    * retention on: the rewrite makes the interior as-of read fail
+    * fast; after the drift, serving as of the base's snapshot S
+    * replays its captured rows bit-identically while the live serve
+    * has moved on; once S expires, the next sweep reclaims the dirs
+    * only S referenced and the snapshot read fails fast. Rows
+    * (metric, ok), oracle-pinned TRUE; none when the base mutation
+    * left no snapshot or `corpus` is empty. The base (kind
+    * `<kind>_snapbase`) is built once per JVM per corpus dir from
+    * `pristine`, which is built OUTSIDE the retention window (a
+    * baked-in snapshot would pin every copying fixture's epochs
+    * against every sweep).
+    */
+  def snapshotAsOfDrill(spark: SparkSession, kind: String, dir: String,
+                        corpus: DataFrame, pristine: => String,
+                        h: SnapHooks): DataFrame = {
+    import spark.implicits._
+    def failsFast(read: => DataFrame): Boolean =
+      try { read; false } catch { case _: IllegalArgumentException => true }
+    val rows = if (corpus.isEmpty) Seq.empty[(String, Boolean)] else {
+      val vb = pristine
+      withSnapshotsKept(spark, 10) {
+        val base = graft.Fixtures.path(s"${kind}_snapbase", dir)
+        val (snap, want) = snapBases(base) {
+          TextAnalysis.copyIndex(spark, vb, base)
+          h.build(base)
+          snapshotIds(spark, base).lastOption.fold((-1L, Seq.empty[Row]))(
+            s => (s, h.serve(base).collect().toSeq))
+        }
+        if (snap < 0L) Seq.empty[(String, Boolean)]
+        else {
+          val idx = graft.Fixtures.copyOf(spark, base, s"${kind}_snap", dir)
+          val snapToks = snapshotRefTokens(spark, idx, snap)
+          h.rewrite(idx)
+          val killed = failsFast(h.asOf(idx))
+          h.drift(idx)
+          val replays = h.snapshot(idx, snap).collect().toSeq == want
+          val moved = h.serve(idx).collect().toSeq != want
+          expireSnapshots(spark, idx, 1)
+          h.expire(idx)
+          Seq("snap_rewrite_kills_inplace_asof" -> killed,
+            "snap_retained_replays_after_rewrite" -> replays,
+            "snap_live_moved_on" -> moved,
+            "snap_expired_fails_fast" -> failsFast(h.snapshot(idx, snap)),
+            "snap_expiry_reclaims_dirs" -> refsReclaimed(spark, idx, snapToks))
+        }
+      }
+    }
+    rows.toDF("metric", "ok").orderBy("metric")
   }
 
   // ---------------------------------------------------------------
@@ -1543,6 +1638,17 @@ private[graft] object IndexPolicy {
     (g + 1L, m2)
   }
 
+  /** `gen` as an as-of read pin: within [0, the COMMITTED generation]
+    * — an uncommitted (crashed) mutation is not a state anyone can
+    * pin — or fail fast.
+    */
+  def pinnedGen(spark: SparkSession, idx: String, gen: Long): Option[Long] = {
+    val cur = committedOf(manifestOf(spark, idx))
+    require(gen >= 0L && gen <= cur,
+      s"as-of generation $gen outside [0, $cur] for $idx")
+    Some(gen)
+  }
+
   /** Commit generation `g` (and any manifest changes the mutation
     * carries — a freshly-minted tombstones epoch, a new stats epoch)
     * in ONE pointer swing.
@@ -1594,6 +1700,99 @@ private[graft] object IndexPolicy {
     dead > 0L && {
       val t = total
       t > 0L && dead.toDouble / t > maxFrac
+    }
+
+  // ---------------------------------------------------------------
+  // tombstone lifecycle (near-dup, IVF): a Tombstoned names the id
+  // column, the stored table fold-due weighs tombstones against, its
+  // schema, the layout a removal validates and the metric prefix.
+  // ---------------------------------------------------------------
+
+  final case class Tombstoned(id: String, table: String, schema: String,
+                              layout: Seq[(String, Long)], prefix: String) {
+    /** The tombstones table, when the manifest names one. */
+    def of(spark: SparkSession, idx: String, m: Manifest): Option[DataFrame] =
+      m.get("tombstones").map(tok => spark.read.schema(s"$id bigint, gen bigint")
+        .parquet(s"${epochDir(idx, tok)}/tombstones"))
+  }
+
+  /** REMOVE ids: they land in the append-only `tombstones` table under
+    * a fresh generation (no index file is opened); the family's fold
+    * drops them physically.
+    */
+  def removeIds(spark: SparkSession, idx: String, f: Tombstoned,
+                ids: DataFrame): Unit = mutate(spark, idx) {
+    val m = manifestOf(spark, idx)
+    checkLayout(m, idx, f.layout)
+    sweep(spark, idx, m)
+    val (g, m1) = allocGen(spark, idx, m)
+    val (tok, extra) = tombstoneEpoch(m1)
+    ids.select(col(f.id)).distinct()
+      .select(col(f.id), lit(g).as("gen"))
+      .write.mode(org.apache.spark.sql.SaveMode.Append)
+      .parquet(s"${epochDir(idx, tok)}/tombstones")
+    crashPoint(spark, idx, "after-rows")
+    commitGen(spark, idx, m1, g, extra)
+  }
+
+  /** Footer counts capped at the torn ceiling: live tombstones (no
+    * job when there are none) and, on first use, stored rows. */
+  private final class FooterCounts(spark: SparkSession, idx: String,
+                                    f: Tombstoned) {
+    val m: Manifest = manifestOf(spark, idx)
+    private val ceil = tornCeiling(m)
+    private def capped(df: DataFrame): DataFrame =
+      ceil.fold(df)(g => df.filter(col("gen") <= g))
+    val dead: Long =
+      f.of(spark, idx, m).map(d => capped(d).count()).getOrElse(0L)
+    lazy val rows: Long = capped(spark.read.schema(f.schema)
+      .parquet(s"${epochDir(idx, m("data"))}/${f.table}")).count()
+    def foldDue(maxFrac: Double): Boolean =
+      tombstoneFoldDue(dead, rows, maxFrac)
+  }
+
+  /** DUE for the family's fold: [[tombstoneFoldDue]] over footer
+    * counts, reading no stored-table footer when nothing is dead. */
+  def foldDue(spark: SparkSession, idx: String, f: Tombstoned,
+              maxFrac: Double): Boolean =
+    new FooterCounts(spark, idx, f).foldDue(maxFrac)
+
+  /** The footer-count health card read before deciding to fold:
+    * `<prefix>_<table>` stored rows, `<prefix>_tombstones`,
+    * `<prefix>_gen` (the COMMITTED generation, what a reader can pin)
+    * and `<prefix>_fold_due` (1 or 0). No data pages are read.
+    */
+  def healthCard(spark: SparkSession, idx: String, f: Tombstoned,
+                 maxFrac: Double): Seq[(String, Long)] = {
+    val c = new FooterCounts(spark, idx, f)
+    Seq(s"${f.prefix}_${f.table}" -> c.rows,
+      s"${f.prefix}_tombstones" -> c.dead,
+      s"${f.prefix}_gen" -> committedOf(c.m),
+      s"${f.prefix}_fold_due" -> (if (c.foldDue(maxFrac)) 1L else 0L))
+  }
+
+  /** The stream-batch gate of every `*StreamIngest`, under the lease:
+    * a batch at or below the app-scoped [[streamKey]] watermark is a
+    * replay and returns `replayed` untouched; otherwise a torn
+    * manifest is first repaired by the family's `repair` (the retried
+    * batch must land, not wedge on [[allocGen]]'s refusal), and
+    * `admit` gets the manifest plus the watermark entry that must ride
+    * its commit swing — at-least-once redelivery, exactly-once effect.
+    */
+  private[graft] def streamBatch[T](spark: SparkSession, idx: String,
+                                    batchId: Long, app: String, replayed: T,
+                                    repair: Manifest => Unit = _ => ())
+                                   (admit: (Manifest, Manifest) => T): T =
+    mutate(spark, idx) {
+      val key = streamKey(app)
+      val m0 = manifestOf(spark, idx)
+      if (m0.get(key).map(_.toLong).exists(batchId <= _)) replayed
+      else {
+        val m =
+          if (tornCeiling(m0).isEmpty) m0
+          else { repair(m0); manifestOf(spark, idx) }
+        admit(m, Map(key -> batchId.toString))
+      }
     }
 
   // ---------------------------------------------------------------

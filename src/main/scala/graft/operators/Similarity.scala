@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Par, Tables}
+import graft.{Fixtures, Par, Tables}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
@@ -878,7 +878,6 @@ object Similarity {
   private val centroidsSchema = "cell bigint, cv array<bigint>"
   private val listsSchema =
     "vec_id bigint, embedding array<float>, cell bigint, gen bigint"
-  private val ivfTombSchema = "vec_id bigint, gen bigint"
   /** Layout stamp, written LAST at build (r15 ADVICE): IVF reads
     * don't depend on directory-hash constants (routing reads the
     * centroids table), so the stamp pins the format VERSION and
@@ -889,6 +888,8 @@ object Similarity {
   private def ivfLayout(cells: Int): Seq[(String, Long)] =
     Seq("v" -> 1L, "cells" -> cells.toLong)
   private val ivfLayoutBase: Seq[(String, Long)] = Seq("v" -> 1L)
+  private val ivfTombs = IndexPolicy.Tombstoned("vec_id", "lists",
+    listsSchema, ivfLayoutBase, "ivf")
 
   /** Resolved physical dir of an index table (lists / centroids /
     * tombstones) under the committed manifest — for the layout specs'
@@ -997,36 +998,20 @@ object Similarity {
     IndexPolicy.commitGen(spark, idx, m1, g, extra)
   }
 
-  /** One streaming micro-batch of VECTOR ingest — the IVF twin of
-    * [[graft.operators.Dedup.neardupStreamIngest]]'s exactly-once
-    * discipline: the [[IndexPolicy.streamKey]] watermark (scoped by
-    * `app`, the Delta txnAppId discipline — a rebuilt checkpoint or a
-    * second query passes its own id and gets an independent
-    * watermark, r18 ADVICE) commits in the SAME pointer swing as the
-    * appended rows, so a replayed batch (id ≤ the committed
-    * watermark) appends nothing and leaves the manifest untouched.
-    * Returns whether the batch landed. A torn manifest (mid-batch
-    * crash between the generation publish and its commit) is repaired
-    * in-band by [[ivfDropUncommitted]] before the retry lands — the
-    * retried batch must ingest, not wedge on [[IndexPolicy
-    * .allocGen]]'s refusal. The watermark is family-generic by
-    * construction — it rides [[IndexPolicy.commitGen]]'s extra
-    * entries; spec-pinned here, driver-gated on the near-dup family
-    * by `stream_index_ingest`.
+  /** One streaming micro-batch of VECTOR ingest through
+    * [[IndexPolicy.streamBatch]]: the app-scoped watermark commits in
+    * the SAME pointer swing as the appended rows, so a replayed batch
+    * appends nothing and leaves the manifest untouched. Returns
+    * whether the batch landed. A torn manifest is repaired in-band by
+    * [[ivfDropUncommitted]] before the retry lands.
     */
   def ivfStreamIngest(spark: SparkSession, idx: String, vecs: DataFrame,
                       batchId: Long, app: String = ""): Boolean =
-      IndexPolicy.mutate(spark, idx) {
-    val key = IndexPolicy.streamKey(app)
-    val m = IndexPolicy.manifestOf(spark, idx)
-    if (m.get(key).map(_.toLong).exists(batchId <= _)) false
-    else {
-      if (IndexPolicy.tornCeiling(m).isDefined)
-        ivfDropUncommitted(spark, idx, m)
-      appendVectorsBody(spark, idx, vecs, Map(key -> batchId.toString))
+    IndexPolicy.streamBatch(spark, idx, batchId, app, false,
+        ivfDropUncommitted(spark, idx, _)) { (_, mark) =>
+      appendVectorsBody(spark, idx, vecs, mark)
       true
     }
-  }
 
   /** Targeted torn-state repair under an ALREADY-HELD lease: rewrite
     * `lists` (and `tombstones`, if present) WITHOUT the uncommitted
@@ -1053,11 +1038,9 @@ object Similarity {
     spark.read.schema(centroidsSchema).parquet(s"$ed/centroids")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$ed2/centroids")
-    val tombExtra = m.get("tombstones").map { tt =>
+    val tombExtra = ivfTombs.of(spark, idx, m).map { d =>
       val t2 = IndexPolicy.newEpoch()
-      spark.read.schema(ivfTombSchema)
-        .parquet(s"${IndexPolicy.epochDir(idx, tt)}/tombstones")
-        .filter(col("gen") <= ceil)
+      d.filter(col("gen") <= ceil)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"${IndexPolicy.epochDir(idx, t2)}/tombstones")
       "tombstones" -> t2
@@ -1079,69 +1062,25 @@ object Similarity {
     * retrain cadence.
     */
   def ivfRemove(spark: SparkSession, idx: String, ids: DataFrame): Unit =
-      IndexPolicy.mutate(spark, idx) {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, ivfLayoutBase)
-    IndexPolicy.sweep(spark, idx, m)
-    val (g, m1) = IndexPolicy.allocGen(spark, idx, m)
-    val (tok, extra) = IndexPolicy.tombstoneEpoch(m1)
-    ids.select(col("vec_id")).distinct()
-      .select(col("vec_id"), lit(g).as("gen"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"${IndexPolicy.epochDir(idx, tok)}/tombstones")
-    IndexPolicy.crashPoint(spark, idx, "after-rows")
-    IndexPolicy.commitGen(spark, idx, m1, g, extra)
-  }
-
-  private def ivfTombstones(spark: SparkSession, idx: String,
-                            m: IndexPolicy.Manifest): Option[DataFrame] =
-    m.get("tombstones").map(tok => spark.read.schema(ivfTombSchema)
-      .parquet(s"${IndexPolicy.epochDir(idx, tok)}/tombstones"))
+    IndexPolicy.removeIds(spark, idx, ivfTombs, ids)
 
   /** Fold-trigger policy (r13 stretch item 8): the IVF index is DUE
     * for a retrain ([[ivfWriteIndexVecs]] at the same path — the
     * FAISS-rebuild fold) once live tombstones exceed `maxFrac` of
-    * the stored list rows: tombstones ride every serve's broadcast
-    * anti-join, and removals also erode the trained centroids'
-    * fit. Footer row-counts only; predicate shared via
-    * [[IndexPolicy]].
+    * the stored list rows ([[IndexPolicy.foldDue]]): tombstones ride
+    * every serve's anti-join, and removals also erode the trained
+    * centroids' fit.
     */
   def ivfFoldDue(spark: SparkSession, idx: String,
-                 maxFrac: Double = 0.1): Boolean = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    val ceil = IndexPolicy.tornCeiling(m)
-    def capped(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    IndexPolicy.tombstoneFoldDue(
-      ivfTombstones(spark, idx, m).map(d => capped(d).count()).getOrElse(0L),
-      capped(spark.read.schema(listsSchema)
-        .parquet(s"${IndexPolicy.epochDir(idx, m("data"))}/lists")).count(),
-      maxFrac)
-  }
+                 maxFrac: Double = 0.1): Boolean =
+    IndexPolicy.foldDue(spark, idx, ivfTombs, maxFrac)
 
-  /** Footer-count health of an IVF index (the
-    * [[graft.operators.Dedup.neardupHealth]] twin): stored list
-    * rows, live tombstones, the mutation generation, and the
-    * fold-due flag the retrain policy derives from them.
+  /** Footer-count health of an IVF index ([[IndexPolicy.healthCard]]):
+    * `ivf_lists`, `ivf_tombstones`, `ivf_gen` and `ivf_fold_due`.
     */
   def ivfHealth(spark: SparkSession, idx: String,
-                maxFrac: Double = 0.1): Seq[(String, Long)] = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    val ceil = IndexPolicy.tornCeiling(m)
-    def capped(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    val rows = capped(spark.read.schema(listsSchema)
-      .parquet(s"${IndexPolicy.epochDir(idx, m("data"))}/lists")).count()
-    val dead = ivfTombstones(spark, idx, m).map(d => capped(d).count())
-      .getOrElse(0L)
-    Seq(
-      "ivf_lists" -> rows,
-      "ivf_tombstones" -> dead,
-      // the COMMITTED generation — what a reader can actually pin
-      "ivf_gen" -> IndexPolicy.committedOf(m),
-      "ivf_fold_due" ->
-        (if (IndexPolicy.tombstoneFoldDue(dead, rows, maxFrac)) 1L else 0L))
-  }
+                maxFrac: Double = 0.1): Seq[(String, Long)] =
+    IndexPolicy.healthCard(spark, idx, ivfTombs, maxFrac)
 
   /** Serve top-k from the at-rest index: route each query to its
     * nProbe nearest centroids (exact integer math — bit-identical to
@@ -1176,15 +1115,9 @@ object Similarity {
     */
   def ivfQueryIndexAsOf(spark: SparkSession, dir: String, idx: String,
                         gen: Long, nQueries: Int = 8, kNN: Int = 5,
-                        nProbe: Int = 2): DataFrame = {
-    // bound by the COMMITTED generation: an uncommitted (crashed)
-    // mutation is not a state anyone can pin
-    val cur = IndexPolicy.committedOf(IndexPolicy.manifestOf(spark, idx))
-    require(gen >= 0L && gen <= cur,
-      s"as-of generation $gen outside [0, $cur] for $idx")
+                        nProbe: Int = 2): DataFrame =
     ivfQueryIndexWhere(spark, dir, idx, col("vec_id") < nQueries, kNN,
-      nProbe, asOf = Some(gen))
-  }
+      nProbe, asOf = IndexPolicy.pinnedGen(spark, idx, gen))
 
   /** [[ivfQueryIndex]] AS OF a retained manifest SNAPSHOT (the
     * [[graft.operators.TextAnalysis.bm25QueryIndexSnapshot]] twin):
@@ -1314,7 +1247,7 @@ object Similarity {
         // tombstoned (removed) vectors drop before scoring — the
         // dead-id set is removal-sized and broadcasts into an anti-join
         // over the pruned list scan; no list file is ever rewritten
-        val lists = ivfTombstones(spark, idx, m).map(atCeil).fold(rawLists)(
+        val lists = ivfTombs.of(spark, idx, m).map(atCeil).fold(rawLists)(
           d => rawLists.join(broadcast(d.select(col("vec_id"))),
             Seq("vec_id"), "left_anti"))
         topK(lists.join(broadcast(routing), "cell")
@@ -1373,7 +1306,7 @@ object Similarity {
       routed.map(r => Row(r.getLong(0), r.getLong(1), qv(r.getLong(0)))),
       ArrayType(StructType(Seq(StructField("qid", LongType),
         StructField("cell", LongType), qSchema("qv"))))))
-    val dead = IndexPolicy.deadIds(ivfTombstones(spark, idx, m), "vec_id",
+    val dead = IndexPolicy.deadIds(ivfTombs.of(spark, idx, m), "vec_id",
       ceil)
     val lists = rawLists.filter(col("cell").isin(routed.map(_.getLong(1))
       .distinct: _*))
@@ -1397,14 +1330,11 @@ object Similarity {
     * the same reason): concurrent processes over the same input dir
     * must not race each other's index Overwrite against a serve.
     */
-  private lazy val scratchToken =
-    java.util.UUID.randomUUID().toString.take(8)
 
   def ivfIndexTopK(spark: SparkSession, dir: String,
                    nQueries: Int = 8, kNN: Int = 5,
                    nProbe: Int = 2): DataFrame = {
-    val idx = s"/tmp/graft_ivf_index_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val idx = Fixtures.path("ivf_index", dir)
     ivfWriteIndex(spark, dir, idx)
     ivfQueryIndex(spark, dir, idx, nQueries, kNN, nProbe)
   }
@@ -1415,16 +1345,12 @@ object Similarity {
     * path — what the at-rest operator costs when the index already
     * exists.
     */
-  private val serveIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val serveIdxCache = new Fixtures.Index("ivf_serve")
 
   private def serveIdx(spark: SparkSession, dir: String): String =
-    serveIdxCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_ivf_serve_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    serveIdxCache(dir) { p =>
       ivfWriteIndex(spark, dir, p)
-      p
-    })
+    }
 
   def ivfServeTopK(spark: SparkSession, dir: String,
                    nQueries: Int = 8, kNN: Int = 5,
@@ -1444,9 +1370,7 @@ object Similarity {
   def ivfServeRemoved(spark: SparkSession, dir: String,
                       nQueries: Int = 8, kNN: Int = 5,
                       nProbe: Int = 2): DataFrame = {
-    val idx = s"/tmp/graft_ivf_rm_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.operators.TextAnalysis.copyIndex(spark, serveIdx(spark, dir), idx)
+    val idx = Fixtures.copyOf(spark, serveIdx(spark, dir), "ivf_rm", dir)
     ivfRemove(spark, idx,
       Tables.embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id")))
@@ -1487,9 +1411,7 @@ object Similarity {
 
   private def asOfFixtureIdx(spark: SparkSession, dir: String,
                              nQueries: Int): String =
-    asofIdxCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_ivf_asof_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    asofIdxCache(dir) { p =>
       graft.operators.TextAnalysis.copyIndex(spark, serveIdx(spark, dir), p)
       val all = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
@@ -1498,11 +1420,9 @@ object Similarity {
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
       ivfRemove(spark, p,
         all.filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id")))
-      p
-    })
+    }
 
-  private val asofIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val asofIdxCache = new Fixtures.Index("ivf_asof")
 
   /** Retrain-after-removal twin of [[ivfServeRemoved]] (r13 ADVICE,
     * medium): a periodic full retrain is the IVF compaction analogue,
@@ -1520,9 +1440,7 @@ object Similarity {
   def ivfRetrainTopK(spark: SparkSession, dir: String,
                      nQueries: Int = 8, kNN: Int = 5,
                      nProbe: Int = 2): DataFrame = {
-    val idx = s"/tmp/graft_ivf_retrain_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.operators.TextAnalysis.copyIndex(spark, serveIdx(spark, dir), idx)
+    val idx = Fixtures.copyOf(spark, serveIdx(spark, dir), "ivf_retrain", dir)
     ivfRemove(spark, idx,
       Tables.embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id")))
@@ -1531,96 +1449,33 @@ object Similarity {
     ivfQueryIndex(spark, dir, idx, nQueries, kNN, nProbe)
   }
 
-  /** SNAPSHOT TIME TRAVEL for the IVF family (r18 — the
-    * [[graft.operators.TextAnalysis.bm25SnapshotAsOf]] twin,
-    * driver-gated; spec-level since r17's close): on a copy of the
-    * serve index with snapshot retention on, (1) APPEND exact
-    * duplicates of the query vectors under fresh ids (+2000000 —
-    * guaranteed cosine-1 rank hits in every query's top-k) and hold
-    * the committed snapshot S plus the served ranking; (2) RETRAIN
-    * over the plain corpus — the rewrite that resets the in-place
-    * generation timeline (pinned: the interior as-of now fails fast)
-    * and drops the duplicates, so the live serve provably moves on
-    * while serve-as-of-S replays the captured ranking BIT-IDENTICALLY
-    * from the retained pre-retrain epoch; (3) expire S and mutate
-    * again — the sweep reclaims the dirs only S referenced
-    * (non-vacuously: the pre-retrain data epoch) and the snapshot
-    * read fails fast. Contract rows (metric, ok), oracle-pinned TRUE;
-    * empty corpus emits no rows.
-    *
-    * Fixture economics: the snapshotted state is built once per JVM
-    * per corpus dir and copied per invocation — the row times copy +
-    * retrain + three serves + one tiny removal; the shared serve base
-    * builds OUTSIDE the retention window (a baked-in snapshot would
-    * pin every copying fixture's epochs against every sweep).
+  /** SNAPSHOT TIME TRAVEL for the IVF family
+    * ([[IndexPolicy.snapshotAsOfDrill]]): the snapshotted base
+    * APPENDs exact duplicates of the query vectors under fresh ids
+    * (+2000000 — guaranteed cosine-1 rank hits in every query's
+    * top-k) to the serve index; the rewrite RETRAINs over the plain
+    * corpus, which also drops the duplicates, so the live serve
+    * provably moves on with no further drift mutation; the
+    * post-expiry mutation removes vec_id ≡ 3 (mod 97). The reclaimed
+    * dir is the pre-retrain data epoch.
     */
-  private val ivfSnapBaseCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long, Seq[org.apache.spark.sql.Row])]()
-
   def ivfSnapshotAsOf(spark: SparkSession, dir: String,
                       nQueries: Int = 8, kNN: Int = 5,
                       nProbe: Int = 2): DataFrame = {
-    import spark.implicits._
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    if (all.isEmpty)
-      return Seq.empty[(String, Boolean)].toDF("metric", "ok")
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val vb = serveIdx(spark, dir)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val priorKeep = spark.conf.getOption(IndexPolicy.SnapKeepConf)
-    spark.conf.set(IndexPolicy.SnapKeepConf, "10")
-    try {
-      val (base, snap, want) = ivfSnapBaseCache.computeIfAbsent(dir, _ => {
-        val p = s"/tmp/graft_ivf_snapbase_${scratchToken}_$tag"
-        graft.operators.TextAnalysis.copyIndex(spark, vb, p)
-        ivfAppendVectors(spark, p,
-          all.filter(col("vec_id") < nQueries)
-            .select((col("vec_id") + 2000000L).as("vec_id"),
-              col("embedding")))
-        val s = IndexPolicy.snapshotIds(spark, p).last
-        (p, s,
-          ivfQueryIndex(spark, dir, p, nQueries, kNN, nProbe)
-            .collect().toSeq)
-      })
-      val idx = s"/tmp/graft_ivf_snap_${scratchToken}_$tag"
-      graft.operators.TextAnalysis.copyIndex(spark, base, idx)
-      val snapToks = IndexPolicy.snapshotRefTokens(spark, idx, snap)
-      ivfWriteIndexVecs(spark, all, idx)
-      // the retrain really destroyed the in-place timeline…
-      rows += ("snap_rewrite_kills_inplace_asof" ->
-        (try { ivfQueryIndexAsOf(spark, dir, idx, 1L, nQueries, kNN,
-          nProbe); false }
-         catch { case _: IllegalArgumentException => true }))
-      // …and dropped the appended duplicates from the live serve,
-      // while S must replay them at their cosine-1 ranks
-      rows += ("snap_retained_replays_after_rewrite" ->
-        (ivfQueryIndexSnapshot(spark, dir, idx, snap, nQueries, kNN,
-          nProbe).collect().toSeq == want))
-      rows += ("snap_live_moved_on" ->
-        (ivfQueryIndex(spark, dir, idx, nQueries, kNN, nProbe)
-          .collect().toSeq != want))
-      // expiry: the NEXT sweep reclaims what only S referenced, and
-      // the snapshot read fails fast
-      IndexPolicy.expireSnapshots(spark, idx, 1)
-      ivfRemove(spark, idx,
-        all.filter(pmod(col("vec_id"), lit(97)) === 3)
-          .select(col("vec_id")))
-      rows += ("snap_expired_fails_fast" ->
-        (try { ivfQueryIndexSnapshot(spark, dir, idx, snap, nQueries,
-          kNN, nProbe); false }
-         catch { case _: IllegalArgumentException => true }))
-      val deadToks = snapToks -- IndexPolicy.liveRefTokens(spark, idx)
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      rows += ("snap_expiry_reclaims_dirs" -> (deadToks.nonEmpty &&
-        deadToks.forall(t => !fs.exists(
-          new org.apache.hadoop.fs.Path(IndexPolicy.epochDir(idx, t))))))
-    } finally priorKeep match {
-      case Some(v) => spark.conf.set(IndexPolicy.SnapKeepConf, v)
-      case None => spark.conf.unset(IndexPolicy.SnapKeepConf)
-    }
-    rows.toSeq.toDF("metric", "ok").orderBy("metric")
+    IndexPolicy.snapshotAsOfDrill(spark, "ivf", dir, all, serveIdx(spark, dir),
+      IndexPolicy.SnapHooks(
+        build = ivfAppendVectors(spark, _, all.filter(col("vec_id") < nQueries)
+          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))),
+        serve = ivfQueryIndex(spark, dir, _, nQueries, kNN, nProbe),
+        asOf = ivfQueryIndexAsOf(spark, dir, _, 1L, nQueries, kNN, nProbe),
+        snapshot = ivfQueryIndexSnapshot(spark, dir, _, _, nQueries, kNN,
+          nProbe),
+        rewrite = ivfWriteIndexVecs(spark, all, _),
+        drift = _ => (),
+        expire = ivfRemove(spark, _,
+          all.filter(pmod(col("vec_id"), lit(97)) === 3).select(col("vec_id")))))
   }
 
   /** Registry fixture for the vector upsert: train the index on the
@@ -1637,8 +1492,7 @@ object Similarity {
                     nProbe: Int = 2): DataFrame = {
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val idx = s"/tmp/graft_ivf_append_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    val idx = Fixtures.path("ivf_append", dir)
     ivfWriteIndexVecs(spark, all.filter(pmod(col("vec_id"), lit(10)) =!= 3), idx)
     ivfAppendVectors(spark, idx,
       all.filter(pmod(col("vec_id"), lit(10)) === 3))
@@ -1673,16 +1527,13 @@ object Similarity {
                       nProbe: Int = 4,
                       slack: Double = 0.2): DataFrame = {
     import spark.implicits._
-    val appendIdx = appendIdxCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_ivf_apprecall_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    val appendIdx = appendIdxCache(dir) { p =>
       val all = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       ivfWriteIndexVecs(spark, all.filter(pmod(col("vec_id"), lit(10)) =!= 3), p)
       ivfAppendVectors(spark, p,
         all.filter(pmod(col("vec_id"), lit(10)) === 3))
-      p
-    })
+    }
     // the first nQueries appended ids: 3, 13, ..., 10·nQueries − 7
     val qpred = pmod(col("vec_id"), lit(10)) === 3 &&
       col("vec_id") < 10L * nQueries
@@ -1725,8 +1576,7 @@ object Similarity {
       .toDF("metric", "ok").orderBy("metric")
   }
 
-  private val appendIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val appendIdxCache = new Fixtures.Index("ivf_apprecall")
 
   /** ANN recall CONTRACT as a query: per query id, did the
     * approximate top-k recover ≥ minRecall of the exact top-k? The

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fixtures
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -309,11 +310,8 @@ object Streaming {
     * per-JVM scratchToken. Within one JVM the path is stable, so
     * repeat contract runs still overwrite their own fixture.
     */
-  private lazy val scratchToken =
-    java.util.UUID.randomUUID().toString.take(8)
   private def stageBase(dir: String): String =
-    s"/tmp/graft_stream_stage_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    Fixtures.path("stream_stage", dir)
 
   /** Stage a fixture at `path` at most once per JVM (r13): the stage
     * write is test-harness plumbing, not the operator under contract
@@ -322,10 +320,9 @@ object Streaming {
     * scratchToken in the path keeps the skip safe: nobody else
     * writes there.
     */
-  private val stagedOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedOnce = new Fixtures.Memo[String]
   private def stageOnce(path: String)(write: => Unit): Unit =
-    stagedOnce.computeIfAbsent(path, _ => { write; path })
+    stagedOnce(path) { write; path }
 
   def windowContract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -536,21 +533,17 @@ object Streaming {
     }
     // the BATCH twin — the deterministic reference the stream must
     // land on: direct per-slice calls in slice order, once per JVM
-    val (twinIdx, twinCounts) = ingestTwinCache.computeIfAbsent(dir, _ => {
-      val p = s"/tmp/graft_ingest_twin_${scratchToken}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      graft.operators.TextAnalysis.copyIndex(spark,
-        Dedup.pristineBaseFor(spark, dir), p)
+    val (twinIdx, twinCounts) = ingestTwinCache(dir) {
+      val p = Fixtures.copyOf(spark, Dedup.pristineBaseFor(spark, dir),
+        "ingest_twin", dir)
       val cs = (0 until K).map(j =>
         Dedup.neardupStreamIngest(spark, p, slice(j), j, minJ))
       (p, cs)
-    })
+    }
     // the streamed side: fresh index copy + fresh checkpoint, then a
     // real streaming query drains the staged files one per trigger
-    val sIdx = s"/tmp/graft_stream_ingest_${scratchToken}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.operators.TextAnalysis.copyIndex(spark,
-      Dedup.pristineBaseFor(spark, dir), sIdx)
+    val sIdx = Fixtures.copyOf(spark, Dedup.pristineBaseFor(spark, dir),
+      "stream_ingest", dir)
     val ckpt = s"${sIdx}_ckpt"
     def wipeCkpt(d: java.io.File): Unit = {
       if (d.isDirectory) d.listFiles().foreach(wipeCkpt)
@@ -596,8 +589,7 @@ object Streaming {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  private val ingestTwinCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Long, Long)])]()
+  private val ingestTwinCache = new Fixtures.Memo[(String, Seq[(Long, Long)])]
 
   /** Batch-equivalence contract rows for the STREAM-STREAM interval
     * join (same pattern as [[windowContract]]): clicks and purchases

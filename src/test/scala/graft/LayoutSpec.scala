@@ -2278,4 +2278,40 @@ class LayoutSpec extends SparkSpec {
         }
       }
   }
+
+  test("withSnapshotsKept restores a set or an unset retention conf, also when its body throws") {
+    import graft.operators.{IndexPolicy, TextAnalysis}
+    val k = IndexPolicy.SnapKeepConf
+    val prior = spark.conf.getOption(k)
+    val idx = java.nio.file.Files.createTempDirectory("graft-keep").toString + "/idx"
+    import spark.implicits._
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
+      .toDF("doc_id", "text")
+    try {
+      spark.conf.unset(k)
+      TextAnalysis.bm25WriteIndexDocs(spark, docs, idx)
+      assert(IndexPolicy.snapshotIds(spark, idx).isEmpty)
+      IndexPolicy.withSnapshotsKept(spark, 3) {
+        assert(spark.conf.get(k) == "3")
+        TextAnalysis.bm25AppendSegment(spark, idx,
+          Seq((3L, "gamma delta epsilon")).toDF("doc_id", "text"), docs.limit(0))
+      }
+      assert(spark.conf.getOption(k).isEmpty, "an unset conf came back set")
+      val kept = IndexPolicy.snapshotIds(spark, idx)
+      assert(kept.size == 1, s"snapshots taken in the scope: $kept")
+      assert(IndexPolicy.manifestAtSnapshot(spark, idx, kept.head) - "snap_at" ==
+        IndexPolicy.manifestOf(spark, idx))
+      intercept[IllegalStateException](IndexPolicy.withSnapshotsKept(spark, 5) {
+        throw new IllegalStateException("body failed")
+      })
+      assert(spark.conf.getOption(k).isEmpty, "a throwing body left the conf set")
+      spark.conf.set(k, "7")
+      IndexPolicy.withSnapshotsKept(spark, 2)(assert(spark.conf.get(k) == "2"))
+      assert(spark.conf.get(k) == "7")
+      intercept[IllegalStateException](IndexPolicy.withSnapshotsKept(spark, 2) {
+        throw new IllegalStateException("body failed")
+      })
+      assert(spark.conf.get(k) == "7", "a throwing body lost the prior value")
+    } finally prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
 }

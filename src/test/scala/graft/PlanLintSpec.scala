@@ -106,6 +106,40 @@ class PlanLintSpec extends SparkSpec {
     assert(offenders.isEmpty, "tests must run, not cancel:\n" + offenders.mkString("\n"))
   }
 
+  // the snapshot-retention scope, the per-JVM fixture token and the
+  // fixture path tag are written once, in IndexPolicy and Fixtures
+  test("no hand-rolled retention scope, fixture token or fixture tag outside IndexPolicy and Fixtures") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = ("""\bconf\.(set|unset)\(\s*(\w+\.)*(SnapKeepConf\b|"spark\.graft\.index\.snapshots\.keep")""" +
+      """|lazy val \w*Token\s*=[^\n]*\n?[^\n]*\bUUID\b|replaceAll\("\[\^A-Za-z0-9\]"""").r
+    Seq("""spark.conf.set(IndexPolicy.SnapKeepConf, "10")""",
+        """case None => spark.conf.unset("spark.graft.index.snapshots.keep")""",
+        "private lazy val scratchToken =\n    java.util.UUID.randomUUID().toString.take(8)",
+        """val tag = dir.replaceAll("[^A-Za-z0-9]", "_")""")
+      .foreach(l => assert(banned.findFirstIn(l).isDefined, l))
+    Seq("""spark.conf.set("spark.graft.index.snapshots.keep.ms", "0")""",
+        """val keep = spark.conf.get(SnapKeepConf, "0").toInt""",
+        """val segName = "seg-" + IndexPolicy.newToken()""",
+        """val safe = app.replaceAll("[^A-Za-z0-9._-]", "_")""")
+      .foreach(l => assert(banned.findFirstIn(l).isEmpty, l))
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = files.flatMap { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      if (rel == "graft/operators/IndexPolicy.scala" || rel == "graft/Fixtures.scala") Nil
+      else {
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        banned.findAllMatchIn(text).map { m =>
+          val line = text.substring(0, m.start).count(_ == '\n') + 1
+          s"$rel:$line: ${m.matched.trim}"
+        }.toSeq
+      }
+    }
+    assert(offenders.isEmpty,
+      "use IndexPolicy.withSnapshotsKept and graft.Fixtures instead:\n" + offenders.mkString("\n"))
+  }
+
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries
       .filterNot { case (name, _) => eagerBuilders(name) }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, IndexPolicy, Similarity}
+import graft.operators.{Dedup, IndexPolicy, Similarity, TextAnalysis}
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -272,4 +272,66 @@ class ServePathSpec extends SparkSpec {
     assert(Dedup.neardupLookup(spark, idx, local(probes, docSchema))
       .collect().toSeq != before, "the check-ins changed no lookup")
   }
+
+  // index_mix runs a fold-due check after every write and a health card
+  // after every traced op: the shared tombstone, health and stream-gate
+  // steps keep the Spark job counts they had per family
+  test("the shared lifecycle steps keep their Spark job counts: remove, fold-due, health, stream batches") {
+    val root = Files.createTempDirectory("graft-lifecycle-jobs").toString
+    val base = local(docRows(corpus.filter(_._1 % 4 != 1)), docSchema)
+    val delta = local(docRows(corpus.filter(_._1 % 8 == 1)), docSchema)
+    val removed = ids(corpus.map(_._1).filter(_ % 5 == 0))
+    val vecs = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+      .collect().toSeq
+    val vecBase = local(vecs.filter(_.getLong(0) % 4 != 1), vecSchema)
+    val vecDelta = local(vecs.filter(_.getLong(0) % 4 == 1), vecSchema)
+    val got = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def count[T](what: String)(f: => T): T = {
+      val (r, n) = jobsOf(what)(f); got(what) = n; r
+    }
+    val nd = s"$root/nd"
+    Dedup.neardupWriteIndex(spark, base, nd)
+    count("nd fold-due, no tombstones")(Dedup.neardupFoldDue(spark, nd))
+    count("nd health, no tombstones")(Dedup.neardupHealth(spark, nd))
+    count("nd remove")(Dedup.neardupRemove(spark, nd, removed))
+    count("nd fold-due")(Dedup.neardupFoldDue(spark, nd))
+    val ndCard = count("nd health")(Dedup.neardupHealth(spark, nd)).toMap
+    assert(ndCard("nd_tombstones") > 0L && ndCard("nd_gen") == 1L)
+    val fresh = count("nd stream batch")(
+      Dedup.neardupStreamIngest(spark, nd, delta, 0L, app = "jobs"))
+    assert(count("nd replayed stream batch")(
+      Dedup.neardupStreamIngest(spark, nd, delta, 0L, app = "jobs")) == ((0L, 0L)))
+    assert(fresh._1 > 0L)
+    val iv = s"$root/ivf"
+    Similarity.ivfWriteIndexVecs(spark, vecBase, iv)
+    count("ivf fold-due, no tombstones")(Similarity.ivfFoldDue(spark, iv))
+    count("ivf health, no tombstones")(Similarity.ivfHealth(spark, iv))
+    count("ivf remove")(Similarity.ivfRemove(spark, iv,
+      local(vecs.filter(_.getLong(0) % 9 == 0), vecSchema)))
+    count("ivf fold-due")(Similarity.ivfFoldDue(spark, iv))
+    val ivCard = count("ivf health")(Similarity.ivfHealth(spark, iv)).toMap
+    assert(ivCard("ivf_tombstones") > 0L && ivCard("ivf_gen") == 1L)
+    assert(count("ivf stream batch")(
+      Similarity.ivfStreamIngest(spark, iv, vecDelta, 0L, "jobs")))
+    assert(!count("ivf replayed stream batch")(
+      Similarity.ivfStreamIngest(spark, iv, vecDelta, 0L, "jobs")))
+    val bm = s"$root/bm25"
+    TextAnalysis.bm25WriteIndexDocs(spark, base, bm)
+    assert(count("bm25 stream batch")(
+      TextAnalysis.bm25StreamIngest(spark, bm, delta, 0L, "jobs")))
+    assert(!count("bm25 replayed stream batch")(
+      TextAnalysis.bm25StreamIngest(spark, bm, delta, 0L, "jobs")))
+    info(got.map { case (k, n) => s"$k $n" }.mkString(", "))
+    assert(got.toSeq == lifecycleJobs, s"Spark jobs per call: $got")
+  }
+
+  // the counts these calls ran when each family had its own copy of the steps
+  private val lifecycleJobs: Seq[(String, Int)] = Seq(
+    "nd fold-due, no tombstones" -> 0, "nd health, no tombstones" -> 2,
+    "nd remove" -> 2, "nd fold-due" -> 4, "nd health" -> 4,
+    "nd stream batch" -> 16, "nd replayed stream batch" -> 0,
+    "ivf fold-due, no tombstones" -> 0, "ivf health, no tombstones" -> 2,
+    "ivf remove" -> 2, "ivf fold-due" -> 4, "ivf health" -> 4,
+    "ivf stream batch" -> 3, "ivf replayed stream batch" -> 0,
+    "bm25 stream batch" -> 16, "bm25 replayed stream batch" -> 0)
 }
