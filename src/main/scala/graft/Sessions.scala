@@ -44,6 +44,20 @@ object Sessions {
       // bucketed-table demos (saveAsTable) write here, never the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
 
+  /** Run `body` at `n` shuffle partitions, then restore the prior
+    * width (or unset it) even when `body` throws — the narrow scope a
+    * fixed-size fixture's many tiny jobs run under.
+    */
+  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, n.toString)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val s = configure(SparkSession.builder().appName(appName), cpus).getOrCreate()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fixtures, Par, Tables}
+import graft.{Fixtures, Par, Sessions, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -874,9 +874,7 @@ object Curation {
     // few hundred rows); narrow the shuffle width like
     // indexIngestContract does — identical rows, less per-job
     // scheduling across the drill's many tiny fold/serve jobs
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Sessions.withShufflePartitions(spark, 8) {
     val probe = manifestProbe(docs).localCheckpoint()
     val l0 = drillNdCapCache(dir)(
       Dedup.neardupLookup(spark, ndT, probe).collect().toSeq)
@@ -984,7 +982,7 @@ object Curation {
     }
     Par.all(Seq(() => ndCrashSide(), () => ivCrashSide()))
       .flatten.toDF("metric", "ok").orderBy("metric")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   private val drillIvTCapCache = new Fixtures.Memo[Seq[org.apache.spark.sql.Row]]
@@ -1121,23 +1119,24 @@ object Curation {
     def bm(): Seq[(String, Boolean)] = {
       if (docsEmpty) Seq.empty
       else Seq("tr_bm25_reproduced" ->
-        (TextAnalysis.bm25QueryIndexAsOf(spark, est.bm, gens("bm25").toInt,
-          manifestTerms, 20).collect().toSeq == est.bmServe))
+        (TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20,
+          at = IndexPolicy.At.Gen(gens("bm25"))).collect().toSeq == est.bmServe))
     }
     def nd(): Seq[(String, Boolean)] = {
       if (docsEmpty) Seq.empty
       else {
         val probe = manifestProbe(docs).localCheckpoint(eager = false)
         Seq("tr_nd_reproduced" ->
-          (Dedup.neardupLookupAsOf(spark, est.nd, probe, gens("neardup"))
-            .collect().toSeq == est.ndPairs))
+          (Dedup.neardupLookup(spark, est.nd, probe,
+            at = IndexPolicy.At.Gen(gens("neardup"))).collect().toSeq ==
+            est.ndPairs))
       }
     }
     def iv(): Seq[(String, Boolean)] = {
       if (vecsEmpty) Seq.empty
       else Seq("tr_ivf_reproduced" ->
-        (Similarity.ivfQueryIndexAsOf(spark, dir, est.iv, gens("ivf"))
-          .collect().toSeq == est.ivServe))
+        (Similarity.ivfQueryIndex(spark, dir, est.iv,
+          at = IndexPolicy.At.Gen(gens("ivf"))).collect().toSeq == est.ivServe))
     }
     Par.all(Seq(() => shards(), () => bm(), () => nd(), () => iv()))
       .flatten.toDF("metric", "ok").orderBy("metric")
@@ -1204,24 +1203,24 @@ object Curation {
     def bmSection(): Seq[(String, Boolean)] = {
       val live = TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20)
         .collect().toSeq
-      val asof = TextAnalysis.bm25QueryIndexAsOf(spark, est.bm,
-        est.bmGen.toInt, manifestTerms, 20).collect().toSeq
+      val asof = TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20,
+        at = IndexPolicy.At.Gen(est.bmGen)).collect().toSeq
       Seq("mr_bm25_live_differs" -> (live != est.bmServe),
         "mr_bm25_asof_matches" -> (asof == est.bmServe))
     }
     def ndSection(): Seq[(String, Boolean)] = {
       val probe = manifestProbe(docs).localCheckpoint(eager = false)
       val live = Dedup.neardupLookup(spark, est.nd, probe).collect().toSeq
-      val asof = Dedup.neardupLookupAsOf(spark, est.nd, probe, est.ndGen)
-        .collect().toSeq
+      val asof = Dedup.neardupLookup(spark, est.nd, probe,
+        at = IndexPolicy.At.Gen(est.ndGen)).collect().toSeq
       Seq("mr_nd_live_differs" -> (live != est.ndPairs),
         "mr_nd_asof_matches" -> (asof == est.ndPairs))
     }
     def ivfSection(): Seq[(String, Boolean)] = {
       val live = Similarity.ivfQueryIndex(spark, dir, est.iv)
         .collect().toSeq
-      val asof = Similarity.ivfQueryIndexAsOf(spark, dir, est.iv, est.ivGen)
-        .collect().toSeq
+      val asof = Similarity.ivfQueryIndex(spark, dir, est.iv,
+        at = IndexPolicy.At.Gen(est.ivGen)).collect().toSeq
       Seq("mr_ivf_live_differs" -> (live != est.ivServe),
         "mr_ivf_asof_matches" -> (asof == est.ivServe))
     }
@@ -1418,9 +1417,7 @@ object Curation {
     estateTemplates(spark, dir)
     // fixed-size fixture; narrow the shuffle width across the row's
     // many tiny serve/mutation jobs (the indexIngestContract pattern)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try IndexPolicy.withSnapshotsKept(spark, 10) {
+    Sessions.withShufflePartitions(spark, 8)(IndexPolicy.withSnapshotsKept(spark, 10) {
       val est = snapEstate(spark, dir)
       val pins = spark.read.schema("family string, snap bigint")
         .parquet(est.art).collect()
@@ -1435,12 +1432,12 @@ object Curation {
       // covers only strictly sequential consumers.
       val probe = manifestProbe(docs).localCheckpoint()
       val Seq(bmRep, ndRep, ivRep, bmLive, ndLive, ivLive) = Par.all(Seq(
-        () => TextAnalysis.bm25QueryIndexSnapshot(spark, est.bm, pins("bm25"),
-          manifestTerms, 20).collect().toSeq == est.bmServe,
-        () => Dedup.neardupLookupSnapshot(spark, est.nd, pins("neardup"), probe)
-          .collect().toSeq == est.ndPairs,
-        () => Similarity.ivfQueryIndexSnapshot(spark, dir, est.iv, pins("ivf"))
-          .collect().toSeq == est.ivServe,
+        () => TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20,
+          at = IndexPolicy.At.Snap(pins("bm25"))).collect().toSeq == est.bmServe,
+        () => Dedup.neardupLookup(spark, est.nd, probe,
+          at = IndexPolicy.At.Snap(pins("neardup"))).collect().toSeq == est.ndPairs,
+        () => Similarity.ivfQueryIndex(spark, dir, est.iv,
+          at = IndexPolicy.At.Snap(pins("ivf"))).collect().toSeq == est.ivServe,
         () => TextAnalysis.bm25QueryIndex(spark, est.bm, manifestTerms, 20)
           .collect().toSeq != est.bmServe,
         () => Dedup.neardupLookup(spark, est.nd, probe)
@@ -1458,7 +1455,7 @@ object Curation {
       rows += ("esm_ivf_replays_across_fold" -> ivRep)
       rows += ("esm_live_moved_on" -> (bmLive && ndLive && ivLive))
       def failsFast(idx: String, v: Long): Boolean =
-        try { IndexPolicy.manifestAtSnapshot(spark, idx, v); false }
+        try { IndexPolicy.readPoint(spark, idx, Nil, IndexPolicy.At.Snap(v)); false }
         catch { case _: IllegalArgumentException => true }
       rows += ("esm_expired_decoy_fails_fast" ->
         (failsFast(est.bm, est.bmDecoy) && failsFast(est.nd, est.ndDecoy) &&
@@ -1468,7 +1465,7 @@ object Curation {
           IndexPolicy.refsReclaimed(spark, est.nd, est.ndDecoyRefs) &&
           IndexPolicy.refsReclaimed(spark, est.iv, est.ivDecoyRefs)))
       rows.toSeq.toDF("metric", "ok").orderBy("metric")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    })
   }
 
   /** One micro-batch of the COMPOSED estate stream — the foreachBatch
@@ -1572,9 +1569,7 @@ object Curation {
     val vBatch = allVecs
       .filter(col("vec_id") < 200 && pmod(col("vec_id"), lit(10)) === 3)
       .select((col("vec_id") + 7000000L).as("vec_id"), col("embedding"))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Sessions.withShufflePartitions(spark, 8) {
       // the crash-free twin — the same composed body, once per JVM
       // per corpus dir; its results prove the happy path and its
       // captured end-state is the reference the drilled estate must
@@ -1645,7 +1640,7 @@ object Curation {
       rows += ("esi_gate_nonvacuous" ->
         (twin.results._1 > 0L && twin.results._2 > 0L))
       rows.toSeq.toDF("metric", "ok").orderBy("metric")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   private case class EsiTwin(results: (Long, Long, Boolean, Boolean),
@@ -1754,40 +1749,6 @@ object Curation {
         when(hexDigit <= "b", "train")
           .when(hexDigit <= "d", "val")
           .otherwise("test").as("split"))
-      .orderBy("doc_id")
-  }
-
-  /** Compression-ratio quality signal (the Gopher-rule family):
-    * deflate each doc and report compressed/raw size. Highly
-    * repetitive machine text compresses far below natural language
-    * (~0.4–0.7), so a low ratio is a strong junk signal that pure
-    * token statistics miss. A Scala UDF is the honest physical choice
-    * here — zlib has no Catalyst expression and the work is pure
-    * map-side CPU per row (no shuffle, scan-bound at 100 TB); the UDF
-    * boundary costs one row materialization, irrelevant next to the
-    * deflate itself. Deterministic (fixed level, no timestamps in
-    * raw deflate). No SQL oracle — DuckDB has no zlib scalar; the
-    * spec pins determinism, bounds, and the repetitive≪random
-    * ordering.
-    */
-  def compressionRatio(spark: SparkSession, dir: String): DataFrame = {
-    val ratio = udf { (text: String) =>
-      if (text == null || text.isEmpty) 1.0
-      else {
-        val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED)
-        d.setInput(raw); d.finish()
-        val buf = new Array[Byte](raw.length + 64)
-        var n = 0
-        while (!d.finished()) n += d.deflate(buf, n, buf.length - n)
-        d.end()
-        n.toDouble / raw.length
-      }
-    }
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"),
-        round(ratio(col("text")), 6).as("compress_ratio"),
-        col("n_chars"))
       .orderBy("doc_id")
   }
 

@@ -573,7 +573,7 @@ object Dedup {
     // the pointer swing — the build commit (a build that crashed above
     // left no manifest, and every reader fails fast instead of
     // consuming a partial index); generation 0 is the timeline origin
-    // behind [[neardupLookupAsOf]]
+    // of a generation-pinned [[neardupLookup]]
     IndexPolicy.crashPoint(spark, idx, "after-epoch")
     IndexPolicy.publish(spark, idx, IndexPolicy.rebaseVersion(prior, Map(
       IndexPolicy.layoutEntry(ndLayout(n, k, bands)),
@@ -712,7 +712,7 @@ object Dedup {
                           minJ: Double = 0.2, n: Int = 3, k: Int = 16,
                           bands: Int = 4, app: String = ""): (Long, Long) =
     IndexPolicy.streamBatch(spark, idx, batchId, app, (0L, 0L),
-        _ => compactBody(spark, idx)) { (m, mark) =>
+        compactBody(spark, idx)) { (m, mark) =>
       IndexPolicy.sweep(spark, idx, m)
       val (pairs, sigs) =
         lookupWithSigs(spark, idx, arriving, minJ, n, k, bands,
@@ -734,15 +734,15 @@ object Dedup {
     }
 
   /** Distinct COMMITTED doc_ids stored in the index (docsets side,
-    * torn-ceiling capped; no tombstone filtering — callers comparing
+    * live read point; no tombstone filtering — callers comparing
     * ingest end-states never remove). The contract-compare read
     * behind [[graft.streaming.Streaming.indexIngestContract]].
     */
   def neardupIndexedIds(spark: SparkSession, idx: String): DataFrame = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    spark.read.schema(docsetsSchema)
-      .parquet(s"${IndexPolicy.epochDir(idx, m("data"))}/docsets")
-      .filter(col("gen") <= IndexPolicy.committedOf(m))
+    val rp = IndexPolicy.readPoint(spark, idx, ndLayoutBase,
+      IndexPolicy.At.Live)
+    rp.visible(spark.read.schema(docsetsSchema)
+      .parquet(s"${IndexPolicy.epochDir(idx, rp.m("data"))}/docsets"))
       .select(col("doc_id")).distinct()
   }
 
@@ -750,46 +750,17 @@ object Dedup {
     * the index (and itself) WITHOUT admitting it: the dry-run a gate
     * runs when rejected documents must never enter the index at all
     * (the [[Curation.ingestPipeline]] shape). Same pairs, same cost,
-    * no mutation.
+    * no mutation. `at` pins the index state read
+    * ([[IndexPolicy.At]]): a generation pin is the reproducibility pin
+    * for a re-run ingest gate, which [[neardupCompact]] folds away; a
+    * snapshot pin replays the flagged pairs across that fold.
     */
   def neardupLookup(spark: SparkSession, idx: String, newDocs: DataFrame,
                     minJ: Double = 0.2, n: Int = 3, k: Int = 16,
                     bands: Int = 4,
-                    capBucket: Int = Int.MaxValue): DataFrame =
-    lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket)._1
-
-  /** [[neardupLookup]] AS OF mutation generation `gen` — flag the
-    * delta against the index state after its first `gen` mutations
-    * (gen 0 = the fresh build): admitted rows and tombstones above
-    * the pinned generation don't exist from that generation's point
-    * of view. The reproducibility pin for a re-run ingest gate (the
-    * [[Similarity.ivfQueryIndexAsOf]] analogue); [[neardupCompact]]
-    * folds history away and resets the timeline. Indexes predating
-    * generation tracking fail fast.
-    */
-  def neardupLookupAsOf(spark: SparkSession, idx: String,
-                        newDocs: DataFrame, gen: Long,
-                        minJ: Double = 0.2, n: Int = 3, k: Int = 16,
-                        bands: Int = 4,
-                        capBucket: Int = Int.MaxValue): DataFrame =
-    lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket,
-      asOf = IndexPolicy.pinnedGen(spark, idx, gen))._1
-
-  /** [[neardupLookup]] AS OF a retained manifest SNAPSHOT (the
-    * [[graft.operators.TextAnalysis.bm25QueryIndexSnapshot]] twin):
-    * resolves the immutable `snaps/v-<id>` manifest instead of
-    * `current`, so the flagged pairs at that commit replay
-    * bit-identically even across a COMPACT — which the in-place
-    * generation timeline of [[neardupLookupAsOf]] cannot survive (the
-    * fold resets it by design). Holds while the snapshot is retained;
-    * expired snapshots fail fast.
-    */
-  def neardupLookupSnapshot(spark: SparkSession, idx: String, snap: Long,
-                            newDocs: DataFrame, minJ: Double = 0.2,
-                            n: Int = 3, k: Int = 16, bands: Int = 4,
-                            capBucket: Int = Int.MaxValue): DataFrame =
-    lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket,
-      manifest = Some(IndexPolicy.manifestAtSnapshot(spark, idx, snap)))._1
+                    capBucket: Int = Int.MaxValue,
+                    at: IndexPolicy.At = IndexPolicy.At.Live): DataFrame =
+    lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket, at)._1
 
   /** A lookup's (pairs, sigs): pairs sorted by (a, b) and already
     * materialized, so a later admit into the index cannot change them;
@@ -801,52 +772,21 @@ object Dedup {
   private def lookupWithSigs(spark: SparkSession, idx: String,
                              newDocs: DataFrame, minJ: Double, n: Int,
                              k: Int, bands: Int, capBucket: Int,
-                             asOf: Option[Long] = None,
-                             manifest: Option[IndexPolicy.Manifest] = None)
+                             at: IndexPolicy.At = IndexPolicy.At.Live)
       : (DataFrame, DataFrame) = {
     val probe = rowDocSig(newDocs, n, k, bands)
     IndexPolicy.localProbe(probe, "doc_id") match {
       case Some(rows) =>
-        val (m, ceil) = readAt(spark, idx, n, k, bands, asOf, manifest)
-        lookupLocal(spark, idx, m, ceil, probe.schema, rows, minJ, capBucket)
+        lookupLocal(spark, idx,
+          IndexPolicy.readPoint(spark, idx, ndLayout(n, k, bands), at),
+          probe.schema, rows, minJ, capBucket)
       case None =>
         val (pairs, sigs, _) =
-          lookupPlan(spark, idx, newDocs, minJ, n, k, bands, capBucket, asOf,
-            manifest)
+          lookupPlan(spark, idx, newDocs, minJ, n, k, bands, capBucket, at)
         // eager snapshot BEFORE any admit mutates the index — a returned
         // plan must never see the delta's own appended postings
         (pairs.localCheckpoint().orderBy("a", "b"), sigs)
     }
-  }
-
-  /** The manifest a lookup reads and its read ceiling. The manifest
-    * resolves ONCE: every read targets immutable epoch dirs it names,
-    * so a mutation that commits mid-lookup cannot break the lookup
-    * (r16 #1 — no fail-fast window). A SNAPSHOT lookup passes its
-    * retained manifest in and reads the index exactly as of that
-    * commit.
-    *
-    * The ceiling: the pinned as-of generation, further capped at the
-    * last COMMITTED generation when a crashed mutation left the
-    * allocated watermark ahead of its rows (r15 ADVICE) — a torn
-    * check-in must read as "never happened", not as buckets rows
-    * missing their docsets twins. A SNAPSHOT lookup caps at the
-    * snapshot's OWN committed watermark (r19): in-place mutations
-    * after the snapshot append higher-generation rows INTO the very
-    * epoch dirs the snapshot references (check-ins into its data
-    * epoch, removals into its tombstones epoch), and the manifest
-    * alone cannot exclude them — without this cap a post-snapshot
-    * removal would retroactively suppress pairs from the pinned
-    * ranking. Healthy LIVE reads (the always case) get NO ceiling.
-    */
-  private def readAt(spark: SparkSession, idx: String, n: Int, k: Int,
-                     bands: Int, asOf: Option[Long],
-                     manifest: Option[IndexPolicy.Manifest])
-      : (IndexPolicy.Manifest, Option[Long]) = {
-    val m = manifest.getOrElse(IndexPolicy.manifestOf(spark, idx))
-    IndexPolicy.checkLayout(m, idx, ndLayout(n, k, bands))
-    (m, (asOf.toSeq ++ IndexPolicy.tornCeiling(m).toSeq ++
-      manifest.map(IndexPolicy.committedOf).toSeq).reduceOption(_ min _))
   }
 
   /** The small-probe lookup: [[lookupPlan]]'s pairs for a probe whose
@@ -865,13 +805,11 @@ object Dedup {
     * both LocalRelations.
     */
   private def lookupLocal(spark: SparkSession, idx: String,
-                          m: IndexPolicy.Manifest, ceil: Option[Long],
+                          rp: IndexPolicy.ReadPoint,
                           schema: StructType, rows: Array[Row], minJ: Double,
                           capBucket: Int): (DataFrame, DataFrame) = {
     import scala.jdk.CollectionConverters._
-    val ed = IndexPolicy.epochDir(idx, m("data"))
-    def atCeil(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
+    val ed = IndexPolicy.epochDir(idx, rp.m("data"))
     // md5DocSig has no row for a shingle-less document
     val docs = rows.filter(r =>
       !r.isNullAt(r.fieldIndex("sz")) && r.getAs[Int]("sz") > 0)
@@ -889,12 +827,12 @@ object Dedup {
     val postings: Seq[(Int, String, Long, Int)] =
       if (keys.isEmpty) Nil
       else {
-        val dead = IndexPolicy.deadIds(ndTombs.of(spark, idx, m),
-          "doc_id", ceil)
+        val dead = IndexPolicy.deadIds(rp, ndTombs.of(spark, idx, rp.m),
+          "doc_id")
         val inDirs = keys.groupMap(_._1)(_._3).map { case (band, pbs) =>
           col("band") === band && col("pb").isin(pbs.distinct: _*)
         }.reduce(_ || _)
-        val scan = atCeil(spark.read.schema(bucketsSchema)
+        val scan = rp.visible(spark.read.schema(bucketsSchema)
             .parquet(s"$ed/buckets"))
           .filter(inDirs && col("bucket").isin(keys.map(_._2).distinct: _*))
         val live =
@@ -930,7 +868,7 @@ object Dedup {
       if (need.isEmpty) Map.empty
       else {
         val dbOfId = postings.map(p => p._3 -> p._4).toMap
-        atCeil(spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
+        rp.visible(spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
           .filter(col("db").isin(need.map(dbOfId).distinct: _*) &&
             col("doc_id").isin(need: _*))
           .select(col("doc_id"), col("dset"), col("sz"),
@@ -977,11 +915,10 @@ object Dedup {
                                 newDocs: DataFrame, minJ: Double, n: Int,
                                 k: Int, bands: Int,
                                 capBucket: Int,
-                                asOf: Option[Long] = None,
-                                manifest: Option[IndexPolicy.Manifest] = None)
+                                at: IndexPolicy.At = IndexPolicy.At.Live)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (m, ceil) = readAt(spark, idx, n, k, bands, asOf, manifest)
-    val ed = IndexPolicy.epochDir(idx, m("data"))
+    val rp = IndexPolicy.readPoint(spark, idx, ndLayout(n, k, bands), at)
+    val ed = IndexPolicy.epochDir(idx, rp.m("data"))
     // LAZY checkpoint (r21): materialized by the first action over the
     // plan — since r22 that is the caller's single pairs snapshot; the
     // admit writes then reuse the persisted blocks. Lineage is
@@ -1005,16 +942,14 @@ object Dedup {
     // extra job per lookup (LayoutSpec still asserts scanned < total
     // files). pb is a deterministic function of bucket, so the extra
     // join key never drops a row.
-    val rawScan = spark.read.schema(bucketsSchema).parquet(s"$ed/buckets")
     // as-of / torn-commit: rows and tombstones ABOVE the ceiling
     // don't exist from this read's point of view
-    val rawBand = ceil.fold(rawScan)(g =>
-      rawScan.filter(col("gen") <= g))
+    val rawBand = rp.visible(
+      spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
     // tombstoned (removed) docs stop matching immediately: the dead-id
     // set is removal-sized and broadcasts into an anti-join over the
     // postings scan — no index file rewrite until neardupCompact
-    val iBand = ndTombs.of(spark, idx, m)
-      .map(d => ceil.fold(d)(g => d.filter(col("gen") <= g)))
+    val iBand = ndTombs.of(spark, idx, rp.m).map(rp.visible)
       .fold(rawBand)(dead =>
         rawBand.join(broadcast(dead.select(col("doc_id"))),
           Seq("doc_id"), "left_anti"))
@@ -1068,8 +1003,8 @@ object Dedup {
       .distinct()
       .withColumn("db", dbOf(col("doc_id")))
       .filter(col("db") >= 0)
-    val idxSets = spark.read.schema(docsetsSchema).parquet(s"$ed/docsets")
-      .filter(ceil.map(g => col("gen") <= g).getOrElse(lit(true)))
+    val idxSets = rp.visible(
+        spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
       .join(broadcast(candIds), Seq("db", "doc_id"))
       .select(col("doc_id"), col("dset"), col("sz"), lit(0).as("ord"))
     val deltaSets = sigs
@@ -1156,15 +1091,15 @@ object Dedup {
     * .allocGen]]'s refusal until a manual compact).
     */
   private def compactBody(spark: SparkSession, idx: String): Unit = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, ndLayoutBase)
+    // the live read point: committed rows only, so a torn index's
+    // orphans drop out of the rewrite
+    val rp = IndexPolicy.readPoint(spark, idx, ndLayoutBase,
+      IndexPolicy.At.Live)
+    val m = rp.m
     IndexPolicy.sweep(spark, idx, m)
-    val ceil = IndexPolicy.tornCeiling(m)
-    def committedRows(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    val dead = ndTombs.of(spark, idx, m).map(committedRows) match {
+    val dead = ndTombs.of(spark, idx, m).map(rp.visible) match {
       case Some(d) => d
-      case None if ceil.isEmpty => return // nothing to fold, nothing to repair
+      case None if rp.ceil.isEmpty => return // nothing to fold, nothing to repair
       case None => // torn but tombstone-free: still rewrite to repair
         spark.range(0).select(col("id").as("doc_id"), lit(0L).as("gen"))
     }
@@ -1176,7 +1111,7 @@ object Dedup {
     // run them as concurrent jobs (r21, the admitSigs pattern), so
     // the fold's wall-clock is the wider rewrite, not the sum.
     Par.all(Seq(
-      () => committedRows(
+      () => rp.visible(
           spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
         .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         .select(col("band"), col("pb"), col("doc_id"), col("bucket"),
@@ -1184,7 +1119,7 @@ object Dedup {
         .repartition(col("band"), col("pb"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("band", "pb").parquet(s"$ed2/buckets"),
-      () => committedRows(
+      () => rp.visible(
           spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
         .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         .select(col("db"), col("doc_id"), col("dset"), col("sz"),
@@ -1237,7 +1172,7 @@ object Dedup {
       docs.filter(pmod(col("doc_id"), lit(4)) === 1), minJ)
   }
 
-  /** Registry row for [[neardupLookupAsOf]]: a copy of the pristine
+  /** Generation-pinned [[neardupLookup]] registry row: a copy of the pristine
     * base index absorbs two mutations — gen 1 CHECKS IN the held-out
     * quarter (doc_id ≡ 1 mod 4, admitted), gen 2 REMOVES the base
     * docs with doc_id ≡ 0 (mod 8) — then a probe delta of re-tagged
@@ -1280,7 +1215,7 @@ object Dedup {
     }
     val probe = docs.filter(pmod(col("doc_id"), lit(8)) <= 1)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    neardupLookupAsOf(spark, idx, probe, gen, minJ)
+    neardupLookup(spark, idx, probe, minJ, at = IndexPolicy.At.Gen(gen))
   }
 
   private val asofIdxCache = new Fixtures.Index("neardup_asof")
@@ -1351,9 +1286,7 @@ object Dedup {
       pristineBase(spark, dir, docs),
       IndexPolicy.SnapHooks(
         build = removeMod(8, 0),
-        serve = neardupLookup(spark, _, probe, minJ),
-        asOf = neardupLookupAsOf(spark, _, probe, 1L, minJ),
-        snapshot = neardupLookupSnapshot(spark, _, _, probe, minJ),
+        serve = (idx, at) => neardupLookup(spark, idx, probe, minJ, at = at),
         rewrite = neardupCompact(spark, _),
         drift = neardupCheckIn(spark, _,
           docs.filter(pmod(col("doc_id"), lit(32)) === 2)

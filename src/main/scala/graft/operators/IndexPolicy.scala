@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 
 /** Policy and bookkeeping shared by the index families: the
-  * lifecycle steps written once for all of them — near-dup and IVF
-  * tombstone removal, fold-due and health card ([[Tombstoned]]; bm25's
-  * segment-count budget is a genuinely different knob and stays in
-  * [[TextAnalysis]]), the stream-batch gate ([[streamBatch]]), the
-  * snapshot-retention scope and snapshot-as-of drill — and the
-  * POINTER-COMMIT protocol every index mutation publishes through.
+  * lifecycle steps written once for all of them — read resolution
+  * ([[readPoint]]: live, as-of and snapshot serves), near-dup and
+  * IVF tombstone removal, fold-due and health card ([[Tombstoned]];
+  * bm25's segment-count budget is a genuinely different knob and
+  * stays in [[TextAnalysis]]), the stream-batch gate
+  * ([[streamBatch]]), the snapshot-retention scope and
+  * snapshot-as-of drill — and the POINTER-COMMIT protocol every
+  * index mutation publishes through.
   *
   * ==Pointer-commit protocol== (r16 verdict #1 — the port of the old
   * rename-swap design note): each index root holds exactly ONE small
@@ -1149,15 +1151,13 @@ private[graft] object IndexPolicy {
 
   /** A family's [[snapshotAsOfDrill]] steps, each given the index
     * path: `build` mutates the pristine copy into the snapshotted
-    * base; `asOf` reads interior generation 1; `rewrite` is the
-    * history-destroying fold; `drift` moves the live serve on (a no-op
-    * when the rewrite already does); `expire` runs the sweep after S
-    * expired.
+    * base; `serve` is the family serve at a read point; `rewrite` is
+    * the history-destroying fold; `drift` moves the live serve on (a
+    * no-op when the rewrite already does); `expire` runs the sweep
+    * after S expired.
     */
   final case class SnapHooks(build: String => Unit,
-                             serve: String => DataFrame,
-                             asOf: String => DataFrame,
-                             snapshot: (String, Long) => DataFrame,
+                             serve: (String, At) => DataFrame,
                              rewrite: String => Unit,
                              drift: String => Unit,
                              expire: String => Unit)
@@ -1166,13 +1166,13 @@ private[graft] object IndexPolicy {
 
   /** The SNAPSHOT TIME TRAVEL contract of one family (the
     * `*_snapshot_asof` rows), on a copy of the snapshotted base with
-    * retention on: the rewrite makes the interior as-of read fail
-    * fast; after the drift, serving as of the base's snapshot S
-    * replays its captured rows bit-identically while the live serve
-    * has moved on; once S expires, the next sweep reclaims the dirs
-    * only S referenced and the snapshot read fails fast. Rows
-    * (metric, ok), oracle-pinned TRUE; none when the base mutation
-    * left no snapshot or `corpus` is empty. The base (kind
+    * retention on: the rewrite makes the read as of interior
+    * generation 1 fail fast; after the drift, serving as of the
+    * base's snapshot S replays its captured rows bit-identically
+    * while the live serve has moved on; once S expires, the next
+    * sweep reclaims the dirs only S referenced and the snapshot read
+    * fails fast. Rows (metric, ok), oracle-pinned TRUE; none when the
+    * base mutation left no snapshot or `corpus` is empty. The base (kind
     * `<kind>_snapbase`) is built once per JVM per corpus dir from
     * `pristine`, which is built OUTSIDE the retention window (a
     * baked-in snapshot would pin every copying fixture's epochs
@@ -1192,23 +1192,23 @@ private[graft] object IndexPolicy {
           TextAnalysis.copyIndex(spark, vb, base)
           h.build(base)
           snapshotIds(spark, base).lastOption.fold((-1L, Seq.empty[Row]))(
-            s => (s, h.serve(base).collect().toSeq))
+            s => (s, h.serve(base, At.Live).collect().toSeq))
         }
         if (snap < 0L) Seq.empty[(String, Boolean)]
         else {
           val idx = graft.Fixtures.copyOf(spark, base, s"${kind}_snap", dir)
           val snapToks = snapshotRefTokens(spark, idx, snap)
           h.rewrite(idx)
-          val killed = failsFast(h.asOf(idx))
+          val killed = failsFast(h.serve(idx, At.Gen(1L)))
           h.drift(idx)
-          val replays = h.snapshot(idx, snap).collect().toSeq == want
-          val moved = h.serve(idx).collect().toSeq != want
+          val replays = h.serve(idx, At.Snap(snap)).collect().toSeq == want
+          val moved = h.serve(idx, At.Live).collect().toSeq != want
           expireSnapshots(spark, idx, 1)
           h.expire(idx)
           Seq("snap_rewrite_kills_inplace_asof" -> killed,
             "snap_retained_replays_after_rewrite" -> replays,
             "snap_live_moved_on" -> moved,
-            "snap_expired_fails_fast" -> failsFast(h.snapshot(idx, snap)),
+            "snap_expired_fails_fast" -> failsFast(h.serve(idx, At.Snap(snap))),
             "snap_expiry_reclaims_dirs" -> refsReclaimed(spark, idx, snapToks))
         }
       }
@@ -1638,17 +1638,6 @@ private[graft] object IndexPolicy {
     (g + 1L, m2)
   }
 
-  /** `gen` as an as-of read pin: within [0, the COMMITTED generation]
-    * — an uncommitted (crashed) mutation is not a state anyone can
-    * pin — or fail fast.
-    */
-  def pinnedGen(spark: SparkSession, idx: String, gen: Long): Option[Long] = {
-    val cur = committedOf(manifestOf(spark, idx))
-    require(gen >= 0L && gen <= cur,
-      s"as-of generation $gen outside [0, $cur] for $idx")
-    Some(gen)
-  }
-
   /** Commit generation `g` (and any manifest changes the mutation
     * carries — a freshly-minted tombstones epoch, a new stats epoch)
     * in ONE pointer swing.
@@ -1657,6 +1646,92 @@ private[graft] object IndexPolicy {
                 extra: Manifest = Map.empty): Unit = {
     publish(spark, idx, m ++ extra + ("gen_committed" -> g.toString))
     ()
+  }
+
+  // ---------------------------------------------------------------
+  // read resolution — the ONE place a serve decides what it reads.
+  // The manifest resolves ONCE: everything a serve reads is an
+  // immutable epoch dir that manifest names, so a mutation that
+  // commits mid-serve cannot touch those dirs and the serve returns
+  // the pre-swing state instead of failing (r16 #1). The same read
+  // validates an as-of pin, so a fold that commits between the check
+  // and the serve cannot relabel the folded index as the pinned
+  // generation.
+  // ---------------------------------------------------------------
+
+  /** The state of an index a family serve reads. */
+  sealed trait At
+  object At {
+    /** The committed state: the current manifest, capped at its last
+      * COMMITTED generation when a crashed mutation left the allocated
+      * watermark ahead of its rows (r15 ADVICE) — a torn mutation
+      * reads as "never happened", not as buckets rows missing their
+      * docsets twins. A healthy index gets no ceiling and no filter.
+      */
+    case object Live extends At
+
+    /** AS OF mutation generation `g`: the index after its first `g`
+      * mutations (gen 0 = the fresh build), regardless of what landed
+      * since — rows and tombstones above `g` don't exist from that
+      * generation's point of view, and the IVF centroids never move
+      * on an append, so a historical serve routes as it did then.
+      * The reproducibility pin a training manifest records. A bm25
+      * generation counts SEGMENTS: the serve reads the base plus the
+      * first `g` segments with the pre-append stats snapshot of
+      * segment g+1. `g` must lie in [0, the committed generation] of
+      * the manifest the serve reads, or the read fails fast; a fold
+      * (compact, retrain) resets the timeline to generation 0 by
+      * design, so a pin taken before it fails fast after it.
+      */
+    final case class Gen(g: Long) extends At
+
+    /** AS OF retained manifest snapshot `id` (r17 verdict #3, the
+      * manifest-log form of time travel): the serve reads the
+      * immutable `snaps/v-<id>` manifest instead of `current`, so the
+      * result at that commit replays bit-identically even across the
+      * folds that reset the generation timeline. The ceiling is the
+      * snapshot's OWN committed generation (r19): in-place appends and
+      * removals after the snapshot land higher-generation rows INTO
+      * the epoch dirs it references, which the manifest alone cannot
+      * exclude. Holds while the snapshot is retained ([[sweep]] pins
+      * its dirs); an expired one fails fast.
+      */
+    final case class Snap(id: Long) extends At
+  }
+
+  /** A resolved read: the manifest `m` a serve reads and its
+    * visibility ceiling — rows (and tombstones) tagged above `ceil`
+    * are invisible. None reads every row.
+    */
+  final case class ReadPoint(m: Manifest, ceil: Option[Long]) {
+    def visible(df: DataFrame): DataFrame =
+      ceil.fold(df)(g => df.filter(col("gen") <= g))
+  }
+
+  /** Resolve `at` on `idx`: read `current` or the retained snapshot
+    * ONCE, check its layout stamp against `layout`, validate a
+    * [[At.Gen]] pin against that same manifest, and cap the ceiling
+    * at the minimum of the pin, the torn ceiling and a snapshot's own
+    * committed generation. `committed` counts the family's
+    * generations (bm25: its segments).
+    */
+  def readPoint(spark: SparkSession, idx: String, layout: Seq[(String, Long)],
+                at: At, committed: Manifest => Long = committedOf): ReadPoint = {
+    val m = at match {
+      case At.Snap(v) => manifestAtSnapshot(spark, idx, v)
+      case _ => manifestOf(spark, idx)
+    }
+    checkLayout(m, idx, layout)
+    val pin = at match {
+      case At.Live => None
+      case At.Gen(g) =>
+        val cur = committed(m)
+        require(g >= 0L && g <= cur,
+          s"as-of generation $g outside [0, $cur] for $idx")
+        Some(g)
+      case At.Snap(_) => Some(committed(m))
+    }
+    ReadPoint(m, (pin.toSeq ++ tornCeiling(m)).reduceOption(_ min _))
   }
 
   /** The per-stream exactly-once watermark key (r18 ADVICE — the
@@ -1735,17 +1810,15 @@ private[graft] object IndexPolicy {
     commitGen(spark, idx, m1, g, extra)
   }
 
-  /** Footer counts capped at the torn ceiling: live tombstones (no
-    * job when there are none) and, on first use, stored rows. */
+  /** Footer counts of the live read point: live tombstones (no job
+    * when there are none) and, on first use, stored rows. */
   private final class FooterCounts(spark: SparkSession, idx: String,
                                     f: Tombstoned) {
-    val m: Manifest = manifestOf(spark, idx)
-    private val ceil = tornCeiling(m)
-    private def capped(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
+    private val rp = readPoint(spark, idx, f.layout, At.Live)
+    val m: Manifest = rp.m
     val dead: Long =
-      f.of(spark, idx, m).map(d => capped(d).count()).getOrElse(0L)
-    lazy val rows: Long = capped(spark.read.schema(f.schema)
+      f.of(spark, idx, m).map(d => rp.visible(d).count()).getOrElse(0L)
+    lazy val rows: Long = rp.visible(spark.read.schema(f.schema)
       .parquet(s"${epochDir(idx, m("data"))}/${f.table}")).count()
     def foldDue(maxFrac: Double): Boolean =
       tombstoneFoldDue(dead, rows, maxFrac)
@@ -1781,7 +1854,7 @@ private[graft] object IndexPolicy {
     */
   private[graft] def streamBatch[T](spark: SparkSession, idx: String,
                                     batchId: Long, app: String, replayed: T,
-                                    repair: Manifest => Unit = _ => ())
+                                    repair: => Unit = ())
                                    (admit: (Manifest, Manifest) => T): T =
     mutate(spark, idx) {
       val key = streamKey(app)
@@ -1790,7 +1863,7 @@ private[graft] object IndexPolicy {
       else {
         val m =
           if (tornCeiling(m0).isEmpty) m0
-          else { repair(m0); manifestOf(spark, idx) }
+          else { repair; manifestOf(spark, idx) }
         admit(m, Map(key -> batchId.toString))
       }
     }
@@ -1824,14 +1897,13 @@ private[graft] object IndexPolicy {
     }
 
   /** The distinct ids of a family's tombstones table visible at read
-    * ceiling `ceil`, collected for a small-probe read's literal
-    * NOT IN filter: one Spark job, none when the manifest names no
+    * point `rp`, collected for a small-probe read's literal NOT IN
+    * filter: one Spark job, none when the manifest names no
     * tombstones. Tombstones are removal-sized, and the fold policy
     * ([[tombstoneFoldDue]]) bounds them to a fraction of stored rows.
     */
-  def deadIds(tombstones: Option[DataFrame], id: String,
-              ceil: Option[Long]): Seq[Long] =
+  def deadIds(rp: ReadPoint, tombstones: Option[DataFrame],
+              id: String): Seq[Long] =
     tombstones.fold(Seq.empty[Long])(d =>
-      ceil.fold(d)(g => d.filter(col("gen") <= g)).select(col(id))
-        .collect().map(_.getLong(0)).distinct.toSeq)
+      rp.visible(d).select(col(id)).collect().map(_.getLong(0)).distinct.toSeq)
 }

@@ -438,21 +438,6 @@ object Multimodal {
       .select(col("media_id"), col("media_type"), col("n_bytes"))
       .orderBy("media_id")
 
-  /** Feature-extraction summary over the decoded (stub) features —
-    * exercises the full typed pipeline; deterministic, verified by
-    * unit test rather than SQL oracle (the fake decode is not SQL).
-    */
-  def featureSummary(spark: SparkSession, dir: String): DataFrame =
-    decodeFeatures(spark, dir).toDF()
-      .groupBy((col("media_id") % 10).as("bucket"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("n_bytes")).as("total_bytes"),
-        min(col("width")).as("min_w"),
-        max(col("height")).as("max_h")
-      )
-      .orderBy("bucket")
-
   // ---- REAL audio path (WAV container via javax.sound.sampled) ----
 
   case class AudioRecord(media_id: Long, payload: Array[Byte],

@@ -1008,7 +1008,7 @@ object Similarity {
   def ivfStreamIngest(spark: SparkSession, idx: String, vecs: DataFrame,
                       batchId: Long, app: String = ""): Boolean =
     IndexPolicy.streamBatch(spark, idx, batchId, app, false,
-        ivfDropUncommitted(spark, idx, _)) { (_, mark) =>
+        ivfDropUncommitted(spark, idx)) { (_, mark) =>
       appendVectorsBody(spark, idx, vecs, mark)
       true
     }
@@ -1023,15 +1023,17 @@ object Similarity {
     * fold is a full retrain, which needs the vector corpus a stream
     * doesn't have; dropping uncommitted rows needs only the index.
     */
-  private def ivfDropUncommitted(spark: SparkSession, idx: String,
-                                 m: IndexPolicy.Manifest): Unit = {
-    IndexPolicy.checkLayout(m, idx, ivfLayoutBase)
+  private def ivfDropUncommitted(spark: SparkSession, idx: String): Unit = {
+    // the live read point of a torn index is capped at the committed
+    // generation: exactly the rows the repair keeps
+    val rp = IndexPolicy.readPoint(spark, idx, ivfLayoutBase,
+      IndexPolicy.At.Live)
+    val m = rp.m
     val ceil = IndexPolicy.committedOf(m)
     val ed = IndexPolicy.epochDir(idx, m("data"))
     val tok = IndexPolicy.newEpoch()
     val ed2 = IndexPolicy.epochDir(idx, tok)
-    spark.read.schema(listsSchema).parquet(s"$ed/lists")
-      .filter(col("gen") <= ceil)
+    rp.visible(spark.read.schema(listsSchema).parquet(s"$ed/lists"))
       .select(col("cell"), col("vec_id"), col("embedding"), col("gen"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(s"$ed2/lists")
@@ -1040,7 +1042,7 @@ object Similarity {
       .parquet(s"$ed2/centroids")
     val tombExtra = ivfTombs.of(spark, idx, m).map { d =>
       val t2 = IndexPolicy.newEpoch()
-      d.filter(col("gen") <= ceil)
+      rp.visible(d)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"${IndexPolicy.epochDir(idx, t2)}/tombstones")
       "tombstones" -> t2
@@ -1095,45 +1097,16 @@ object Similarity {
     * The broadcasts of the routing and the query vectors assume
     * serving-batch-sized query sets (the standard ANN serving
     * shape); a bulk-scoring job over a corpus-sized query set would
-    * chunk it into batches upstream.
+    * chunk it into batches upstream. `at` pins the index state served
+    * ([[IndexPolicy.At]]): a generation pin is the reproducibility pin
+    * for retrieval, which a retrain folds away; a snapshot pin
+    * replays the ranking across that retrain.
     */
   def ivfQueryIndex(spark: SparkSession, dir: String, idx: String,
-                    nQueries: Int = 8, kNN: Int = 5,
-                    nProbe: Int = 2): DataFrame =
-    ivfQueryIndexWhere(spark, dir, idx, col("vec_id") < nQueries, kNN, nProbe)
-
-  /** Serve top-k AS OF mutation generation `gen` — the index state
-    * after its first `gen` mutations (gen 0 = the fresh build),
-    * regardless of the appends/removals that landed since: list rows
-    * and tombstones above the pinned generation are excluded, and
-    * the centroids are build-invariant (the FAISS add model never
-    * moves them), so a historical serve routes exactly as it did
-    * then. The reproducibility pin for retrieval (the
-    * [[graft.operators.TextAnalysis.bm25QueryIndexAsOf]] analogue);
-    * a retrain deletes the dir and resets the timeline to gen 0 by
-    * design. Indexes predating generation tracking fail fast.
-    */
-  def ivfQueryIndexAsOf(spark: SparkSession, dir: String, idx: String,
-                        gen: Long, nQueries: Int = 8, kNN: Int = 5,
-                        nProbe: Int = 2): DataFrame =
+                    nQueries: Int = 8, kNN: Int = 5, nProbe: Int = 2,
+                    at: IndexPolicy.At = IndexPolicy.At.Live): DataFrame =
     ivfQueryIndexWhere(spark, dir, idx, col("vec_id") < nQueries, kNN,
-      nProbe, asOf = IndexPolicy.pinnedGen(spark, idx, gen))
-
-  /** [[ivfQueryIndex]] AS OF a retained manifest SNAPSHOT (the
-    * [[graft.operators.TextAnalysis.bm25QueryIndexSnapshot]] twin):
-    * resolves the immutable `snaps/v-<id>` manifest, so the ranking at
-    * that commit replays bit-identically even across a RETRAIN — the
-    * rewrite that resets the in-place generation timeline
-    * [[ivfQueryIndexAsOf]] pins against. Holds while the snapshot is
-    * retained; expired snapshots fail fast.
-    */
-  def ivfQueryIndexSnapshot(spark: SparkSession, dir: String, idx: String,
-                            snap: Long, nQueries: Int = 8, kNN: Int = 5,
-                            nProbe: Int = 2): DataFrame =
-    ivfQueryIndexVecs(spark, idx,
-      Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries),
-      kNN, nProbe, manifest =
-        Some(IndexPolicy.manifestAtSnapshot(spark, idx, snap)))
+      nProbe, at)
 
   /** [[ivfQueryIndex]] with an arbitrary query-set predicate — the
     * recall contracts draw their queries from slices (e.g. the
@@ -1143,9 +1116,10 @@ object Similarity {
                                         idx: String,
                                         qpred: org.apache.spark.sql.Column,
                                         kNN: Int, nProbe: Int,
-                                        asOf: Option[Long] = None): DataFrame =
+                                        at: IndexPolicy.At = IndexPolicy.At.Live)
+      : DataFrame =
     ivfQueryIndexVecs(spark, idx,
-      Tables.embeddings(spark, dir).filter(qpred), kNN, nProbe, asOf)
+      Tables.embeddings(spark, dir).filter(qpred), kNN, nProbe, at)
 
   /** The serve core over an ARBITRARY query set (vec_id, embedding) —
     * the same routing/pruning/scoring regardless of which table the
@@ -1160,30 +1134,12 @@ object Similarity {
     */
   def ivfQueryIndexVecs(spark: SparkSession, idx: String,
                         queries: DataFrame, kNN: Int = 5, nProbe: Int = 2,
-                        asOf: Option[Long] = None,
-                        manifest: Option[IndexPolicy.Manifest] = None)
+                        at: IndexPolicy.At = IndexPolicy.At.Live)
       : DataFrame = {
     import spark.implicits._
-    // the manifest resolves ONCE: everything this serve reads below is
-    // an immutable epoch dir it names — a mutation that commits while
-    // the serve is running cannot touch those dirs, so the serve
-    // returns the pre-swing generation instead of failing (r16 #1). A
-    // SNAPSHOT serve passes its retained manifest in and reads the
-    // index exactly as of that commit.
-    val m = manifest.getOrElse(IndexPolicy.manifestOf(spark, idx))
-    IndexPolicy.checkLayout(m, idx, ivfLayoutBase)
+    val rp = IndexPolicy.readPoint(spark, idx, ivfLayoutBase, at)
+    val m = rp.m
     val ed = IndexPolicy.epochDir(idx, m("data"))
-    // read ceiling: the pinned as-of generation, capped at the last
-    // COMMITTED generation when a crashed mutation left the allocated
-    // watermark ahead of its rows — healthy live indexes get no extra
-    // filter. A SNAPSHOT serve caps at the snapshot's OWN committed
-    // watermark (r19): post-snapshot appends/removals land
-    // higher-generation rows INTO the epoch dirs the snapshot
-    // references, and the manifest alone cannot exclude them — the
-    // estate snapshot row exposed exactly this (an append into the
-    // pinned epoch leaked into the replay).
-    val ceil = (asOf.toSeq ++ IndexPolicy.tornCeiling(m).toSeq ++
-      manifest.map(IndexPolicy.committedOf).toSeq).reduceOption(_ min _)
     graft.functions.GraftFunctions.register(spark)
     val ndot = graft.functions.GraftFunctions.dot _
     val cents = spark.read.schema(centroidsSchema).parquet(s"$ed/centroids")
@@ -1196,9 +1152,8 @@ object Similarity {
       (sqrt(qdot(col("qq"), col("qq"))) * sqrt(qdot(col("cv"), col("cv"))))
     // as-of / torn-commit: list rows and tombstones ABOVE the ceiling
     // don't exist from this read's point of view
-    def atCeil(df: DataFrame): DataFrame =
-      ceil.fold(df)(g => df.filter(col("gen") <= g))
-    val rawLists = atCeil(spark.read.schema(listsSchema).parquet(s"$ed/lists"))
+    val rawLists = rp.visible(
+      spark.read.schema(listsSchema).parquet(s"$ed/lists"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
     // scoring + top-k over (qid, qv, vec_id, embedding) candidate rows
@@ -1213,7 +1168,7 @@ object Similarity {
       .select(col("qid"), col("rnk"), col("cid"), round(col("sim"), 6).as("sim"))
     IndexPolicy.localProbe(q, "qid") match {
       case Some(qs) =>
-        serveLocal(spark, idx, m, ceil, q.schema, qs, cents, routeScore,
+        serveLocal(spark, idx, rp, q.schema, qs, cents, routeScore,
           rawLists, nProbe, topK)
       case None =>
         // routing: nProbe best cells per query
@@ -1247,7 +1202,7 @@ object Similarity {
         // tombstoned (removed) vectors drop before scoring — the
         // dead-id set is removal-sized and broadcasts into an anti-join
         // over the pruned list scan; no list file is ever rewritten
-        val lists = ivfTombs.of(spark, idx, m).map(atCeil).fold(rawLists)(
+        val lists = ivfTombs.of(spark, idx, m).map(rp.visible).fold(rawLists)(
           d => rawLists.join(broadcast(d.select(col("vec_id"))),
             Seq("vec_id"), "left_anti"))
         topK(lists.join(broadcast(routing), "cell")
@@ -1272,7 +1227,7 @@ object Similarity {
     * distributed path's.
     */
   private def serveLocal(spark: SparkSession, idx: String,
-                         m: IndexPolicy.Manifest, ceil: Option[Long],
+                         rp: IndexPolicy.ReadPoint,
                          qSchema: StructType, qs: Array[Row],
                          cents: DataFrame, routeScore: Column,
                          rawLists: DataFrame, nProbe: Int,
@@ -1306,8 +1261,7 @@ object Similarity {
       routed.map(r => Row(r.getLong(0), r.getLong(1), qv(r.getLong(0)))),
       ArrayType(StructType(Seq(StructField("qid", LongType),
         StructField("cell", LongType), qSchema("qv"))))))
-    val dead = IndexPolicy.deadIds(ivfTombs.of(spark, idx, m), "vec_id",
-      ceil)
+    val dead = IndexPolicy.deadIds(rp, ivfTombs.of(spark, idx, rp.m), "vec_id")
     val lists = rawLists.filter(col("cell").isin(routed.map(_.getLong(1))
       .distinct: _*))
     val live =
@@ -1377,7 +1331,7 @@ object Similarity {
     ivfQueryIndex(spark, dir, idx, nQueries, kNN, nProbe)
   }
 
-  /** Registry row for [[ivfQueryIndexAsOf]]: a copy of the serve
+  /** Generation-pinned [[ivfQueryIndex]] registry row: a copy of the serve
     * index absorbs two mutations — gen 1 appends exact DUPLICATES of
     * the query vectors under fresh ids (guaranteed rank-1 hits, so a
     * leaked list row breaks the ranking), gen 2 removes vec_id ≡ 3
@@ -1392,8 +1346,8 @@ object Similarity {
   def ivfServeAsOf(spark: SparkSession, dir: String,
                    nQueries: Int = 8, kNN: Int = 5,
                    nProbe: Int = 2): DataFrame =
-    ivfQueryIndexAsOf(spark, dir, asOfFixtureIdx(spark, dir, nQueries),
-      gen = 0L, nQueries, kNN, nProbe)
+    ivfQueryIndex(spark, dir, asOfFixtureIdx(spark, dir, nQueries),
+      nQueries, kNN, nProbe, IndexPolicy.At.Gen(0L))
 
   /** MID-timeline twin (r16, the bm25_serve_asof_mid analogue for
     * this family): the SAME mutated fixture served AS OF generation
@@ -1406,8 +1360,8 @@ object Similarity {
   def ivfServeAsOfMid(spark: SparkSession, dir: String,
                       nQueries: Int = 8, kNN: Int = 5,
                       nProbe: Int = 2): DataFrame =
-    ivfQueryIndexAsOf(spark, dir, asOfFixtureIdx(spark, dir, nQueries),
-      gen = 1L, nQueries, kNN, nProbe)
+    ivfQueryIndex(spark, dir, asOfFixtureIdx(spark, dir, nQueries),
+      nQueries, kNN, nProbe, IndexPolicy.At.Gen(1L))
 
   private def asOfFixtureIdx(spark: SparkSession, dir: String,
                              nQueries: Int): String =
@@ -1468,10 +1422,7 @@ object Similarity {
       IndexPolicy.SnapHooks(
         build = ivfAppendVectors(spark, _, all.filter(col("vec_id") < nQueries)
           .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))),
-        serve = ivfQueryIndex(spark, dir, _, nQueries, kNN, nProbe),
-        asOf = ivfQueryIndexAsOf(spark, dir, _, 1L, nQueries, kNN, nProbe),
-        snapshot = ivfQueryIndexSnapshot(spark, dir, _, _, nQueries, kNN,
-          nProbe),
+        serve = ivfQueryIndex(spark, dir, _, nQueries, kNN, nProbe, _),
         rewrite = ivfWriteIndexVecs(spark, all, _),
         drift = _ => (),
         expire = ivfRemove(spark, _,

@@ -715,63 +715,24 @@ object TextAnalysis {
     * terms → first-letter buckets) becomes parquet PartitionFilters,
     * the term dictionary rows for the query broadcast, and scoring
     * uses the inlined norms — no corpus-sized join anywhere in the
-    * serve path.
+    * serve path. `at` pins the index state served
+    * ([[IndexPolicy.At]]). A bm25 generation counts segments: as of
+    * generation g the serve reads the base plus the first g segments
+    * — segments are append-only until a compact FOLDS them away — and
+    * the 1-row PRE-append corpus stats each append snapshots into its
+    * segment; indexes whose segments predate that snapshot fail fast.
+    * A snapshot pin replays the ranking across the refreshes and
+    * compacts the generation timeline cannot survive.
     */
   def bm25QueryIndex(spark: SparkSession, idx: String,
                      terms: Seq[String], k: Int,
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25QueryAt(spark, idx, terms, k, k1, b, gen = None)
-
-  /** Serve top-k AS OF generation `gen` — the index state after its
-    * first `gen` segments (gen 0 = the base build), regardless of how
-    * many appends have landed since. The reproducibility pin a
-    * training pipeline needs: a run manifest records the generation
-    * it retrieved against, and any later re-run serves bit-identical
-    * rankings from the same at-rest index. Possible because segments
-    * are append-only (postings/tombstones/df deltas never rewritten
-    * until a compact FOLDS them away — as-of reads of pre-compaction
-    * generations are then gone by design) and each append snapshots
-    * the 1-row PRE-append corpus stats into its segment. Indexes
-    * whose segments predate that snapshot fail fast here.
-    */
-  def bm25QueryIndexAsOf(spark: SparkSession, idx: String, gen: Int,
-                         terms: Seq[String], k: Int,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25QueryAt(spark, idx, terms, k, k1, b, gen = Some(gen))
-
-  /** Serve top-k AS OF a retained manifest SNAPSHOT (r17 verdict #3 —
-    * the manifest-log form of time travel): resolves the immutable
-    * `snaps/v-<id>` manifest instead of `current`, so the ranking at
-    * that commit replays bit-identically even after REWRITES
-    * (refresh/compact) that the in-place generation timeline of
-    * [[bm25QueryIndexAsOf]] cannot survive (a compact folds its
-    * generations away by design). Holds as long as the snapshot is
-    * retained: [[IndexPolicy.sweep]] pins every retained snapshot's
-    * dirs, and [[IndexPolicy.expireSnapshots]] + the next sweep
-    * reclaim them — after which this fails fast.
-    */
-  def bm25QueryIndexSnapshot(spark: SparkSession, idx: String, snap: Long,
-                             terms: Seq[String], k: Int,
-                             k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25QueryAt(spark, idx, terms, k, k1, b, gen = None,
-      manifest = Some(IndexPolicy.manifestAtSnapshot(spark, idx, snap)))
-
-  private def bm25QueryAt(spark: SparkSession, idx: String,
-                          terms: Seq[String], k: Int,
-                          k1: Double, b: Double,
-                          gen: Option[Int],
-                          manifest: Option[IndexPolicy.Manifest] = None)
-      : DataFrame = {
-    // the manifest resolves ONCE: everything this serve reads below —
-    // bucket epochs, segments, stats — is an immutable dir it names,
-    // so a refresh/append/compact that commits mid-serve cannot touch
-    // them and the serve returns the pre-swing generation instead of
-    // failing (r16 #1). It also replaces the segment-dir listing and
-    // per-segment commit-marker probes with zero extra RPCs. A
-    // SNAPSHOT serve passes its retained manifest in and reads the
-    // index exactly as of that commit.
-    val m = manifest.getOrElse(IndexPolicy.manifestOf(spark, idx))
-    IndexPolicy.checkLayout(m, idx, bmLayout)
+                     k1: Double = 1.2, b: Double = 0.75,
+                     at: IndexPolicy.At = IndexPolicy.At.Live): DataFrame = {
+    val rp = IndexPolicy.readPoint(spark, idx, bmLayout, at,
+      segNamesOf(_).size.toLong)
+    val m = rp.m
+    // the resolved manifest names every segment: no segment-dir
+    // listing and no per-segment commit-marker probe
     // explicit schemas: an index built over an EMPTY corpus has no
     // part files, and schema inference (not the read) is what throws
     // there — with the schema stated, the serve degrades to 0 rows.
@@ -784,15 +745,14 @@ object TextAnalysis {
     val pairs = live.map(t => (t.take(1), tkOf(t))).distinct.sorted
     val bmap = parseMap(m)
     val allSegNames = segNamesOf(m)
-    gen.foreach(g => require(g >= 0 && g <= allSegNames.size,
-      s"as-of generation $g outside [0, ${allSegNames.size}] for $idx"))
+    val gen = rp.ceil.map(_.toInt)
     val segs = gen.fold(allSegNames)(allSegNames.take)
       .map(n => s"$idx/segments/$n")
     val post =
       postingsView(spark, idx, bmap, pairs, live, segs).drop("ord")
     val tdf = termsView(spark, idx, bmap, pairs, live, segs)
     // stats at gen g = the PRE-append snapshot of the first EXCLUDED
-    // segment; the newest gen (and the no-gen serve) reads the live
+    // segment; the newest gen (and the live serve) reads the live
     // stats the appends kept exact
     val statsPath = gen match {
       case Some(g) if g < allSegNames.size =>
@@ -923,7 +883,7 @@ object TextAnalysis {
     bm25QueryIndex(spark, idx, terms, k)
   }
 
-  /** Registry row for [[bm25QueryIndexAsOf]]: the upsert fixture's
+  /** Generation-pinned [[bm25QueryIndex]] registry row: the upsert fixture's
     * index (v1 base + the v1→v2 delta as segment 1) served AS OF
     * generation 0 — the ranking must equal direct BM25 over the v1
     * snapshot even though the index has since absorbed the delta.
@@ -934,7 +894,8 @@ object TextAnalysis {
   def bm25ServeAsOfTopK(spark: SparkSession, dir: String,
                         terms: Seq[String] = Seq("data", "model", "system"),
                         k: Int = 20): DataFrame =
-    bm25QueryIndexAsOf(spark, segmentedBase(spark, dir), gen = 0, terms, k)
+    bm25QueryIndex(spark, segmentedBase(spark, dir), terms, k,
+      at = IndexPolicy.At.Gen(0L))
 
   /** The v1 base plus the v1→v2 delta as segment 1, built once per JVM
     * per corpus dir and never mutated: [[bm25ServeAsOfTopK]] reads it
@@ -979,7 +940,7 @@ object TextAnalysis {
         v2.limit(0))
       (p, g)
     }
-    bm25QueryIndexAsOf(spark, idx, gen, terms, k)
+    bm25QueryIndex(spark, idx, terms, k, at = IndexPolicy.At.Gen(gen))
   }
 
   private val asofMidIdxCache = new Fixtures.Memo[(String, Int)]
@@ -1521,9 +1482,7 @@ object TextAnalysis {
     IndexPolicy.snapshotAsOfDrill(spark, "bm25", dir, v1, v1BaseIndex(spark, dir),
       IndexPolicy.SnapHooks(
         build = append(97, 3, 5000000L, "qqx"),
-        serve = bm25QueryIndex(spark, _, terms, 20),
-        asOf = bm25QueryIndexAsOf(spark, _, 1, terms, 20),
-        snapshot = bm25QueryIndexSnapshot(spark, _, _, terms, 20),
+        serve = (idx, at) => bm25QueryIndex(spark, idx, terms, 20, at = at),
         rewrite = bm25Compact(spark, _),
         drift = append(101, 7, 6000000L, "qqy"),
         expire = append(103, 11, 7000000L, "qqz")))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Fixtures
+import graft.{Fixtures, Sessions}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -502,9 +502,7 @@ object Streaming {
     // the documents table); the index writes repartition by their own
     // layout columns regardless — narrow the shuffle width for the
     // row like [[runToMemory]] does for the bounded contract replays
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Sessions.withShufflePartitions(spark, 8) {
     val staged = s"${stageBase(dir)}/index_ingest"
     stageOnce(staged) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
@@ -586,7 +584,7 @@ object Streaming {
       ("ingest_gate_rejected",
         twinCounts.map(_._2).sum > 0L && nWant > 0L)
     ).toDF("metric", "ok").orderBy("metric")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   private val ingestTwinCache = new Fixtures.Memo[(String, Seq[(Long, Long)])]
@@ -641,9 +639,7 @@ object Streaming {
     // the session default applies (a production job sets its own
     // partitioning); this knob only narrows the fixed machinery cost
     // of the drain-a-bounded-source contract pattern.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Sessions.withShufflePartitions(spark, 8) {
       val q = streamed.writeStream
         .outputMode(mode)
         .format("memory")
@@ -651,7 +647,7 @@ object Streaming {
         .start()
       q.processAllAvailable()
       q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(name)
   }
 

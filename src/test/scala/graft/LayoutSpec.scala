@@ -313,7 +313,7 @@ class LayoutSpec extends SparkSpec {
       TextAnalysis.bm25QueryIndex(spark, p, q, 10).collect().toSeq
     }
     def asOf(g: Int) =
-      TextAnalysis.bm25QueryIndexAsOf(spark, idx, g, q, 10).collect().toSeq
+      TextAnalysis.bm25QueryIndex(spark, idx, q, 10, at = graft.operators.IndexPolicy.At.Gen(g)).collect().toSeq
     // each pinned generation == a from-scratch build of that corpus,
     // served from ONE at-rest index that has moved on since
     assert(asOf(0) == direct(gen0), "as-of 0 != v0 rebuild")
@@ -474,7 +474,7 @@ class LayoutSpec extends SparkSpec {
     Similarity.ivfWriteIndexVecs(spark, all, idx)                    // gen 0
     def serveNow() = Similarity.ivfQueryIndex(spark, sf, idx).collect().toSeq
     def asOf(g: Long) =
-      Similarity.ivfQueryIndexAsOf(spark, sf, idx, g).collect().toSeq
+      Similarity.ivfQueryIndex(spark, sf, idx, at = graft.operators.IndexPolicy.At.Gen(g)).collect().toSeq
     val serve0 = serveNow()
     // gen 1: append exact duplicates of the query vectors — rank-1
     // hits, so the live serve provably changes
@@ -525,7 +525,7 @@ class LayoutSpec extends SparkSpec {
     val probe = Seq((9L, "a b c d e"), (8L, "q r s t u"))
       .toDF("doc_id", "text").localCheckpoint()
     def asOf(g: Long) =
-      Dedup.neardupLookupAsOf(spark, idx, probe, g)
+      Dedup.neardupLookup(spark, idx, probe, at = graft.operators.IndexPolicy.At.Gen(g))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def live() = Dedup.neardupLookup(spark, idx, probe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1063,13 +1063,13 @@ class LayoutSpec extends SparkSpec {
       // the rewrite that destroys the in-place generation timeline…
       TextAnalysis.bm25Compact(spark, idx)
       intercept[IllegalArgumentException](
-        TextAnalysis.bm25QueryIndexAsOf(spark, idx, 1, terms, 10))
+        TextAnalysis.bm25QueryIndex(spark, idx, terms, 10, at = graft.operators.IndexPolicy.At.Gen(1)))
       // …and a further mutation whose sweep must NOT reclaim the
       // snapshot's dirs (retained snapshots pin their references)
       TextAnalysis.bm25AppendSegment(spark, idx,
         Seq((4L, "alpha iota")).toDF("doc_id", "text"), v1.limit(0))
-      assert(TextAnalysis.bm25QueryIndexSnapshot(spark, idx, snap,
-        terms, 10).collect().toSeq == want,
+      assert(TextAnalysis.bm25QueryIndex(spark, idx,
+        terms, 10, at = graft.operators.IndexPolicy.At.Snap(snap)).collect().toSeq == want,
         "retained snapshot did not replay bit-identically after a rewrite")
       // expire everything but the newest, and the NEXT sweep reclaims:
       // the old serve plan's dirs go away and the snapshot read fails
@@ -1078,7 +1078,7 @@ class LayoutSpec extends SparkSpec {
       TextAnalysis.bm25AppendSegment(spark, idx,
         Seq((5L, "alpha kappa")).toDF("doc_id", "text"), v1.limit(0))
       intercept[IllegalArgumentException](
-        TextAnalysis.bm25QueryIndexSnapshot(spark, idx, snap, terms, 10))
+        TextAnalysis.bm25QueryIndex(spark, idx, terms, 10, at = graft.operators.IndexPolicy.At.Snap(snap)))
       // non-vacuity of the reclaim: only live epochs remain under ep/
       val live = graft.operators.IndexPolicy.EpochPat.findAllIn(
         IndexPolicy.manifestOf(spark, idx).toSeq
@@ -1124,7 +1124,7 @@ class LayoutSpec extends SparkSpec {
       Dedup.neardupRemove(spark, nd, Seq(1L).toDF("doc_id"))
       Dedup.neardupCheckIn(spark, nd,
         Seq((5L, "p q r s t")).toDF("doc_id", "text")).count()
-      assert(Dedup.neardupLookupSnapshot(spark, nd, ndSnap, probe)
+      assert(Dedup.neardupLookup(spark, nd, probe, at = graft.operators.IndexPolicy.At.Snap(ndSnap))
         .collect().toSeq == ndWant,
         "a post-snapshot in-place mutation leaked into the snapshot lookup")
       Dedup.neardupCompact(spark, nd)
@@ -1134,7 +1134,7 @@ class LayoutSpec extends SparkSpec {
       assert(Dedup.neardupLookup(spark, nd, probe).collect().toSeq
         != ndWant)
       // …but the retained snapshot replays the pre-compact state
-      assert(Dedup.neardupLookupSnapshot(spark, nd, ndSnap, probe)
+      assert(Dedup.neardupLookup(spark, nd, probe, at = graft.operators.IndexPolicy.At.Snap(ndSnap))
         .collect().toSeq == ndWant,
         "nd snapshot lookup drifted across compact")
       // IVF: snapshot after an append, then RETRAIN (the rewrite that
@@ -1154,21 +1154,21 @@ class LayoutSpec extends SparkSpec {
       Similarity.ivfAppendVectors(spark, iv,
         vecs.filter(col("vec_id") < 4)
           .select((col("vec_id") + 900000L).as("vec_id"), col("embedding")))
-      assert(Similarity.ivfQueryIndexSnapshot(spark, sf, iv, ivSnap)
+      assert(Similarity.ivfQueryIndex(spark, sf, iv, at = graft.operators.IndexPolicy.At.Snap(ivSnap))
         .collect().toSeq == ivWant,
         "a post-snapshot in-place append leaked into the snapshot serve")
       Similarity.ivfWriteIndexVecs(spark,
         vecs.filter(col("vec_id") % 5 =!= 0), iv) // retrain, fewer vecs
       assert(Similarity.ivfQueryIndex(spark, sf, iv).collect().toSeq
         != ivWant, "fixture: the retrain must change the serve")
-      assert(Similarity.ivfQueryIndexSnapshot(spark, sf, iv, ivSnap)
+      assert(Similarity.ivfQueryIndex(spark, sf, iv, at = graft.operators.IndexPolicy.At.Snap(ivSnap))
         .collect().toSeq == ivWant,
         "ivf snapshot serve drifted across retrain")
       // expiry: keep only the newest, next sweep reclaims, fail fast
       IndexPolicy.expireSnapshots(spark, iv, 1)
       Similarity.ivfRemove(spark, iv, Seq(1L).toDF("vec_id"))
       intercept[IllegalArgumentException](
-        Similarity.ivfQueryIndexSnapshot(spark, sf, iv, ivSnap))
+        Similarity.ivfQueryIndex(spark, sf, iv, at = graft.operators.IndexPolicy.At.Snap(ivSnap)))
     } finally spark.conf.unset("spark.graft.index.snapshots.keep")
   }
 
@@ -1351,7 +1351,7 @@ class LayoutSpec extends SparkSpec {
     Files.move(Paths.get(s"$idx/snaps/v-$v"), Paths.get(s"$idx/snaps/.v-${v}_tmp"))
     val probe = Seq((9L, "a b c d e")).toDF("doc_id", "text")
     // the read recovers the snapshot instead of reporting it expired
-    assert(Dedup.neardupLookupSnapshot(spark, idx, v, probe)
+    assert(Dedup.neardupLookup(spark, idx, probe, at = graft.operators.IndexPolicy.At.Snap(v))
       .collect().nonEmpty)
     assert(Files.exists(Paths.get(s"$idx/snaps/v-$v")),
       "recovery did not reinstate the snapshot")
@@ -1483,9 +1483,9 @@ class LayoutSpec extends SparkSpec {
         .collect().toSeq, "CAS-store serve drifted from the FS twin")
       assert(want.map(_.getLong(0)).toSet == Set(1L),
         "fixture: the removal must suppress doc 2's pair")
-      assert(Dedup.neardupLookupAsOf(spark, cas, probe, 0L)
+      assert(Dedup.neardupLookup(spark, cas, probe, at = graft.operators.IndexPolicy.At.Gen(0L))
         .collect().toSeq ==
-        Dedup.neardupLookupAsOf(spark, fsIdx, probe, 0L).collect().toSeq,
+        Dedup.neardupLookup(spark, fsIdx, probe, at = graft.operators.IndexPolicy.At.Gen(0L)).collect().toSeq,
         "CAS-store as-of drifted from the FS twin")
       // the mutable surface lives in the STORE, never on disk…
       for (leak <- Seq("current", "wlock", "snaps", "clog"))
@@ -1503,13 +1503,13 @@ class LayoutSpec extends SparkSpec {
         Seq((5L, "x y z w v")).toDF("doc_id", "text")).count()
       assert(Dedup.neardupLookup(spark, cas, probe).collect().toSeq
         != want, "fixture: the post-compact check-in must move the live serve")
-      assert(Dedup.neardupLookupSnapshot(spark, cas, snap, probe)
+      assert(Dedup.neardupLookup(spark, cas, probe, at = graft.operators.IndexPolicy.At.Snap(snap))
         .collect().toSeq == want,
         "CAS-store snapshot lookup drifted across compact")
       // expiry through the store: retention drops S, the read fails fast
       IndexPolicy.expireSnapshots(spark, cas, 1)
       intercept[IllegalArgumentException](
-        Dedup.neardupLookupSnapshot(spark, cas, snap, probe))
+        Dedup.neardupLookup(spark, cas, probe, at = graft.operators.IndexPolicy.At.Snap(snap)))
     } finally spark.conf.unset("spark.graft.index.snapshots.keep")
   }
 
@@ -2313,5 +2313,17 @@ class LayoutSpec extends SparkSpec {
       })
       assert(spark.conf.get(k) == "7", "a throwing body lost the prior value")
     } finally prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("withShufflePartitions restores the prior shuffle width, also when its body throws") {
+    val k = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(k)
+    assert(prior != "3")
+    assert(Sessions.withShufflePartitions(spark, 3)(spark.conf.get(k)) == "3")
+    assert(spark.conf.get(k) == prior, "a normal body lost the prior width")
+    intercept[IllegalStateException](Sessions.withShufflePartitions(spark, 3) {
+      throw new IllegalStateException("body failed")
+    })
+    assert(spark.conf.get(k) == prior, "a throwing body lost the prior width")
   }
 }

@@ -140,6 +140,40 @@ class PlanLintSpec extends SparkSpec {
       "use IndexPolicy.withSnapshotsKept and graft.Fixtures instead:\n" + offenders.mkString("\n"))
   }
 
+  // a serve resolves its manifest, as-of pin and visibility ceiling
+  // through IndexPolicy.readPoint alone, and a narrowed shuffle width
+  // goes through Sessions.withShufflePartitions
+  test("no hand-rolled read ceiling or shuffle-width scope outside IndexPolicy, Sessions and tools") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = ("""\bceil\.fold\(|\btornCeiling\(|\bpinnedGen\b|\bmanifestAtSnapshot\(""" +
+      """|\bconf\.set\(\s*"spark\.sql\.shuffle\.partitions"""").r
+    Seq("""ceil.fold(df)(g => df.filter(col("gen") <= g))""",
+        """val ceil = IndexPolicy.tornCeiling(m)""",
+        """asOf = IndexPolicy.pinnedGen(spark, idx, gen))._1""",
+        """manifest = Some(IndexPolicy.manifestAtSnapshot(spark, idx, snap)))""",
+        """spark.conf.set("spark.sql.shuffle.partitions", "8")""")
+      .foreach(l => assert(banned.findFirstIn(l).isDefined, l))
+    Seq("""rp.visible(spark.read.schema(listsSchema).parquet(s"$ed/lists"))""",
+        """when(count(lit(1)) > routeAt, ceil(sqrt(count(lit(1)))))""",
+        """val prevParts = spark.conf.get("spark.sql.shuffle.partitions")""",
+        """.config("spark.sql.shuffle.partitions", cpus)""",
+        """refTokens(snapshotManifest(spark, idx, v))""")
+      .foreach(l => assert(banned.findFirstIn(l).isEmpty, l))
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val rel = root.relativize(f).toString.replace('\\', '/')
+        if (rel == "graft/operators/IndexPolicy.scala" || rel == "graft/Sessions.scala" ||
+            rel.startsWith("graft/tools/")) Nil
+        else java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if banned.findFirstIn(l).isDefined => s"$rel:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty,
+      "use IndexPolicy.readPoint and Sessions.withShufflePartitions instead:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries
       .filterNot { case (name, _) => eagerBuilders(name) }

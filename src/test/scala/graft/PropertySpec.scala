@@ -233,7 +233,7 @@ class PropertySpec extends SparkSpec {
       val probes = docs.map { case (id, t) => (id + 1000L, t) }
       val pids = probes.map(_._1).toSet
       def asOf(g: Long) = Dedup
-        .neardupLookupAsOf(spark, idx, probes.toDF("doc_id", "text"), g)
+        .neardupLookup(spark, idx, probes.toDF("doc_id", "text"), at = graft.operators.IndexPolicy.At.Gen(g))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val want0 = referencePairs(base ++ probes, pids)
       val want1 = referencePairs(base ++ delta ++ probes, pids)

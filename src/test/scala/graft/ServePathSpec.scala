@@ -128,11 +128,11 @@ class ServePathSpec extends SparkSpec {
       sameRows(what, probes, docSchema)(f)
     val live = same("live")(Dedup.neardupLookup(spark, idx, _))
     val gens = (0L to 2L).map(g =>
-      same(s"as-of $g")(Dedup.neardupLookupAsOf(spark, idx, _, g)))
+      same(s"as-of $g")(Dedup.neardupLookup(spark, idx, _, at = IndexPolicy.At.Gen(g))))
     val snaps = IndexPolicy.snapshotIds(spark, idx)
     assert(snaps.size >= 3, s"snapshots $snaps")
     snaps.foreach(v =>
-      same(s"snapshot $v")(Dedup.neardupLookupSnapshot(spark, idx, v, _)))
+      same(s"snapshot $v")(Dedup.neardupLookup(spark, idx, _, at = IndexPolicy.At.Snap(v))))
     val capped =
       same("capBucket 2")(Dedup.neardupLookup(spark, idx, _, capBucket = 2))
     // the states differ, so each comparison above checked something
@@ -156,6 +156,41 @@ class ServePathSpec extends SparkSpec {
     val dup = probes :+ Row(probes.head.getLong(0), "a different text here now")
     assert(!isLocal(local(dup, docSchema)))
     sameRows("duplicate ids", dup, docSchema)(Dedup.neardupLookup(spark, idx, _))
+  }
+
+  test("one read point per serve: the visibility ceiling of live, torn, as-of and snapshot reads") {
+    import IndexPolicy.At
+    val idx = Files.createTempDirectory("graft-read-point").toString + "/idx"
+    IndexPolicy.withSnapshotsKept(spark, 10) {
+      Dedup.neardupWriteIndex(spark,
+        local(docRows(corpus.filter(_._1 % 4 != 1)), docSchema), idx)   // gen 0
+      Dedup.neardupCheckIn(spark, idx,
+        local(docRows(corpus.filter(_._1 % 4 == 1)), docSchema)).collect() // gen 1
+      Dedup.neardupRemove(spark, idx, ids(corpus.map(_._1).filter(_ % 5 == 0))) // gen 2
+    }
+    def ceil(at: At) = IndexPolicy.readPoint(spark, idx, Nil, at).ceil
+    def failsFast(at: At) =
+      intercept[IllegalArgumentException](IndexPolicy.readPoint(spark, idx, Nil, at))
+    // the snapshot of the gen-1 commit
+    val snap1 = IndexPolicy.snapshotIds(spark, idx).find(v => IndexPolicy
+      .committedOf(IndexPolicy.manifestAtSnapshot(spark, idx, v)) == 1L).get
+    assert(ceil(At.Live).isEmpty, "a healthy live read got a ceiling")
+    (0L to 2L).foreach(g => assert(ceil(At.Gen(g)).contains(g)))
+    assert(ceil(At.Snap(snap1)).contains(1L),
+      "a snapshot read is not capped at the snapshot's committed generation")
+    failsFast(At.Gen(3L))
+    failsFast(At.Gen(-1L))
+    // a torn commit: the committed watermark falls back behind gen 2
+    IndexPolicy.publish(spark, idx,
+      IndexPolicy.manifestOf(spark, idx) + ("gen_committed" -> "1"))
+    assert(ceil(At.Live).contains(1L))
+    assert(ceil(At.Gen(0L)).contains(0L))
+    failsFast(At.Gen(2L))
+    // a fold resets the timeline: a pin taken before it fails fast
+    Dedup.neardupCompact(spark, idx)
+    assert(ceil(At.Live).isEmpty && ceil(At.Gen(0L)).contains(0L))
+    failsFast(At.Gen(1L))
+    assert(ceil(At.Snap(snap1)).contains(1L))
   }
 
   test("near-dup: the row-wise signature equals md5DocSig's: sig, sz and the sorted digest set") {
@@ -193,7 +228,7 @@ class ServePathSpec extends SparkSpec {
       sameRows(what, queries, vecSchema)(f)
     val live = same("live")(Similarity.ivfQueryIndexVecs(spark, idx, _))
     val gens = (0L to 2L).map(g => same(s"as-of $g")(
-      Similarity.ivfQueryIndexVecs(spark, idx, _, asOf = Some(g))))
+      Similarity.ivfQueryIndexVecs(spark, idx, _, at = IndexPolicy.At.Gen(g))))
     same("kNN 7, nProbe 3")(
       Similarity.ivfQueryIndexVecs(spark, idx, _, kNN = 7, nProbe = 3))
     assert(live == gens(2))
@@ -321,11 +356,39 @@ class ServePathSpec extends SparkSpec {
       TextAnalysis.bm25StreamIngest(spark, bm, delta, 0L, "jobs")))
     assert(!count("bm25 replayed stream batch")(
       TextAnalysis.bm25StreamIngest(spark, bm, delta, 0L, "jobs")))
+    // as-of and snapshot serves of all three families, with in-memory
+    // probes: one more commit each, kept as a snapshot, then the reads
+    IndexPolicy.withSnapshotsKept(spark, 10) {
+      Dedup.neardupRemove(spark, nd, ids(Seq(-1L)))
+      Similarity.ivfRemove(spark, iv,
+        local(Seq(Row(-1L)), StructType.fromDDL("vec_id bigint")))
+      TextAnalysis.bm25StreamIngest(spark, bm,
+        local(docRows(Seq(990001L -> "data model zeta")), docSchema), 1L, "jobs")
+    }
+    val (ndSnap, ivSnap, bmSnap) = (IndexPolicy.snapshotIds(spark, nd).last,
+      IndexPolicy.snapshotIds(spark, iv).last, IndexPolicy.snapshotIds(spark, bm).last)
+    val probe = local(probeRows(hot), docSchema)
+    val qs = local(vecs.filter(_.getLong(0) % 60 == 1)
+      .map(r => Row(r.getLong(0) + 1000000L, r.get(1))), vecSchema)
+    val terms = Seq("data", "model", "system")
+    count("nd as-of serve")(Dedup.neardupLookup(spark, nd, probe,
+      at = IndexPolicy.At.Gen(1L)).collect())
+    count("nd snapshot serve")(Dedup.neardupLookup(spark, nd, probe,
+      at = IndexPolicy.At.Snap(ndSnap)).collect())
+    count("ivf as-of serve")(Similarity.ivfQueryIndexVecs(spark, iv, qs,
+      at = IndexPolicy.At.Gen(1L)).collect())
+    count("ivf snapshot serve")(Similarity.ivfQueryIndexVecs(spark, iv, qs,
+      at = IndexPolicy.At.Snap(ivSnap)).collect())
+    count("bm25 as-of serve")(TextAnalysis.bm25QueryIndex(spark, bm, terms, 10,
+      at = IndexPolicy.At.Gen(1L)).collect())
+    count("bm25 snapshot serve")(TextAnalysis.bm25QueryIndex(spark, bm, terms, 10,
+      at = IndexPolicy.At.Snap(bmSnap)).collect())
     info(got.map { case (k, n) => s"$k $n" }.mkString(", "))
     assert(got.toSeq == lifecycleJobs, s"Spark jobs per call: $got")
   }
 
-  // the counts these calls ran when each family had its own copy of the steps
+  // the counts these calls ran when each family had its own copy of the
+  // steps, and (the serves) its own as-of and snapshot entry points
   private val lifecycleJobs: Seq[(String, Int)] = Seq(
     "nd fold-due, no tombstones" -> 0, "nd health, no tombstones" -> 2,
     "nd remove" -> 2, "nd fold-due" -> 4, "nd health" -> 4,
@@ -333,5 +396,8 @@ class ServePathSpec extends SparkSpec {
     "ivf fold-due, no tombstones" -> 0, "ivf health, no tombstones" -> 2,
     "ivf remove" -> 2, "ivf fold-due" -> 4, "ivf health" -> 4,
     "ivf stream batch" -> 3, "ivf replayed stream batch" -> 0,
-    "bm25 stream batch" -> 16, "bm25 replayed stream batch" -> 0)
+    "bm25 stream batch" -> 16, "bm25 replayed stream batch" -> 0,
+    "nd as-of serve" -> 3, "nd snapshot serve" -> 3,
+    "ivf as-of serve" -> 4, "ivf snapshot serve" -> 4,
+    "bm25 as-of serve" -> 6, "bm25 snapshot serve" -> 6)
 }
