@@ -444,38 +444,22 @@ object Curation {
     */
   def indexHealth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (docs, vecs, docsEmpty, vecsEmpty, bmBase, ndBase, ivfBase) =
-      foldFixture(spark, dir)
+    val (_, vecs, docsEmpty, vecsEmpty, _, _, ivfBase) = foldFixture(spark, dir)
     if (docsEmpty && vecsEmpty)
       return Seq.empty[(String, Long)].toDF("metric", "value")
-    val (bm, nd, iv) = healthCache(dir) {
-      val bm = Fixtures.path("health_bm", dir)
-      val nd = Fixtures.path("health_nd", dir)
-      if (!docsEmpty) {
-        TextAnalysis.copyIndex(spark, bmBase, bm)
-        TextAnalysis.bm25AppendSegment(spark, bm,
-          docs.filter(pmod(col("doc_id"), lit(7)) === 1)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
-          docs.limit(0))
-        TextAnalysis.copyIndex(spark, ndBase, nd)
-        Dedup.neardupCheckIn(spark, nd,
-          docs.filter(pmod(col("doc_id"), lit(7)) === 2)
-            .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-          .count()
-        Dedup.neardupRemove(spark, nd,
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id")))
-      }
-      val iv = Fixtures.path("health_ivf", dir)
+    // bm25 and near-dup: the estate templates carry exactly this card's
+    // mutation set, and the card only reads them
+    val (bm, nd, _) = estateTemplates(spark, dir)
+    val iv = healthIvfCache(dir) { p =>
       if (!vecsEmpty) {
-        TextAnalysis.copyIndex(spark, ivfBase, iv)
-        Similarity.ivfAppendVectors(spark, iv,
+        Fixtures.copyIndex(spark, ivfBase, p)
+        Similarity.ivfAppendVectors(spark, p,
           vecs.filter(pmod(col("vec_id"), lit(9)) === 5)
             .select((col("vec_id") + 1000000L).as("vec_id"),
               col("embedding")))
-        Similarity.ivfRemove(spark, iv,
+        Similarity.ivfRemove(spark, p,
           vecs.filter(pmod(col("vec_id"), lit(5)) === 0).select(col("vec_id")))
       }
-      (bm, nd, iv)
     }
     val rows =
       (if (docsEmpty) Seq.empty
@@ -591,9 +575,10 @@ object Curation {
     * kept pristine (consumers copy before folding): bm25 with one
     * appended segment (generation 1), near-dup after one check-in +
     * one removal wave (generation 2), IVF after one removal wave
-    * (generation 1) — the [[indexHealth]] mutation set, except IVF
-    * skips the append so the retrain-vs-fresh-build comparison has a
-    * deterministic live set.
+    * (generation 1) — the [[indexHealth]] mutation set (its bm25 and
+    * near-dup rows read these templates), except IVF skips the append
+    * so the retrain-vs-fresh-build comparison has a deterministic live
+    * set.
     */
   private def estateTemplates(spark: SparkSession,
                               dir: String): (String, String, String) = {
@@ -607,12 +592,12 @@ object Curation {
       // (ScaleUp corpora reach ~1e5) and from every other wave, or
       // the contracts silently assert over merged-id states
       if (!docsEmpty) {
-        TextAnalysis.copyIndex(spark, bmBase, bmT)
+        Fixtures.copyIndex(spark, bmBase, bmT)
         TextAnalysis.bm25AppendSegment(spark, bmT,
           docs.filter(pmod(col("doc_id"), lit(7)) === 1)
             .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
           docs.limit(0))
-        TextAnalysis.copyIndex(spark, ndBase, ndT)
+        Fixtures.copyIndex(spark, ndBase, ndT)
         Dedup.neardupCheckIn(spark, ndT,
           docs.filter(pmod(col("doc_id"), lit(7)) === 2)
             .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
@@ -622,7 +607,7 @@ object Curation {
       }
       val ivT = Fixtures.path("estate_ivt", dir)
       if (!vecsEmpty) {
-        TextAnalysis.copyIndex(spark, ivfBase, ivT)
+        Fixtures.copyIndex(spark, ivfBase, ivT)
         Similarity.ivfRemove(spark, ivT,
           vecs.filter(pmod(col("vec_id"), lit(5)) === 0).select(col("vec_id")))
       }
@@ -734,7 +719,7 @@ object Curation {
       // wreckage — an unreferenced segment dir — is planted alongside,
       // so the sweep pin keeps covering the segments/ reclaim branch
       // too (r18 review: the injected refresh alone lost it)
-      IndexPolicy.armCrash(bm, "after-epoch")
+      IndexPolicy.armCrash(bm, IndexPolicy.AfterEpoch)
       rows += ("rd_bm25_crash_mid_flight" ->
         crashed(TextAnalysis.bm25RefreshIndex(spark, bm, delta, none)))
       val orphanSeg = new Path(
@@ -776,7 +761,7 @@ object Curation {
         Dedup.neardupLookup(spark, ndT, probe).collect().toSeq)
       // REAL mid-flight death: tombstone rows land, the commit swing
       // never runs
-      IndexPolicy.armCrash(nd, "after-rows")
+      IndexPolicy.armCrash(nd, IndexPolicy.AfterRows)
       rows += ("rd_nd_crash_mid_flight" ->
         crashed(Dedup.neardupRemove(spark, nd, kill)))
       rows += ("rd_nd_torn_serves_committed" -> (lookup() == l0))
@@ -805,7 +790,7 @@ object Curation {
       val s0 = drillIvCapCache(dir)(
         Similarity.ivfQueryIndex(spark, dir, ivT).collect().toSeq)
       // REAL mid-flight death: list rows land, the commit never runs
-      IndexPolicy.armCrash(iv, "after-rows")
+      IndexPolicy.armCrash(iv, IndexPolicy.AfterRows)
       rows += ("rd_ivf_crash_mid_flight" ->
         crashed(Similarity.ivfAppendVectors(spark, iv, dups)))
       rows += ("rd_ivf_torn_serves_committed" -> (serve() == s0))
@@ -901,7 +886,7 @@ object Curation {
         (Similarity.ivfHealth(spark, iv).toMap.apply("ivf_fold_due") == 1L))
       // PASS 1: the due folds run concurrently; the nd fold is armed
       // to die after its epoch rewrite, before its pointer swing
-      IndexPolicy.armCrash(nd, "after-epoch")
+      IndexPolicy.armCrash(nd, IndexPolicy.AfterEpoch)
       val Seq(rNd, rIv) = Par.all(Seq(
         () => scala.util.Try(Dedup.neardupCompact(spark, nd)),
         () => scala.util.Try(Similarity.ivfWriteIndexVecs(spark, live, iv))))
@@ -948,7 +933,7 @@ object Curation {
       rows += ("ecd2_both_due_before" ->
         (Dedup.neardupHealth(spark, nd).toMap.apply("nd_fold_due") == 1L &&
           Similarity.ivfHealth(spark, iv).toMap.apply("ivf_fold_due") == 1L))
-      IndexPolicy.armCrash(iv, "after-epoch")
+      IndexPolicy.armCrash(iv, IndexPolicy.AfterEpoch)
       val Seq(rNd, rIv) = Par.all(Seq(
         () => scala.util.Try(Dedup.neardupCompact(spark, nd)),
         () => scala.util.Try(Similarity.ivfWriteIndexVecs(spark, live, iv))))
@@ -1023,8 +1008,8 @@ object Curation {
       var (bmGen, ndGen, ivGen) = (-1L, -1L, -1L)
       var bmServe, ndPairs, ivServe = Seq.empty[org.apache.spark.sql.Row]
       if (!docsEmpty) {
-        TextAnalysis.copyIndex(spark, bmT, bm)
-        TextAnalysis.copyIndex(spark, ndT, nd)
+        Fixtures.copyIndex(spark, bmT, bm)
+        Fixtures.copyIndex(spark, ndT, nd)
         // the pinned generations are READ FROM THE ESTATE (the oracle
         // pins their literal values — a drifted timeline breaks the
         // manifest hash)
@@ -1046,7 +1031,7 @@ object Curation {
           docs.filter(pmod(col("doc_id"), lit(9)) === 4).select(col("doc_id")))
       }
       if (!vecsEmpty) {
-        TextAnalysis.copyIndex(spark, ivT, iv)
+        Fixtures.copyIndex(spark, ivT, iv)
         ivGen = Similarity.ivfHealth(spark, iv).toMap.apply("ivf_gen")
         ivServe = Similarity.ivfQueryIndex(spark, dir, iv).collect().toSeq
         // exact duplicates of the query vectors: guaranteed rank-1
@@ -1275,9 +1260,9 @@ object Curation {
     val (docs, vecs, _, _, _, _, _) = foldFixture(spark, dir)
     val (bmT, ndT, ivT) = estateTemplates(spark, dir)
     snapEstateCache(dir) {
-      val bm = Fixtures.path("esm_bm", dir)
-      val nd = Fixtures.path("esm_nd", dir)
-      val iv = Fixtures.path("esm_iv", dir)
+      val bm = Fixtures.copyOf(spark, bmT, "esm_bm", dir)
+      val nd = Fixtures.copyOf(spark, ndT, "esm_nd", dir)
+      val iv = Fixtures.copyOf(spark, ivT, "esm_iv", dir)
       val art = Fixtures.path("esm_art", dir)
       val none = docs.limit(0)
       // narrow-vocabulary synthetic deltas (the bm25SnapshotAsOf
@@ -1299,7 +1284,6 @@ object Curation {
       //      S(append) → capture → drift append → fold → expire E →
       //      sweep append ----
       def bmSide() = {
-        TextAnalysis.copyIndex(spark, bmT, bm)
         TextAnalysis.bm25AppendSegment(spark, bm,
           nvSlice(97, 3, 5000000L, "qqm"), none)
         val decoy = IndexPolicy.snapshotIds(spark, bm).last
@@ -1322,7 +1306,6 @@ object Curation {
       //      S(check-in) → capture → drift remove → second fold →
       //      expire E → sweep remove ----
       def ndSide() = {
-        TextAnalysis.copyIndex(spark, ndT, nd)
         Dedup.neardupRemove(spark, nd,
           docs.filter(pmod(col("doc_id"), lit(7)) === 6)
             .select(col("doc_id")))
@@ -1350,7 +1333,6 @@ object Curation {
       //      S(append) → capture → drift append (exact query dupes) →
       //      second retrain → expire E → sweep append ----
       def ivSide() = {
-        TextAnalysis.copyIndex(spark, ivT, iv)
         val app0 = vSlice(9, 7, 3000000L)
         Similarity.ivfAppendVectors(spark, iv, app0)
         val decoy = IndexPolicy.snapshotIds(spark, iv).last
@@ -1650,7 +1632,7 @@ object Curation {
 
   private val estateStreamTwinCache = new Fixtures.Memo[EsiTwin]
 
-  private val healthCache = new Fixtures.Memo[(String, String, String)]
+  private val healthIvfCache = new Fixtures.Index("health_ivf")
 
   private val foldEmptyCache = new Fixtures.Memo[(Boolean, Boolean)]
   private val foldBaseCache = new Fixtures.Memo[(String, String, String)]

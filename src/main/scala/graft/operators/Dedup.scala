@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Fixtures, Par, Tables}
 import graft.functions.TextFns
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -519,13 +519,27 @@ object Dedup {
   private def dbOf(docId: org.apache.spark.sql.Column) =
     pmod(xxhash64(docId), lit(nDb)).cast("int")
 
-  /** Resolved physical dir of an index table (buckets / docsets /
-    * tombstones) under the committed manifest — for the layout specs'
-    * byte-identity asserts; shared logic in [[IndexPolicy]].
+  /** Write signatured docs into epoch dir `ed` as generation `g`: the
+    * `buckets` postings and the `docsets` rows, as two concurrent jobs
+    * (disjoint subdirs, both reading the checkpointed sigs — r21), so
+    * the write pays the wider job's wall-clock, not the sum. Each side
+    * repartitions on its partition columns first: a task then holds
+    * whole partitions and a write emits one file per directory
+    * instead of files×tasks. A build fills a fresh epoch (Overwrite),
+    * a check-in appends.
     */
-  private[graft] def resolvedTable(spark: SparkSession, idx: String,
-                                   name: String): Option[String] =
-    IndexPolicy.resolvedTable(spark, idx, name)
+  private def writeSigs(sigs: DataFrame, k: Int, bands: Int, g: Long,
+                        ed: String, mode: SaveMode): Unit =
+    Par.all(Seq(
+      () => bandedOf(sigs, k, bands)
+        .select(col("band"), pbOf(col("bucket")).as("pb"),
+          col("doc_id"), col("bucket"), lit(g).as("gen"))
+        .repartition(col("band"), col("pb"))
+        .write.mode(mode).partitionBy("band", "pb").parquet(s"$ed/buckets"),
+      () => sigs.select(dbOf(col("doc_id")).as("db"),
+          col("doc_id"), col("dset"), col("sz"), lit(g).as("gen"))
+        .repartition(col("db"))
+        .write.mode(mode).partitionBy("db").parquet(s"$ed/docsets")))
 
   /** Build the near-dup index at rest: `buckets` — one slim
     * (doc_id, bucket) posting per band, hive-partitioned by (band,
@@ -533,18 +547,8 @@ object Dedup {
     * reads. One hashing pass feeds both tables.
     */
   def neardupWriteIndex(spark: SparkSession, docs: DataFrame, idx: String,
-                        n: Int = 3, k: Int = 16,
-                        bands: Int = 4): Unit = IndexPolicy.mutate(spark, idx) {
-    // rebuild means rebuild: the fresh manifest references only the
-    // new epoch (no tombstones key, timeline reset); over a LIVE index
-    // the old epoch keeps serving until the pointer swings, and a dir
-    // with no manifest (fresh path / legacy content) is cleared
-    val prior = IndexPolicy.readManifest(spark, idx)
-    prior match {
-      case Some(m) => IndexPolicy.sweep(spark, idx, m)
-      case None => IndexPolicy.clearForRebuild(spark, idx)
-    }
-    val tok = IndexPolicy.newEpoch()
+                        n: Int = 3, k: Int = 16, bands: Int = 4): Unit =
+      IndexPolicy.rebuild(spark, idx, ndLayout(n, k, bands)) { tok =>
     val ed = IndexPolicy.epochDir(idx, tok)
     // fanOutScan (r21): the shingle+minhash signature pass is the
     // build's dominant per-row work and otherwise runs inside the
@@ -552,34 +556,10 @@ object Dedup {
     // multi-split corpus
     val sigs = md5DocSig(graft.Tables.fanOutScan(docs), n, k)
       .localCheckpoint()
-    // repartition on the partition columns before the partitioned
-    // write: each task then holds whole (band, pb) groups, so the
-    // build emits one file per directory instead of files×tasks.
-    // The two side writes are independent (disjoint subdirs, both
-    // reading the checkpointed sigs) — concurrent jobs (r21, the
-    // admitSigs pattern).
-    Par.all(Seq(
-      () => bandedOf(sigs, k, bands)
-        .select(col("band"), pbOf(col("bucket")).as("pb"),
-          col("doc_id"), col("bucket"), lit(0L).as("gen"))
-        .repartition(col("band"), col("pb"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("band", "pb").parquet(s"$ed/buckets"),
-      () => sigs.select(dbOf(col("doc_id")).as("db"),
-          col("doc_id"), col("dset"), col("sz"), lit(0L).as("gen"))
-        .repartition(col("db"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(s"$ed/docsets")))
-    // the pointer swing — the build commit (a build that crashed above
-    // left no manifest, and every reader fails fast instead of
-    // consuming a partial index); generation 0 is the timeline origin
-    // of a generation-pinned [[neardupLookup]]
-    IndexPolicy.crashPoint(spark, idx, "after-epoch")
-    IndexPolicy.publish(spark, idx, IndexPolicy.rebaseVersion(prior, Map(
-      IndexPolicy.layoutEntry(ndLayout(n, k, bands)),
-      "gen" -> "0", "gen_committed" -> "0",
-      "data" -> tok)))
-    ()
+    writeSigs(sigs, k, bands, 0L, ed, SaveMode.Overwrite)
+    // generation 0 is the timeline origin of a generation-pinned
+    // [[neardupLookup]]
+    Map("gen" -> "0", "gen_committed" -> "0", "data" -> tok)
   }
 
   /** Check a document delta in against the at-rest index: emit every
@@ -621,10 +601,8 @@ object Dedup {
     * shingles (equal absent an in-pair 48-bit collision), and the
     * oracle replays the digest form exactly.
     *
-    * Single-writer assumption (standard for index mutation, same as
-    * [[TextAnalysis.bm25AppendSegment]]): concurrent check-ins to the
-    * SAME index dir race the read-then-append; serialize them (a
-    * deployment runs one ingest job per index). FRESH-ID precondition
+    * Concurrent check-ins to one index serialize on its writer lease
+    * ([[IndexPolicy.mutate]]). FRESH-ID precondition
     * (r13 ADVICE): delta doc_ids must not already be present in the
     * index — a re-checked-in id appends a second docsets row (the
     * verify guards itself by keeping only the newest row per id, so
@@ -637,46 +615,30 @@ object Dedup {
                      bands: Int = 4,
                      capBucket: Int = Int.MaxValue): DataFrame =
       IndexPolicy.mutate(spark, idx) {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.sweep(spark, idx, m)
     val (pairs, sigs) =
       lookupWithSigs(spark, idx, newDocs, minJ, n, k, bands, capBucket)
-    admitSigs(spark, idx, m, sigs, k, bands)
+    admitSigs(spark, idx, sigs, k, bands)
     pairs
   }
 
   /** The ADMIT half of [[neardupCheckIn]] — append the (already
-    * signatured) rows as one committed generation, with optional
-    * extra manifest entries riding the commit swing. Caller holds the
-    * writer lease and has swept.
+    * signatured) rows as one committed generation
+    * ([[IndexPolicy.appendGen]]), with optional extra manifest entries
+    * riding the commit swing. Caller holds the writer lease; `held` is
+    * the manifest it already read under it, if any.
     */
-  private def admitSigs(spark: SparkSession, idx: String,
-                        m: IndexPolicy.Manifest, sigs: DataFrame,
+  private def admitSigs(spark: SparkSession, idx: String, sigs: DataFrame,
                         k: Int, bands: Int,
-                        extra: IndexPolicy.Manifest = Map.empty): Unit = {
-    val (g, m1) = IndexPolicy.allocGen(spark, idx, m)
-    val ed = IndexPolicy.epochDir(idx, m("data"))
-    // the two admit appends are independent (disjoint subdirs, both
-    // reading the checkpointed sigs) — run them as concurrent jobs so
-    // the delta pays one write's wall-clock, not two
-    Par.all(Seq(
-      () => bandedOf(sigs, k, bands)
-        .select(col("band"), pbOf(col("bucket")).as("pb"),
-          col("doc_id"), col("bucket"), lit(g).as("gen"))
-        .repartition(col("band"), col("pb"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("band", "pb").parquet(s"$ed/buckets"),
-      () => sigs.select(dbOf(col("doc_id")).as("db"),
-          col("doc_id"), col("dset"), col("sz"), lit(g).as("gen"))
-        .repartition(col("db"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("db").parquet(s"$ed/docsets")))
-    // both appends landed — COMMIT the generation (r15 ADVICE): a
-    // crash before this line leaves committed at g-1, so readers
+                        held: Option[IndexPolicy.Manifest] = None,
+                        extra: IndexPolicy.Manifest = Map.empty): Unit =
+      IndexPolicy.appendGen(spark, idx, ndLayoutBase, held) { (g, m) =>
+    writeSigs(sigs, k, bands, g, IndexPolicy.epochDir(idx, m("data")),
+      SaveMode.Append)
+    // both appends landed — the generation commits (r15 ADVICE): a
+    // crash before the swing leaves committed at g-1, so readers
     // treat the partial generation as never having happened instead
     // of silently dropping pairs whose docsets rows are missing
-    IndexPolicy.crashPoint(spark, idx, "after-rows")
-    IndexPolicy.commitGen(spark, idx, m1, g, extra)
+    extra
   }
 
   /** One STREAMING micro-batch of the continuous-ingest funnel — the
@@ -713,7 +675,6 @@ object Dedup {
                           bands: Int = 4, app: String = ""): (Long, Long) =
     IndexPolicy.streamBatch(spark, idx, batchId, app, (0L, 0L),
         compactBody(spark, idx)) { (m, mark) =>
-      IndexPolicy.sweep(spark, idx, m)
       val (pairs, sigs) =
         lookupWithSigs(spark, idx, arriving, minJ, n, k, bands,
           Int.MaxValue)
@@ -724,7 +685,7 @@ object Dedup {
         .select(when(col("__inb").isNotNull, col("b")).otherwise(col("a"))
           .as("doc_id")).distinct().localCheckpoint()
       val survivors = sigs.join(rejected, Seq("doc_id"), "left_anti")
-      admitSigs(spark, idx, m, survivors, k, bands, extra = mark)
+      admitSigs(spark, idx, survivors, k, bands, Some(m), mark)
       // counts without recomputing the anti-join: arriving ids are
       // unique per batch and rejected ⊆ arriving, so admitted =
       // |arriving| − |rejected| (both cheap: a parquet-metadata count
@@ -1090,51 +1051,45 @@ object Dedup {
     * commit used to wedge the retried batch on [[IndexPolicy
     * .allocGen]]'s refusal until a manual compact).
     */
-  private def compactBody(spark: SparkSession, idx: String): Unit = {
+  private def compactBody(spark: SparkSession, idx: String): Unit =
+      IndexPolicy.rewriteEpoch(spark, idx, ndLayoutBase) { (rp, tok) =>
     // the live read point: committed rows only, so a torn index's
     // orphans drop out of the rewrite
-    val rp = IndexPolicy.readPoint(spark, idx, ndLayoutBase,
-      IndexPolicy.At.Live)
     val m = rp.m
-    IndexPolicy.sweep(spark, idx, m)
-    val dead = ndTombs.of(spark, idx, m).map(rp.visible) match {
-      case Some(d) => d
-      case None if rp.ceil.isEmpty => return // nothing to fold, nothing to repair
-      case None => // torn but tombstone-free: still rewrite to repair
-        spark.range(0).select(col("id").as("doc_id"), lit(0L).as("gen"))
-    }
-    val ed = IndexPolicy.epochDir(idx, m("data"))
-    val tok = IndexPolicy.newEpoch()
-    val ed2 = IndexPolicy.epochDir(idx, tok)
-    // the two side rewrites are independent (disjoint subdirs of the
-    // not-yet-visible epoch, both reading the immutable old epoch) —
-    // run them as concurrent jobs (r21, the admitSigs pattern), so
-    // the fold's wall-clock is the wider rewrite, not the sum.
-    Par.all(Seq(
-      () => rp.visible(
-          spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
-        .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .select(col("band"), col("pb"), col("doc_id"), col("bucket"),
-          lit(0L).as("gen"))
-        .repartition(col("band"), col("pb"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("band", "pb").parquet(s"$ed2/buckets"),
-      () => rp.visible(
-          spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
-        .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .select(col("db"), col("doc_id"), col("dset"), col("sz"),
-          lit(0L).as("gen"))
-        .repartition(col("db"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(s"$ed2/docsets")))
-    // ONE swing commits the fold: the new epoch replaces the old, the
-    // tombstones key vanishes, and the as-of timeline resets (the
-    // ivf-retrain analogue) — rewritten rows are generation 0 again
-    IndexPolicy.crashPoint(spark, idx, "after-epoch")
-    IndexPolicy.publish(spark, idx,
+    // healthy and tombstone-free: nothing to fold, nothing to repair;
+    // torn but tombstone-free: still rewrite to repair
+    val tombs = ndTombs.of(spark, idx, m).map(rp.visible).orElse(rp.ceil.map(_ =>
+      spark.range(0).select(col("id").as("doc_id"), lit(0L).as("gen"))))
+    tombs.map { dead =>
+      val ed = IndexPolicy.epochDir(idx, m("data"))
+      val ed2 = IndexPolicy.epochDir(idx, tok)
+      // the two side rewrites are independent (disjoint subdirs of the
+      // not-yet-visible epoch, both reading the immutable old epoch) —
+      // run them as concurrent jobs (r21, the [[writeSigs]] pattern), so
+      // the fold's wall-clock is the wider rewrite, not the sum.
+      Par.all(Seq(
+        () => rp.visible(
+            spark.read.schema(bucketsSchema).parquet(s"$ed/buckets"))
+          .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+          .select(col("band"), col("pb"), col("doc_id"), col("bucket"),
+            lit(0L).as("gen"))
+          .repartition(col("band"), col("pb"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .partitionBy("band", "pb").parquet(s"$ed2/buckets"),
+        () => rp.visible(
+            spark.read.schema(docsetsSchema).parquet(s"$ed/docsets"))
+          .join(broadcast(dead.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+          .select(col("db"), col("doc_id"), col("dset"), col("sz"),
+            lit(0L).as("gen"))
+          .repartition(col("db"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .partitionBy("db").parquet(s"$ed2/docsets")))
+      // ONE swing commits the fold: the new epoch replaces the old, the
+      // tombstones key vanishes, and the as-of timeline resets (the
+      // ivf-retrain analogue) — rewritten rows are generation 0 again
       m - "tombstones" ++ Map(
-        "gen" -> "0", "gen_committed" -> "0", "data" -> tok))
-    ()
+        "gen" -> "0", "gen_committed" -> "0", "data" -> tok)
+    }
   }
 
   /** Registry fixture for the check-in (the bm25 lifecycle pattern):
@@ -1207,7 +1162,7 @@ object Dedup {
                                 gen: Long, minJ: Double): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val idx = asofIdxCache(dir) { p =>
-      TextAnalysis.copyIndex(spark, pristineBase(spark, dir, docs), p)
+      Fixtures.copyIndex(spark, pristineBase(spark, dir, docs), p)
       neardupCheckIn(spark, p,
         docs.filter(pmod(col("doc_id"), lit(4)) === 1), minJ).count()
       neardupRemove(spark, p,

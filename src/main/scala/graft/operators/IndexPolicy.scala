@@ -13,7 +13,11 @@ import org.apache.spark.sql.types.LongType
   * stays in [[TextAnalysis]]), the stream-batch gate
   * ([[streamBatch]]), the snapshot-retention scope and
   * snapshot-as-of drill — and the POINTER-COMMIT protocol every
-  * index mutation publishes through.
+  * index mutation publishes through, in one of three write shapes:
+  * [[rebuild]] (build, retrain), [[rewriteEpoch]] (refresh, segment
+  * append, compact) and [[appendGen]] (check-in, vector append,
+  * removal). Each owns its steps' order and its crash point
+  * ([[AfterEpoch]], [[AfterRows]]); a family passes in only its writes.
   *
   * ==Pointer-commit protocol== (r16 verdict #1 — the port of the old
   * rename-swap design note): each index root holds exactly ONE small
@@ -950,25 +954,17 @@ private[graft] object IndexPolicy {
 
   def versionOf(m: Manifest): Option[Long] = m.get(VersionKey).map(_.toLong)
 
-  /** Seed a from-scratch manifest (build/retrain) with the version of
-    * the manifest it replaces, so a REBUILD's publish passes the
-    * compare-and-swing like any other mutation.
-    */
-  def rebaseVersion(prior: Option[Manifest], fresh: Manifest): Manifest =
-    prior.flatMap(versionOf)
-      .fold(fresh)(v => fresh + (VersionKey -> v.toString))
-
   /** THE pointer swing — the single atomic commit step of every index
     * mutation. Everything the new manifest references must already be
     * fully written; everything it stops referencing becomes garbage
     * for the next mutation's [[sweep]]. Compare-and-swing: `m` must
     * carry the version of the committed manifest this mutation READ
-    * (absent for the first publish into a fresh dir; [[rebaseVersion]]
-    * for rebuilds); if `current` moved underneath, the swing throws
-    * and the mutation's fully-written output stays invisible — retry
-    * the whole mutation. Returns the manifest as published (version
-    * bumped) so multi-swing mutations ([[allocGen]] then
-    * [[commitGen]]) thread it forward. When
+    * (absent for the first publish into a fresh dir; the replaced
+    * manifest's for a [[rebuild]]); if `current` moved underneath, the
+    * swing throws and the mutation's fully-written output stays
+    * invisible — retry the whole mutation. Returns the manifest as
+    * published (version bumped) so multi-swing mutations
+    * ([[appendGen]]) thread it forward. When
     * `spark.graft.index.snapshots.keep` > 0, every committed manifest
     * is also copied to an immutable `snaps/v-<version>` file — the
     * manifest LOG behind [[manifestAtSnapshot]] / [[expireSnapshots]].
@@ -1189,7 +1185,7 @@ private[graft] object IndexPolicy {
       withSnapshotsKept(spark, 10) {
         val base = graft.Fixtures.path(s"${kind}_snapbase", dir)
         val (snap, want) = snapBases(base) {
-          TextAnalysis.copyIndex(spark, vb, base)
+          graft.Fixtures.copyIndex(spark, vb, base)
           h.build(base)
           snapshotIds(spark, base).lastOption.fold((-1L, Seq.empty[Row]))(
             s => (s, h.serve(base, At.Live).collect().toSeq))
@@ -1353,8 +1349,7 @@ private[graft] object IndexPolicy {
     * calling mutation holds (a recursive delete of the root would
     * silently release the lease mid-mutation).
     */
-  private[graft] def clearForRebuild(spark: SparkSession,
-                                     idx: String): Unit = {
+  private def clearForRebuild(spark: SparkSession, idx: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(idx)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.listStatus(p).foreach { st =>
@@ -1395,11 +1390,9 @@ private[graft] object IndexPolicy {
   def armCrash(idx: String, point: String): Unit =
     armedCrashes.add(s"$point@$idx")
 
-  /** Named points: `after-rows` (in-place append/remove rows landed,
-    * commit swing not run), `after-epoch` (a rewrite's fresh epoch or
-    * segment dirs fully written, pointer not swung), `before-swing`
-    * (inside every [[publish]], immediately before the atomic
-    * replace).
+  /** Named points: the write shapes' [[AfterEpoch]] and [[AfterRows]],
+    * and `before-swing` (inside every [[publish]], immediately before
+    * the atomic replace).
     */
   private[graft] def crashPoint(spark: SparkSession, idx: String,
                                 point: String): Unit = {
@@ -1443,8 +1436,8 @@ private[graft] object IndexPolicy {
     * epoch dirs whose token appears nowhere in it (a crashed
     * mutation's partial output, or a superseded rewrite's old data)
     * and — when the family keeps a `segments` list — segment dirs the
-    * list no longer names. Called at the START of each mutation under
-    * the single-writer assumption.
+    * list no longer names. Called at the START of each mutation
+    * ([[open]], [[rebuild]]) under the writer lease.
     *
     * Reader-grace guarantee, stated precisely (r17 review + r17
     * ADVICE): a reader that resolved manifest M keeps its dirs at
@@ -1531,11 +1524,11 @@ private[graft] object IndexPolicy {
     }
   }
 
-  /** Resolved physical dir of an index table under the committed
-    * manifest — tombstones resolve through their own epoch key, every
-    * other table through the family's shared `data` epoch. ONE
-    * implementation (r17 review: Dedup and Similarity carried
-    * verbatim copies).
+  /** Resolved physical dir of a near-dup or IVF index table under the
+    * committed manifest, for the layout specs' byte-identity asserts —
+    * tombstones resolve through their own epoch key, every other table
+    * through the family's shared `data` epoch. ONE implementation (r17
+    * review: Dedup and Similarity carried verbatim copies).
     */
   private[graft] def resolvedTable(spark: SparkSession, idx: String,
                                    name: String): Option[String] = {
@@ -1543,18 +1536,6 @@ private[graft] object IndexPolicy {
     val key = if (name == "tombstones") "tombstones" else "data"
     m.get(key).map(tok => s"${epochDir(idx, tok)}/$name")
   }
-
-  /** The tombstones epoch for a removal: reuse the manifest's, or
-    * mint a fresh one whose key lands ONLY in the commit swing — a
-    * crash after the rows but before the commit leaves the dir
-    * unreferenced (swept later) instead of half-visible. ONE
-    * implementation of the mint-or-reuse subtlety (r17 review).
-    */
-  def tombstoneEpoch(m: Manifest): (String, Manifest) =
-    m.get("tombstones") match {
-      case Some(t) => (t, Map.empty[String, String])
-      case None => val t = newEpoch(); (t, Map("tombstones" -> t))
-    }
 
   // ---------------------------------------------------------------
   // layout stamp — carried IN the manifest: an index written under
@@ -1564,9 +1545,6 @@ private[graft] object IndexPolicy {
   // manifest is published LAST at build, its presence doubles as the
   // build-commit marker.
   // ---------------------------------------------------------------
-
-  def layoutEntry(params: Seq[(String, Long)]): (String, String) =
-    "layout" -> params.map { case (k, v) => s"$k=$v" }.mkString(",")
 
   /** Validate the params this reader depends on against the build's
     * stamp — SUBSET semantics, so an operator that only uses the
@@ -1621,8 +1599,8 @@ private[graft] object IndexPolicy {
     * fold (compact/retrain), which rewrites only committed rows and
     * resets both watermarks.
     */
-  def allocGen(spark: SparkSession, idx: String,
-               m: Manifest): (Long, Manifest) = {
+  private def allocGen(spark: SparkSession, idx: String,
+                       m: Manifest): (Long, Manifest) = {
     val g = genOf(m)
     tornCeiling(m).foreach(c =>
       throw new IllegalStateException(
@@ -1630,7 +1608,7 @@ private[graft] object IndexPolicy {
           "mutation left partial rows) — fold/compact the index " +
           "to repair before mutating"))
     // thread the PUBLISHED manifest (version bumped by the swing)
-    // forward, so the mutation's later commitGen passes its CAS; no
+    // forward, so the mutation's commit swing passes its CAS; no
     // snapshot for this mid-mutation state — only commits are
     // recovery points anyone wants to travel to
     val m2 = publish(spark, idx, m + ("gen" -> (g + 1L).toString),
@@ -1638,12 +1616,89 @@ private[graft] object IndexPolicy {
     (g + 1L, m2)
   }
 
-  /** Commit generation `g` (and any manifest changes the mutation
-    * carries — a freshly-minted tombstones epoch, a new stats epoch)
-    * in ONE pointer swing.
+  // ---------------------------------------------------------------
+  // write shapes — the ONE order every index mutation takes its steps
+  // in, and where a drill may kill it: the family passes in only its
+  // writes, into dirs no committed manifest names yet (or rows under
+  // an uncommitted generation), and the swing here makes them visible.
+  // ---------------------------------------------------------------
+
+  /** Crash point of a rewrite: fresh dirs written, pointer not swung. */
+  val AfterEpoch = "after-epoch"
+
+  /** Crash point of an append: rows landed, generation not committed. */
+  val AfterRows = "after-rows"
+
+  /** The manifest the caller holds under its lease, or one read of
+    * `current`; layout-checked and swept. */
+  private def open(spark: SparkSession, idx: String,
+                   layout: Seq[(String, Long)],
+                   held: Option[Manifest]): Manifest = {
+    val m = held.getOrElse(manifestOf(spark, idx))
+    checkLayout(m, idx, layout)
+    sweep(spark, idx, m)
+    m
+  }
+
+  /** REBUILD (build, retrain) under its own lease. Rebuild means
+    * rebuild: the fresh manifest names the layout stamp and the
+    * entries `write` returns for the epoch token it is handed — no
+    * tombstones (removed ids serve again once re-indexed), no bm25
+    * segments (r12 ADVICE), the generation timeline restarts — and
+    * carries the replaced manifest's version, so the swing passes the
+    * CAS like any mutation's. Over a LIVE index the old epochs serve
+    * until the swing (then are garbage for the next sweep); a dir with
+    * no manifest is cleared first, and a build that dies before its
+    * swing leaves none, so readers fail fast instead of reading a
+    * partial index.
     */
-  def commitGen(spark: SparkSession, idx: String, m: Manifest, g: Long,
-                extra: Manifest = Map.empty): Unit = {
+  private[graft] def rebuild(spark: SparkSession, idx: String,
+                             layout: Seq[(String, Long)])
+                            (write: String => Manifest): Unit =
+    mutate(spark, idx) {
+      val prior = readManifest(spark, idx)
+      prior match {
+        case Some(m) => sweep(spark, idx, m)
+        case None => clearForRebuild(spark, idx)
+      }
+      val fresh = write(newEpoch()) +
+        ("layout" -> layout.map { case (k, v) => s"$k=$v" }.mkString(","))
+      crashPoint(spark, idx, AfterEpoch)
+      publish(spark, idx, prior.flatMap(versionOf)
+        .fold(fresh)(v => fresh + (VersionKey -> v.toString)))
+      ()
+    }
+
+  /** EPOCH REWRITE (refresh, segment append, compact) under the
+    * caller's lease: `body` gets the [[open]]ed index's live read
+    * point and a fresh epoch token, writes fresh dirs and returns the
+    * manifest to swing to (published and returned), or None to commit
+    * nothing.
+    */
+  private[graft] def rewriteEpoch(spark: SparkSession, idx: String,
+                                  layout: Seq[(String, Long)],
+                                  held: Option[Manifest] = None)
+                                 (body: (ReadPoint, String) => Option[Manifest])
+      : Option[Manifest] = {
+    val m = open(spark, idx, layout, held)
+    body(ReadPoint(m, tornCeiling(m)), newEpoch()).map { next =>
+      crashPoint(spark, idx, AfterEpoch)
+      publish(spark, idx, next)
+    }
+  }
+
+  /** GENERATION APPEND (check-in, vector append, removal) under the
+    * caller's lease: [[allocGen]] on the [[open]]ed index, then `rows`
+    * appends rows tagged `g` and returns the entries that ride the ONE
+    * commit swing (a minted tombstones epoch, a stream watermark).
+    */
+  private[graft] def appendGen(spark: SparkSession, idx: String,
+                               layout: Seq[(String, Long)],
+                               held: Option[Manifest] = None)
+                              (rows: (Long, Manifest) => Manifest): Unit = {
+    val (g, m) = allocGen(spark, idx, open(spark, idx, layout, held))
+    val extra = rows(g, m)
+    crashPoint(spark, idx, AfterRows)
     publish(spark, idx, m ++ extra + ("gen_committed" -> g.toString))
     ()
   }
@@ -1793,21 +1848,21 @@ private[graft] object IndexPolicy {
 
   /** REMOVE ids: they land in the append-only `tombstones` table under
     * a fresh generation (no index file is opened); the family's fold
-    * drops them physically.
+    * drops them physically. The tombstones epoch is the manifest's, or
+    * a fresh one whose key lands ONLY in the commit swing — a crash
+    * before it leaves the dir unreferenced (swept later) instead of
+    * half-visible (r17 review).
     */
   def removeIds(spark: SparkSession, idx: String, f: Tombstoned,
                 ids: DataFrame): Unit = mutate(spark, idx) {
-    val m = manifestOf(spark, idx)
-    checkLayout(m, idx, f.layout)
-    sweep(spark, idx, m)
-    val (g, m1) = allocGen(spark, idx, m)
-    val (tok, extra) = tombstoneEpoch(m1)
-    ids.select(col(f.id)).distinct()
-      .select(col(f.id), lit(g).as("gen"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"${epochDir(idx, tok)}/tombstones")
-    crashPoint(spark, idx, "after-rows")
-    commitGen(spark, idx, m1, g, extra)
+    appendGen(spark, idx, f.layout) { (g, m) =>
+      val tok = m.getOrElse("tombstones", newEpoch())
+      ids.select(col(f.id)).distinct()
+        .select(col(f.id), lit(g).as("gen"))
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .parquet(s"${epochDir(idx, tok)}/tombstones")
+      Map("tombstones" -> tok)
+    }
   }
 
   /** Footer counts of the live read point: live tombstones (no job

@@ -829,7 +829,7 @@ object Multimodal {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
     rows += (s"${prefix}_vectors_match_formula" -> formulaOk)
     rows += (s"${prefix}_ivf_recall_ge_0_6" -> recallOk)
-    TextAnalysis.copyIndex(spark, base, runPath)
+    Fixtures.copyIndex(spark, base, runPath)
     // the count contract derives from the actual query-set size (it
     // is 8 on the shipped fixtures, but the booleans must not couple
     // to the id domain starting at 0)

@@ -891,38 +891,16 @@ object Similarity {
   private val ivfTombs = IndexPolicy.Tombstoned("vec_id", "lists",
     listsSchema, ivfLayoutBase, "ivf")
 
-  /** Resolved physical dir of an index table (lists / centroids /
-    * tombstones) under the committed manifest — for the layout specs'
-    * byte-identity asserts; shared logic in [[IndexPolicy]].
-    */
-  private[graft] def resolvedTable(spark: SparkSession, idx: String,
-                                   name: String): Option[String] =
-    IndexPolicy.resolvedTable(spark, idx, name)
-
   def ivfWriteIndexVecs(spark: SparkSession, vecs: DataFrame, out: String,
-                        k: Int = 8,
-                        iters: Int = 2): Unit = IndexPolicy.mutate(spark, out) {
-    // a retrain must yield a FRESH index — rebuild means rebuild: the
-    // new manifest references only the new epoch and carries NO
-    // tombstones key, so ids removed from the old generation serve
-    // again once legitimately re-indexed, and stale append-era list
-    // files are unreferenced garbage. Over a LIVE index the old epoch
-    // keeps serving until the pointer swings (no outage — the old
-    // delete-then-rebuild left readers failing for the whole retrain);
-    // a dir with no manifest (fresh path / legacy content) is cleared.
-    val prior = IndexPolicy.readManifest(spark, out)
-    prior match {
-      case Some(m) => IndexPolicy.sweep(spark, out, m)
-      case None => IndexPolicy.clearForRebuild(spark, out)
-    }
-    val tok = IndexPolicy.newEpoch()
+                        k: Int = 8, iters: Int = 2): Unit =
+      IndexPolicy.rebuild(spark, out, ivfLayout(k)) { tok =>
     val ed = IndexPolicy.epochDir(out, tok)
     // ckptCents (r21): the lists write and the centroids write each
     // execute their plan independently, and BOTH embed the Lloyd
     // training subtree — without the eager codebook checkpoint the
     // 2-round trainer ran twice per build/retrain. The two epoch
     // writes (disjoint subdirs, invisible until the swing) then run
-    // as concurrent jobs (the admitSigs pattern).
+    // as concurrent jobs (the Dedup.writeSigs pattern).
     val (assigned, cents) = lloydOn(vecs
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1024).cast("long")).as("vq")),
@@ -936,15 +914,9 @@ object Similarity {
         .partitionBy("cell").parquet(s"$ed/lists"),
       () => cents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$ed/centroids")))
-    // the pointer swing — the build/retrain commit: generation 0 (a
-    // retrain resets the as-of timeline by design, the bm25Compact
-    // analogue)
-    IndexPolicy.crashPoint(spark, out, "after-epoch")
-    IndexPolicy.publish(spark, out, IndexPolicy.rebaseVersion(prior, Map(
-      IndexPolicy.layoutEntry(ivfLayout(k)),
-      "gen" -> "0", "gen_committed" -> "0",
-      "data" -> tok)))
-    ()
+    // generation 0: a retrain resets the as-of timeline by design (the
+    // bm25Compact analogue)
+    Map("gen" -> "0", "gen_committed" -> "0", "data" -> tok)
   }
 
   /** O(delta) vector upsert into the at-rest IVF index — the FAISS
@@ -964,19 +936,18 @@ object Similarity {
   def ivfAppendVectors(spark: SparkSession, idx: String,
                        vecs: DataFrame): Unit =
     IndexPolicy.mutate(spark, idx) {
-      appendVectorsBody(spark, idx, vecs, Map.empty)
+      appendVectorsBody(spark, idx, vecs, None, Map.empty)
     }
 
-  /** The append under the caller's lease, with optional extra
-    * manifest entries riding the commit swing (the stream watermark).
+  /** The append ([[IndexPolicy.appendGen]]) under the caller's lease
+    * and the manifest it `held`, if any, with optional extra manifest
+    * entries riding the commit swing (the stream watermark).
     */
   private def appendVectorsBody(spark: SparkSession, idx: String,
                                 vecs: DataFrame,
-                                extra: IndexPolicy.Manifest): Unit = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, ivfLayoutBase)
-    IndexPolicy.sweep(spark, idx, m)
-    val (g, m1) = IndexPolicy.allocGen(spark, idx, m)
+                                held: Option[IndexPolicy.Manifest],
+                                extra: IndexPolicy.Manifest): Unit =
+      IndexPolicy.appendGen(spark, idx, ivfLayoutBase, held) { (g, m) =>
     val ed = IndexPolicy.epochDir(idx, m("data"))
     val cents = spark.read.schema(centroidsSchema).parquet(s"$ed/centroids")
     val vq = vecs.select(col("vec_id"), col("embedding"),
@@ -994,8 +965,7 @@ object Similarity {
         col("embedding"), lit(g).as("gen"))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("cell").parquet(s"$ed/lists")
-    IndexPolicy.crashPoint(spark, idx, "after-rows")
-    IndexPolicy.commitGen(spark, idx, m1, g, extra)
+    extra
   }
 
   /** One streaming micro-batch of VECTOR ingest through
@@ -1008,8 +978,8 @@ object Similarity {
   def ivfStreamIngest(spark: SparkSession, idx: String, vecs: DataFrame,
                       batchId: Long, app: String = ""): Boolean =
     IndexPolicy.streamBatch(spark, idx, batchId, app, false,
-        ivfDropUncommitted(spark, idx)) { (_, mark) =>
-      appendVectorsBody(spark, idx, vecs, mark)
+        ivfDropUncommitted(spark, idx)) { (m, mark) =>
+      appendVectorsBody(spark, idx, vecs, Some(m), mark)
       true
     }
 
@@ -1366,7 +1336,7 @@ object Similarity {
   private def asOfFixtureIdx(spark: SparkSession, dir: String,
                              nQueries: Int): String =
     asofIdxCache(dir) { p =>
-      graft.operators.TextAnalysis.copyIndex(spark, serveIdx(spark, dir), p)
+      Fixtures.copyIndex(spark, serveIdx(spark, dir), p)
       val all = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       ivfAppendVectors(spark, p,

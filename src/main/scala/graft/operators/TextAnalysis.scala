@@ -646,19 +646,8 @@ object TextAnalysis {
   }
 
   def bm25WriteIndexDocs(spark: SparkSession, docs: DataFrame,
-                         out: String): Unit = IndexPolicy.mutate(spark, out) {
-    // a full build must yield a BASE-ONLY index — rebuild means
-    // rebuild: the fresh manifest carries no `segments` key, so a
-    // prior append's segments (with their tombstones and df deltas)
-    // stop existing at the swing (r12 ADVICE, pointer-model form).
-    // Over a LIVE index the old epochs keep serving until then; a dir
-    // with no manifest (fresh path / legacy content) is cleared.
-    val prior = IndexPolicy.readManifest(spark, out)
-    prior match {
-      case Some(m) => IndexPolicy.sweep(spark, out, m)
-      case None => IndexPolicy.clearForRebuild(spark, out)
-    }
-    val tok = IndexPolicy.newEpoch()
+                         out: String): Unit =
+      IndexPolicy.rebuild(spark, out, bmLayout) { tok =>
     val ed = IndexPolicy.epochDir(out, tok)
     // the corpus is tokenized ONCE: the postings land first, and the
     // derived tables (term dictionary, corpus stats) are computed by
@@ -680,7 +669,7 @@ object TextAnalysis {
     val posted = spark.read.schema(postingsSchema).parquet(s"$ed/postings")
     // the two derived tables are independent reads of the just-written
     // postings into disjoint not-yet-visible dirs — concurrent jobs
-    // (r21, the admitSigs pattern)
+    // (r21, the Dedup.writeSigs pattern)
     Par.all(Seq(
       () => posted.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .select(substring(col("term"), 1, 1).as("tb"),
@@ -699,16 +688,8 @@ object TextAnalysis {
           coalesce(col("sum_dl"), lit(0L)).as("sum_dl"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$ed/stats")))
-    // the pointer swing — the build commit (a build that crashed
-    // above left no manifest / the old one, never a partial index)
-    val bmap = listBucketDirs(spark, s"$ed/postings")
-      .map(_ -> tok).toMap
-    IndexPolicy.crashPoint(spark, out, "after-epoch")
-    IndexPolicy.publish(spark, out, IndexPolicy.rebaseVersion(prior, Map(
-      IndexPolicy.layoutEntry(bmLayout),
-      "map" -> serMap(bmap),
-      "stats" -> tok)))
-    ()
+    Map("map" -> serMap(listBucketDirs(spark, s"$ed/postings")
+      .map(_ -> tok).toMap), "stats" -> tok)
   }
 
   /** Serve BM25 top-k from the at-rest index: static routing (query
@@ -903,7 +884,7 @@ object TextAnalysis {
     */
   private def segmentedBase(spark: SparkSession, dir: String): String =
     segmentedBaseCache(dir) { p =>
-      copyIndex(spark, v1BaseIndex(spark, dir), p)
+      Fixtures.copyIndex(spark, v1BaseIndex(spark, dir), p)
       val (v1, v2) = snapshotFixture(spark, dir)
       val (newD, oldD) = snapshotDelta(v1, v2)
       bm25AppendSegment(spark, p, newD, oldD)
@@ -981,10 +962,9 @@ object TextAnalysis {
     */
   def bm25RefreshIndex(spark: SparkSession, idx: String,
                        newDocs: DataFrame, oldDocs: DataFrame): Unit =
-      IndexPolicy.mutate(spark, idx) {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, bmLayout)
-    IndexPolicy.sweep(spark, idx, m)
+      IndexPolicy.mutate(spark, idx)(
+        IndexPolicy.rewriteEpoch(spark, idx, bmLayout) { (rp, tok) =>
+    val m = rp.m
     val bmap = parseMap(m)
     val newTf = postingsOf(newDocs).localCheckpoint()
     val oldTf = postingsOf(oldDocs).localCheckpoint()
@@ -992,33 +972,30 @@ object TextAnalysis {
       .union(oldTf.select(col("tb"), col("tk")))
       .distinct().collect().map(r => (r.getString(0), r.getInt(1)))
       .sorted // ≤ |delta vocabulary|, and ≤ 26·nTk
-    if (touched.isEmpty) return
-    val deadIds = oldDocs.select(col("doc_id")).distinct()
-    val oldPost =
-      readBuckets(spark, idx, bmap, postingsSchema, "postings", touched)
-    // adjusted stats land in the SAME fresh epoch and commit in the
-    // SAME pointer swing as the remapped buckets (r15 verdict #1:
-    // stats committing separately left a window where new postings
-    // served against stale n_docs/sum_dl — under the pointer model
-    // the tear is structurally impossible). The bucket rewrite and the
-    // 1-row stats adjustment are independent jobs into the same
-    // not-yet-visible epoch — run them concurrently (r21, the
-    // admitSigs pattern).
-    val tok = IndexPolicy.newEpoch()
-    val Seq(newMap) = Par.all(Seq(
-      () => Some(writeBucketEpoch(spark, idx, tok, touched,
-        oldPost.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
-          .unionByName(newTf), bmap)),
-      () => {
-        writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
-          s"${IndexPolicy.epochDir(idx, tok)}/stats")
-        None
-      })).flatten
-    IndexPolicy.crashPoint(spark, idx, "after-epoch")
-    IndexPolicy.publish(spark, idx,
-      m + ("map" -> serMap(newMap)) + ("stats" -> tok))
-    ()
-  }
+    if (touched.isEmpty) None else {
+      val deadIds = oldDocs.select(col("doc_id")).distinct()
+      val oldPost =
+        readBuckets(spark, idx, bmap, postingsSchema, "postings", touched)
+      // adjusted stats land in the SAME fresh epoch and commit in the
+      // SAME pointer swing as the remapped buckets (r15 verdict #1:
+      // stats committing separately left a window where new postings
+      // served against stale n_docs/sum_dl — under the pointer model
+      // the tear is structurally impossible). The bucket rewrite and the
+      // 1-row stats adjustment are independent jobs into the same
+      // not-yet-visible epoch — run them concurrently (r21, the
+      // Dedup.writeSigs pattern).
+      val Seq(newMap) = Par.all(Seq(
+        () => Some(writeBucketEpoch(spark, idx, tok, touched,
+          oldPost.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
+            .unionByName(newTf), bmap)),
+        () => {
+          writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
+            s"${IndexPolicy.epochDir(idx, tok)}/stats")
+          None
+        })).flatten
+      Some(m + ("map" -> serMap(newMap)) + ("stats" -> tok))
+    }
+  })
 
   /** Rewrite the `touched` (tb, tk) buckets with `merged`'s content
     * into a FRESH epoch and return (epoch token, updated bucket map):
@@ -1032,7 +1009,7 @@ object TextAnalysis {
     * just-written bytes (never a second plan execution, never a
     * corpus re-scan). NOTHING here is visible until the caller's
     * pointer swing; a crash leaves an unreferenced epoch for the next
-    * mutation's sweep. Single-writer, like every index mutation here.
+    * mutation's sweep.
     */
   private def writeBucketEpoch(spark: SparkSession, idx: String,
                                tok: String,
@@ -1121,7 +1098,7 @@ object TextAnalysis {
                         newDocs: DataFrame,
                         oldDocs: DataFrame): Option[String] =
     IndexPolicy.mutate(spark, idx)(
-      appendSegmentBody(spark, idx, newDocs, oldDocs, Map.empty))
+      appendSegmentBody(spark, idx, newDocs, oldDocs, None, Map.empty))
 
   /** One streaming micro-batch of DOCUMENT ingest through
     * [[IndexPolicy.streamBatch]] (r18 verdict missing #3: a
@@ -1143,18 +1120,19 @@ object TextAnalysis {
   def bm25StreamIngest(spark: SparkSession, idx: String,
                        newDocs: DataFrame, batchId: Long,
                        app: String = ""): Boolean =
-    IndexPolicy.streamBatch(spark, idx, batchId, app, false) { (_, mark) =>
-      appendSegmentBody(spark, idx, newDocs, newDocs.limit(0), mark).isDefined
+    IndexPolicy.streamBatch(spark, idx, batchId, app, false) { (m, mark) =>
+      appendSegmentBody(spark, idx, newDocs, newDocs.limit(0), Some(m),
+        mark).isDefined
     }
 
+  /** The segment append ([[IndexPolicy.rewriteEpoch]]) under the
+    * caller's lease and the manifest it `held`, if any; `extra` rides
+    * the swing (the stream watermark). */
   private def appendSegmentBody(spark: SparkSession, idx: String,
                                 newDocs: DataFrame, oldDocs: DataFrame,
+                                held: Option[IndexPolicy.Manifest],
                                 extra: IndexPolicy.Manifest
                                ): Option[String] = {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, bmLayout)
-    IndexPolicy.sweep(spark, idx, m)
-    val segNames = segNamesOf(m)
     // UNIQUE token, never an ordinal (r17 ADVICE): the committed list
     // is empty after a compact, so ordinal naming reminted seg-00001
     // and this write's Overwrite physically deleted the previous
@@ -1164,59 +1142,60 @@ object TextAnalysis {
     // `segments` list, so names carry no recency meaning.
     val segName = "seg-" + IndexPolicy.newToken()
     val seg = s"$idx/segments/$segName"
-    val newTf = postingsOf(newDocs).localCheckpoint()
-    val oldTf = postingsOf(oldDocs).localCheckpoint()
-    // an empty delta must not mint a segment (r12 ADVICE): it would
-    // permanently add the segment-union + tombstone broadcast join to
-    // every subsequent serve for zero content. No new postings and no
-    // old postings also means no effective tombstones — a doc with no
-    // postings in the delta had none in the base either (postingsOf
-    // is deterministic over the same text), so there is nothing to
-    // kill and the stats cannot shift: skip entirely.
-    if (newTf.isEmpty && oldTf.isEmpty) return None
-    // the five pre-swing writes are INDEPENDENT (each reads only the
-    // checkpointed postings or the current 1-row stats, and each
-    // targets its own fresh dir that stays invisible until the
-    // pointer swing) — run them as concurrent jobs (r21, the
-    // [[graft.operators.Dedup]] admitSigs pattern): an append's wall
-    // clock is the widest write, not the sum of five small parquet
-    // commit protocols.
-    val tok = IndexPolicy.newEpoch()
-    Par.all(Seq(
-      () => newTf.select(col("tb"), col("tk"), col("term"), col("doc_id"),
-          col("tf"), col("dl"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tb", "tk").parquet(s"$seg/postings"),
-      () => newTf.select(col("term"), lit(1L).as("d"))
-        .unionByName(oldTf.select(col("term"), lit(-1L).as("d")))
-        .groupBy(col("term")).agg(sum(col("d")).as("df"))
-        .filter(col("df") =!= 0)
-        .select(substring(col("term"), 1, 1).as("tb"),
-          tkCol(col("term")).as("tk"), col("term"), col("df"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tb", "tk").parquet(s"$seg/terms"),
-      () => oldDocs.select(col("doc_id")).distinct()
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$seg/tombstones"),
-      // PRE-append stats snapshot (1 row): makes the index readable
-      // AS OF any generation — serve-time stats at gen g come from
-      // segment g+1's snapshot (or the live stats for the newest
-      // gen). the append swings the live stats pointer wholesale, so
-      // without this the historical (n_docs, avgdl) would be
-      // unrecoverable.
-      () => spark.read.schema("n_docs bigint, avgdl double, sum_dl bigint")
-        .parquet(statsPathOf(idx, m))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$seg/stats_before"),
-      // adjusted stats land in a fresh epoch; ONE pointer swing
-      // below makes segment and stats visible together — a
-      // segment/stats tear is structurally impossible
-      () => writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
-        s"${IndexPolicy.epochDir(idx, tok)}/stats")))
-    IndexPolicy.crashPoint(spark, idx, "after-epoch")
-    IndexPolicy.publish(spark, idx, m ++ extra + ("stats" -> tok) +
-      ("segments" -> (segNames :+ segName).mkString(",")))
-    Some(seg)
+    IndexPolicy.rewriteEpoch(spark, idx, bmLayout, held) { (rp, tok) =>
+      val m = rp.m
+      val newTf = postingsOf(newDocs).localCheckpoint()
+      val oldTf = postingsOf(oldDocs).localCheckpoint()
+      // an empty delta must not mint a segment (r12 ADVICE): it would
+      // permanently add the segment-union + tombstone broadcast join to
+      // every subsequent serve for zero content. No new postings and no
+      // old postings also means no effective tombstones — a doc with no
+      // postings in the delta had none in the base either (postingsOf
+      // is deterministic over the same text), so there is nothing to
+      // kill and the stats cannot shift: skip entirely.
+      if (newTf.isEmpty && oldTf.isEmpty) None else {
+        // the five pre-swing writes are INDEPENDENT (each reads only the
+        // checkpointed postings or the current 1-row stats, and each
+        // targets its own fresh dir that stays invisible until the
+        // pointer swing) — run them as concurrent jobs (r21, the
+        // [[graft.operators.Dedup]] writeSigs pattern): an append's wall
+        // clock is the widest write, not the sum of five small parquet
+        // commit protocols.
+        Par.all(Seq(
+          () => newTf.select(col("tb"), col("tk"), col("term"), col("doc_id"),
+              col("tf"), col("dl"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .partitionBy("tb", "tk").parquet(s"$seg/postings"),
+          () => newTf.select(col("term"), lit(1L).as("d"))
+            .unionByName(oldTf.select(col("term"), lit(-1L).as("d")))
+            .groupBy(col("term")).agg(sum(col("d")).as("df"))
+            .filter(col("df") =!= 0)
+            .select(substring(col("term"), 1, 1).as("tb"),
+              tkCol(col("term")).as("tk"), col("term"), col("df"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .partitionBy("tb", "tk").parquet(s"$seg/terms"),
+          () => oldDocs.select(col("doc_id")).distinct()
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$seg/tombstones"),
+          // PRE-append stats snapshot (1 row): makes the index readable
+          // AS OF any generation — serve-time stats at gen g come from
+          // segment g+1's snapshot (or the live stats for the newest
+          // gen). the append swings the live stats pointer wholesale, so
+          // without this the historical (n_docs, avgdl) would be
+          // unrecoverable.
+          () => spark.read.schema("n_docs bigint, avgdl double, sum_dl bigint")
+            .parquet(statsPathOf(idx, m))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$seg/stats_before"),
+          // adjusted stats land in a fresh epoch; ONE swing to the
+          // manifest below makes segment and stats visible together — a
+          // segment/stats tear is structurally impossible
+          () => writeAdjustedStats(spark, statsPathOf(idx, m), newTf, oldTf,
+            s"${IndexPolicy.epochDir(idx, tok)}/stats")))
+        Some(m ++ extra + ("stats" -> tok) +
+          ("segments" -> (segNamesOf(m) :+ segName).mkString(",")))
+      }
+    }.map(_ => seg)
   }
 
   /** Fold-trigger policy (r13 stretch item 8): a segmented index is
@@ -1264,36 +1243,37 @@ object TextAnalysis {
     * after (LayoutSpec proves it).
     */
   def bm25Compact(spark: SparkSession, idx: String): Unit =
-      IndexPolicy.mutate(spark, idx) {
-    val m = IndexPolicy.manifestOf(spark, idx)
-    IndexPolicy.checkLayout(m, idx, bmLayout)
-    IndexPolicy.sweep(spark, idx, m)
+      IndexPolicy.mutate(spark, idx)(
+        IndexPolicy.rewriteEpoch(spark, idx, bmLayout) { (rp, tok) =>
+    val m = rp.m
     val segs = segNamesOf(m).map(n => s"$idx/segments/$n")
-    if (segs.isEmpty) return
-    val bmap = parseMap(m)
-    val touched = segs.map { s =>
-      spark.read.schema(postingsSchema).parquet(s"$s/postings")
-        .select(col("tb"), col("tk"))
-        .unionByName(spark.read.schema(termsSchema)
-          .parquet(s"$s/terms").select(col("tb"), col("tk")))
-    }.reduce(_ unionByName _)
-      .distinct().collect().map(r => (r.getString(0), r.getInt(1))).sorted
-    // ONE pointer swing drops the segment list and remaps the folded
-    // buckets together — the folded-postings-AND-live-segments double
-    // count a crash could once produce is structurally impossible;
-    // the unreferenced segment dirs and old bucket epochs are swept
-    // by the next mutation
-    if (touched.nonEmpty) {
-      val newMap = writeBucketEpoch(spark, idx, IndexPolicy.newEpoch(),
-        touched,
-        postingsView(spark, idx, bmap, touched, Seq.empty, segs)
-          .drop("ord"), bmap)
-      IndexPolicy.crashPoint(spark, idx, "after-epoch")
-      IndexPolicy.publish(spark, idx,
-        m - "segments" + ("map" -> serMap(newMap)))
-    } else IndexPolicy.publish(spark, idx, m - "segments")
-    ()
-  }
+    if (segs.isEmpty) None else {
+      val bmap = parseMap(m)
+      val touched = segs.map { s =>
+        spark.read.schema(postingsSchema).parquet(s"$s/postings")
+          .select(col("tb"), col("tk"))
+          .unionByName(spark.read.schema(termsSchema)
+            .parquet(s"$s/terms").select(col("tb"), col("tk")))
+      }.reduce(_ unionByName _)
+        .distinct().collect().map(r => (r.getString(0), r.getInt(1))).sorted
+      // ONE pointer swing drops the segment list and remaps the folded
+      // buckets together — the folded-postings-AND-live-segments double
+      // count a crash could once produce is structurally impossible;
+      // the unreferenced segment dirs and old bucket epochs are swept
+      // by the next mutation
+      if (touched.nonEmpty) {
+        val newMap = writeBucketEpoch(spark, idx, tok, touched,
+          postingsView(spark, idx, bmap, touched, Seq.empty, segs)
+            .drop("ord"), bmap)
+        Some(m - "segments" + ("map" -> serMap(newMap)))
+      } else {
+        // segments with no postings and no df deltas: dropping the list
+        // writes nothing, so it swings with no crash point
+        IndexPolicy.publish(spark, idx, m - "segments")
+        None
+      }
+    }
+  })
 
   /** Registry fixture for the refresh: build the index over the v1
     * snapshot (the [[graft.operators.Curation.corpusDiff]] fixture —
@@ -1336,55 +1316,6 @@ object TextAnalysis {
     lifecycleBaseCache(dir) { p =>
       bm25WriteIndexDocs(spark, snapshotFixture(spark, dir)._1, p)
     }
-
-  /** Delete-then-copy of an at-rest index dir, so the destination is
-    * exactly the source — base-only, no stale segments or partitions.
-    * (Shared with the other lifecycle fixtures — [[Dedup]]'s at-rest
-    * near-dup index uses the same pristine-base-copy pattern.)
-    */
-  private[graft] def copyIndex(spark: SparkSession, src: String,
-                               dst: String): Unit = {
-    // FIXTURE helper (a deployment clones an index with distcp): the
-    // fast path is a plain-nio parallel copy — Hadoop's FileUtil.copy
-    // pays per-file checksum/stream setup, measured ~1 s for the
-    // ~80-file bucketed near-dup index vs ~0.07 s raw, and every
-    // lifecycle registry row pays it once per invocation. nio only
-    // resolves BARE ABSOLUTE LOCAL paths, so anything carrying a URI
-    // scheme (hdfs://, file:) or relative routes through
-    // FileUtil.copy instead of mis-resolving at runtime (r15 ADVICE).
-    def isBareLocal(s: String) =
-      s.startsWith("/") && !s.matches("[A-Za-z][A-Za-z0-9+.\\-]*:.*")
-    if (!isBareLocal(src) || !isBareLocal(dst)) {
-      import org.apache.hadoop.fs.{FileUtil, Path}
-      val conf = spark.sparkContext.hadoopConfiguration
-      val sp = new Path(src); val dp = new Path(dst)
-      val dfs = dp.getFileSystem(conf)
-      require(!dfs.exists(dp) || dfs.delete(dp, true),
-        s"copyIndex: could not clear $dp")
-      require(FileUtil.copy(sp.getFileSystem(conf), sp, dfs, dp,
-        false, conf), s"copyIndex: $src -> $dst failed")
-      return
-    }
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.collection.parallel.CollectionConverters._
-    val s = Paths.get(src); val d = Paths.get(dst)
-    if (Files.exists(d)) {
-      val st = Files.walk(d)
-      val del = try st.iterator().asScala.toSeq.reverse finally st.close()
-      del.foreach(Files.deleteIfExists(_))
-    }
-    val files = {
-      val st = Files.walk(s)
-      try st.iterator().asScala.filter(Files.isRegularFile(_)).toVector
-      finally st.close()
-    }
-    files.par.foreach { p =>
-      val t = d.resolve(s.relativize(p).toString)
-      Files.createDirectories(t.getParent)
-      Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
 
   def bm25Refresh(spark: SparkSession, dir: String,
                   terms: Seq[String] = Seq("data", "model", "system"),

@@ -356,7 +356,7 @@ class LayoutSpec extends SparkSpec {
     val oneShot = Similarity.ivfIndexTopK(spark, sf)
     assert(served.collect().toSeq == oneShot.collect().toSeq)
     val nCellDirs = new java.io.File(
-        Similarity.resolvedTable(spark, idx, "lists").get).listFiles()
+        graft.operators.IndexPolicy.resolvedTable(spark, idx, "lists").get).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(nCellDirs >= 2, s"index should have multiple cell dirs")
     // REAL pruning proof (r22, the near-dup test's numFiles check):
@@ -383,7 +383,7 @@ class LayoutSpec extends SparkSpec {
     def walk(d: java.io.File): Seq[java.io.File] =
       if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
     val totalListFiles = walk(new java.io.File(
-        Similarity.resolvedTable(spark, idx, "lists").get))
+        graft.operators.IndexPolicy.resolvedTable(spark, idx, "lists").get))
       .count(_.getName.endsWith(".parquet"))
     val scanned = listScan.head.metrics("numFiles").value
     assert(scanned > 0 && scanned < totalListFiles,
@@ -403,7 +403,7 @@ class LayoutSpec extends SparkSpec {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
       walk(new java.io.File(
-          Similarity.resolvedTable(spark, idx, "lists").get))
+          graft.operators.IndexPolicy.resolvedTable(spark, idx, "lists").get))
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getAbsolutePath, f.lastModified, f.length))
         .sortBy(_._1)
@@ -419,7 +419,7 @@ class LayoutSpec extends SparkSpec {
     assert(after.size > before.size, "append added no files")
     // the index now holds every vector exactly once
     val total = spark.read.parquet(
-      Similarity.resolvedTable(spark, idx, "lists").get).count()
+      graft.operators.IndexPolicy.resolvedTable(spark, idx, "lists").get).count()
     assert(total == base.count(), s"index holds $total of ${base.count()}")
   }
 
@@ -457,7 +457,7 @@ class LayoutSpec extends SparkSpec {
     assert(preSwing.collect().toSeq == removedServe,
       "a reader racing a committed retrain must keep serving its " +
         "resolved (pre-swing) generation")
-    assert(Similarity.resolvedTable(spark, idx, "tombstones").isEmpty,
+    assert(graft.operators.IndexPolicy.resolvedTable(spark, idx, "tombstones").isEmpty,
       "retrain left stale tombstones referenced")
     assert(Similarity.ivfQueryIndex(spark, sf, idx).collect().toSeq
       == fresh, "retrained serve differs from a fresh build's")
@@ -573,9 +573,9 @@ class LayoutSpec extends SparkSpec {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
       (walk(new java.io.File(
-          Dedup.resolvedTable(spark, idx, "buckets").get)) ++
+          graft.operators.IndexPolicy.resolvedTable(spark, idx, "buckets").get)) ++
         walk(new java.io.File(
-          Dedup.resolvedTable(spark, idx, "docsets").get)))
+          graft.operators.IndexPolicy.resolvedTable(spark, idx, "docsets").get)))
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getAbsolutePath, f.lastModified, f.length))
         .sortBy(_._1)
@@ -609,8 +609,8 @@ class LayoutSpec extends SparkSpec {
     // compact: physically drops doc 4, clears tombstones — a repeat
     // duplicate check finds the same pairs as the tombstone filter did
     Dedup.neardupCompact(spark, idx)
-    assert(Dedup.resolvedTable(spark, idx, "tombstones").isEmpty)
-    assert(spark.read.parquet(Dedup.resolvedTable(spark, idx, "docsets").get)
+    assert(graft.operators.IndexPolicy.resolvedTable(spark, idx, "tombstones").isEmpty)
+    assert(spark.read.parquet(graft.operators.IndexPolicy.resolvedTable(spark, idx, "docsets").get)
       .filter(col("doc_id") === 4L).count() == 0, "compact kept dead docsets")
     val p4 = Dedup.neardupCheckIn(spark, idx, Seq(
       (8L, "q r s t u")).toDF("doc_id", "text")).collect()
@@ -650,7 +650,7 @@ class LayoutSpec extends SparkSpec {
     def totalFiles(sub: String): Int = {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) else Seq(d)
-      walk(new java.io.File(Dedup.resolvedTable(spark, idx, sub).get))
+      walk(new java.io.File(graft.operators.IndexPolicy.resolvedTable(spark, idx, sub).get))
         .count(_.getName.endsWith(".parquet"))
     }
     // a single doc emits 4 band buckets → at most 4 of the 4×nPb
@@ -1367,7 +1367,7 @@ class LayoutSpec extends SparkSpec {
       (1L, "a b c d e")).toDF("doc_id", "text"), src)
     // a file:-schemed source previously mis-resolved via Paths.get —
     // it must now copy correctly through Hadoop's FileUtil
-    TextAnalysis.copyIndex(spark, s"file:$src", dst)
+    Fixtures.copyIndex(spark, s"file:$src", dst)
     val probe = Seq((9L, "a b c d e")).toDF("doc_id", "text")
     assert(Dedup.neardupLookup(spark, dst, probe).collect().nonEmpty)
   }
@@ -1880,7 +1880,7 @@ class LayoutSpec extends SparkSpec {
     // every ingested vector present EXACTLY once — the crashed
     // attempt's orphan rows were dropped, not resurrected
     val lists = spark.read.parquet(
-      Similarity.resolvedTable(spark, iv, "lists").get)
+      IndexPolicy.resolvedTable(spark, iv, "lists").get)
     val want = vecs.filter(pmod(col("vec_id"), lit(2)) === 0)
       .unionByName(slice(1)).unionByName(slice(3))
       .select(col("vec_id")).distinct().count()
@@ -2260,7 +2260,7 @@ class LayoutSpec extends SparkSpec {
       scans(served.queryExecution.executedPlan)
     Seq((nd, "buckets", "pb"), (nd, "docsets", "db"), (iv, "lists", "cell"))
       .foreach { case (idx, table, partCol) =>
-        val dir = Dedup.resolvedTable(spark, idx, table).get
+        val dir = graft.operators.IndexPolicy.resolvedTable(spark, idx, table).get
         // match by rootPaths: toString truncates long epoch-dir paths
         val ss = all.filter(_.relation.location.rootPaths
           .exists(_.toString.contains(table)))
@@ -2325,5 +2325,72 @@ class LayoutSpec extends SparkSpec {
       throw new IllegalStateException("body failed")
     })
     assert(spark.conf.get(k) == prior, "a throwing body lost the prior width")
+  }
+
+  test("every index write dies at its crash point and leaves the committed state serving") {
+    import graft.operators.{Dedup, IndexPolicy, Similarity, TextAnalysis}
+    import IndexPolicy.{AfterEpoch, AfterRows}
+    import org.apache.spark.sql.{DataFrame, Row}
+    val root = java.nio.file.Files.createTempDirectory("graft-write-crash").toString
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val vecs = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    def docSlice(m: Int, r: Int): DataFrame =
+      docs.filter(pmod(col("doc_id"), lit(m)) === r)
+    def vecSlice(m: Int, r: Int): DataFrame =
+      vecs.filter(pmod(col("vec_id"), lit(m)) === r)
+    val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 1)
+    // live indexes with something to fold: a near-dup removal, a bm25 segment
+    val nd = s"$root/nd"
+    Dedup.neardupWriteIndex(spark, base, nd)
+    Dedup.neardupRemove(spark, nd, docSlice(5, 0).select(col("doc_id")))
+    val iv = s"$root/iv"
+    Similarity.ivfWriteIndexVecs(spark,
+      vecs.filter(pmod(col("vec_id"), lit(4)) =!= 1), iv)
+    val bm = s"$root/bm"
+    TextAnalysis.bm25WriteIndexDocs(spark, base, bm)
+    TextAnalysis.bm25AppendSegment(spark, bm, docSlice(8, 1), docs.limit(0))
+    val ndServe = (i: String) =>
+      Dedup.neardupLookup(spark, i, docSlice(4, 1)).collect().toSeq
+    val ivServe = (i: String) =>
+      Similarity.ivfQueryIndex(spark, sf, i).collect().toSeq
+    val bmServe = (i: String) => TextAnalysis.bm25QueryIndex(spark, i,
+      Seq("data", "model", "system"), 20).collect().toSeq
+    val edited = docSlice(16, 3)
+    // (write, live index it runs on, its crash point, its family's serve, the write)
+    val writes: Seq[(String, String, String, String => Seq[Row], String => Unit)] = Seq(
+      ("nd rebuild", nd, AfterEpoch, ndServe, Dedup.neardupWriteIndex(spark, docs, _)),
+      ("ivf retrain", iv, AfterEpoch, ivServe, Similarity.ivfWriteIndexVecs(spark, vecs, _)),
+      ("bm25 rebuild", bm, AfterEpoch, bmServe, TextAnalysis.bm25WriteIndexDocs(spark, docs, _)),
+      ("bm25 append segment", bm, AfterEpoch, bmServe, i =>
+        TextAnalysis.bm25AppendSegment(spark, i, docSlice(8, 5), edited)),
+      ("bm25 refresh", bm, AfterEpoch, bmServe, TextAnalysis.bm25RefreshIndex(spark, _,
+        edited.select(col("doc_id"), concat(lit("zeta "), col("text")).as("text")), edited)),
+      ("bm25 compact", bm, AfterEpoch, bmServe, TextAnalysis.bm25Compact(spark, _)),
+      ("nd compact", nd, AfterEpoch, ndServe, Dedup.neardupCompact(spark, _)),
+      ("nd check-in", nd, AfterRows, ndServe, Dedup.neardupCheckIn(spark, _, docSlice(8, 5))),
+      ("ivf append", iv, AfterRows, ivServe, Similarity.ivfAppendVectors(spark, _, vecSlice(4, 1))),
+      ("nd remove", nd, AfterRows, ndServe, Dedup.neardupRemove(spark, _,
+        docSlice(7, 3).select(col("doc_id")))),
+      ("ivf remove", iv, AfterRows, ivServe, Similarity.ivfRemove(spark, _,
+        vecSlice(9, 0).select(col("vec_id")))))
+    writes.foreach { case (what, live, point, serve, write) =>
+      val idx = s"$root/${what.replace(' ', '_')}"
+      Fixtures.copyIndex(spark, live, idx)
+      val m0 = IndexPolicy.manifestOf(spark, idx)
+      val served = serve(idx)
+      assert(served.nonEmpty, s"$what: the fixture serves nothing")
+      IndexPolicy.armCrash(idx, point)
+      val e = intercept[IndexPolicy.InjectedCrash](write(idx))
+      assert(e.getMessage.contains(point), s"$what: ${e.getMessage}")
+      val m1 = IndexPolicy.manifestOf(spark, idx)
+      // an append dies after its generation allocation, a swing of its
+      // own; nothing else may have swung
+      val swung = if (point == AfterRows) 1L else 0L
+      assert(IndexPolicy.versionOf(m1) == IndexPolicy.versionOf(m0).map(_ + swung),
+        s"$what: manifest version ${IndexPolicy.versionOf(m0)} -> ${IndexPolicy.versionOf(m1)}")
+      assert(IndexPolicy.committedOf(m1) == IndexPolicy.committedOf(m0),
+        s"$what: committed generation moved")
+      assert(serve(idx) == served, s"$what: the live serve changed")
+    }
   }
 }

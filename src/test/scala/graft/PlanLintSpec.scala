@@ -174,6 +174,34 @@ class PlanLintSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("no write-protocol crash point spelled outside IndexPolicy") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val banned = """"after-(epoch|rows)"""".r
+    Seq("""IndexPolicy.crashPoint(spark, idx, "after-epoch")""",
+        """IndexPolicy.crashPoint(spark, idx, "after-rows")""",
+        """IndexPolicy.armCrash(nd, "after-rows")""",
+        """spark.conf.set("spark.graft.index.crash.at", "after-epoch")""")
+      .foreach(l => assert(banned.findFirstIn(l).isDefined, l))
+    Seq("""IndexPolicy.armCrash(bm, IndexPolicy.AfterEpoch)""",
+        """IndexPolicy.crashPoint(spark, ndIdx, "estate-after-nd")""",
+        """IndexPolicy.crashPoint(spark, bmIdx, "estate-after-bm25")""",
+        """// `after-rows` (in-place append/remove rows landed)""",
+        """crashPoint(spark, idx, "before-swing")""")
+      .foreach(l => assert(banned.findFirstIn(l).isEmpty, l))
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val rel = root.relativize(f).toString.replace('\\', '/')
+        if (rel == "graft/operators/IndexPolicy.scala") Nil
+        else java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if banned.findFirstIn(l).isDefined => s"$rel:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty,
+      "write through IndexPolicy.rebuild/rewriteEpoch/appendGen, or arm " +
+        "IndexPolicy.AfterEpoch/AfterRows:\n" + offenders.mkString("\n"))
+  }
+
   test("no CartesianProduct in any registered query plan") {
     val offenders = SparkEntry.queries
       .filterNot { case (name, _) => eagerBuilders(name) }

@@ -555,7 +555,7 @@ class PropertySpec extends SparkSpec {
         delta.toDF("vec_id", "embedding"))
       // schema-inferred partition column comes back as int — cast
       val got = spark.read.parquet(
-          graft.operators.Similarity.resolvedTable(spark, idx, "lists").get)
+          graft.operators.IndexPolicy.resolvedTable(spark, idx, "lists").get)
         .select(col("vec_id"), col("cell").cast("long"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // reference: seeds = base ids < k; one update over base; final

@@ -325,7 +325,7 @@ class ServePathSpec extends SparkSpec {
       val (r, n) = jobsOf(what)(f); got(what) = n; r
     }
     val nd = s"$root/nd"
-    Dedup.neardupWriteIndex(spark, base, nd)
+    count("nd build")(Dedup.neardupWriteIndex(spark, base, nd))
     count("nd fold-due, no tombstones")(Dedup.neardupFoldDue(spark, nd))
     count("nd health, no tombstones")(Dedup.neardupHealth(spark, nd))
     count("nd remove")(Dedup.neardupRemove(spark, nd, removed))
@@ -338,7 +338,7 @@ class ServePathSpec extends SparkSpec {
       Dedup.neardupStreamIngest(spark, nd, delta, 0L, app = "jobs")) == ((0L, 0L)))
     assert(fresh._1 > 0L)
     val iv = s"$root/ivf"
-    Similarity.ivfWriteIndexVecs(spark, vecBase, iv)
+    count("ivf build")(Similarity.ivfWriteIndexVecs(spark, vecBase, iv))
     count("ivf fold-due, no tombstones")(Similarity.ivfFoldDue(spark, iv))
     count("ivf health, no tombstones")(Similarity.ivfHealth(spark, iv))
     count("ivf remove")(Similarity.ivfRemove(spark, iv,
@@ -351,7 +351,7 @@ class ServePathSpec extends SparkSpec {
     assert(!count("ivf replayed stream batch")(
       Similarity.ivfStreamIngest(spark, iv, vecDelta, 0L, "jobs")))
     val bm = s"$root/bm25"
-    TextAnalysis.bm25WriteIndexDocs(spark, base, bm)
+    count("bm25 build")(TextAnalysis.bm25WriteIndexDocs(spark, base, bm))
     assert(count("bm25 stream batch")(
       TextAnalysis.bm25StreamIngest(spark, bm, delta, 0L, "jobs")))
     assert(!count("bm25 replayed stream batch")(
@@ -383,21 +383,53 @@ class ServePathSpec extends SparkSpec {
       at = IndexPolicy.At.Gen(1L)).collect())
     count("bm25 snapshot serve")(TextAnalysis.bm25QueryIndex(spark, bm, terms, 10,
       at = IndexPolicy.At.Snap(bmSnap)).collect())
+    // the writes: each mutation over the live indexes, then each rebuild
+    val tableDelta = onDisk(docRows(corpus.filter(_._1 % 16 == 13)), docSchema)
+    count("nd check-in, in-memory delta")(Dedup.neardupCheckIn(spark, nd,
+      local(docRows(corpus.filter(_._1 % 16 == 5)), docSchema)))
+    count("nd check-in, table-backed delta")(
+      Dedup.neardupCheckIn(spark, nd, tableDelta))
+    count("nd compact")(Dedup.neardupCompact(spark, nd))
+    count("nd rebuild")(Dedup.neardupWriteIndex(spark, base, nd))
+    count("ivf append")(Similarity.ivfAppendVectors(spark, iv,
+      local(vecs.filter(_.getLong(0) % 7 == 0)
+        .map(r => Row(r.getLong(0) + 1000000L, r.get(1))), vecSchema)))
+    count("ivf retrain")(Similarity.ivfWriteIndexVecs(spark, vecBase, iv))
+    val edited = corpus.filter(_._1 % 16 == 3)
+    count("bm25 compact")(TextAnalysis.bm25Compact(spark, bm))
+    count("bm25 refresh")(TextAnalysis.bm25RefreshIndex(spark, bm,
+      local(docRows(edited.map { case (id, t) => (id, s"zeta $t") }), docSchema),
+      local(docRows(edited), docSchema)))
+    count("bm25 append segment")(TextAnalysis.bm25AppendSegment(spark, bm,
+      local(docRows(corpus.filter(_._1 % 16 == 7)
+        .map { case (id, t) => (id + 1000000L, t) }), docSchema),
+      local(docRows(corpus.filter(_._1 % 16 == 11)), docSchema)))
+    count("bm25 rebuild")(TextAnalysis.bm25WriteIndexDocs(spark, base, bm))
     info(got.map { case (k, n) => s"$k $n" }.mkString(", "))
     assert(got.toSeq == lifecycleJobs, s"Spark jobs per call: $got")
   }
 
   // the counts these calls ran when each family had its own copy of the
-  // steps, and (the serves) its own as-of and snapshot entry points
+  // steps, (the serves) its own as-of and snapshot entry points, and
+  // (the writes) its own copy of the write protocol
   private val lifecycleJobs: Seq[(String, Int)] = Seq(
+    "nd build" -> 6,
     "nd fold-due, no tombstones" -> 0, "nd health, no tombstones" -> 2,
     "nd remove" -> 2, "nd fold-due" -> 4, "nd health" -> 4,
     "nd stream batch" -> 16, "nd replayed stream batch" -> 0,
+    "ivf build" -> 10,
     "ivf fold-due, no tombstones" -> 0, "ivf health, no tombstones" -> 2,
     "ivf remove" -> 2, "ivf fold-due" -> 4, "ivf health" -> 4,
     "ivf stream batch" -> 3, "ivf replayed stream batch" -> 0,
+    "bm25 build" -> 10,
     "bm25 stream batch" -> 16, "bm25 replayed stream batch" -> 0,
     "nd as-of serve" -> 3, "nd snapshot serve" -> 3,
     "ivf as-of serve" -> 4, "ivf snapshot serve" -> 4,
-    "bm25 as-of serve" -> 6, "bm25 snapshot serve" -> 6)
+    "bm25 as-of serve" -> 6, "bm25 snapshot serve" -> 6,
+    "nd check-in, in-memory delta" -> 7,
+    "nd check-in, table-backed delta" -> 17,
+    "nd compact" -> 6, "nd rebuild" -> 6,
+    "ivf append" -> 3, "ivf retrain" -> 10,
+    "bm25 compact" -> 8, "bm25 refresh" -> 25,
+    "bm25 append segment" -> 23, "bm25 rebuild" -> 10)
 }
